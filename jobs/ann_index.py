@@ -15,7 +15,7 @@
         [--max-files-per-trigger 1]
     ... ann_index.py search  --index /data/idx --queries /data/q.parquet \
         --out /data/results.parquet [--k 10] [--nprobe 8] [--rerank 64] \
-        [--probe-mode auto|driver|join] [--max-dist-ratio R] \
+        [--driver-probe-limit N] [--max-dist-ratio R] \
         [--probe-scratch-dir DIR]
 
 `build --replica-count R` multi-assigns each vector to up to R
@@ -113,8 +113,11 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--k", type=int, default=10)
     s.add_argument("--nprobe", type=int, default=8)
     s.add_argument("--rerank", type=int, default=64)
-    s.add_argument("--probe-mode", default="auto",
-                   choices=["auto", "driver", "join"])
+    s.add_argument("--driver-probe-limit", type=int, default=10_000,
+                   help="query batches up to N rows select probes on "
+                        "the driver (static bucket IN pruning); larger "
+                        "ones run as an executor-side wave (side table "
+                        "+ dynamic partition pruning). 0 = always wave")
     s.add_argument("--max-dist-ratio", type=float, default=None)
     s.add_argument("--probe-scratch-dir", default=None)
     s.add_argument("--max-check", type=int, default=None,
@@ -272,36 +275,36 @@ def main(argv: list[str] | None = None) -> int:
             res = knn.relaxed_mono_topk_batch(
                 spark, args.index, q, k=args.k,
                 max_check=args.max_check,
-                probe_mode=args.probe_mode,
+                driver_probe_limit=args.driver_probe_limit,
                 probe_scratch_dir=args.probe_scratch_dir)
         elif _is_pq(args.index):
             res = ivfpq.ivf_pq_probe(
                 spark, args.index, q, k=args.k, nprobe=args.nprobe,
-                rerank=args.rerank, probe_mode=args.probe_mode,
+                rerank=args.rerank,
+                driver_probe_limit=args.driver_probe_limit,
                 max_dist_ratio=args.max_dist_ratio,
                 probe_scratch_dir=args.probe_scratch_dir)
         elif _is_bkt(args.index):
-            if args.max_dist_ratio is not None \
-                    or args.probe_scratch_dir is not None:
-                print(json.dumps({"error": "--max-dist-ratio / "
-                                  "--probe-scratch-dir are not supported "
-                                  "for bkt indexes (tree descent selects "
-                                  "heads; probes run driver-mode)"}))
+            if args.max_dist_ratio is not None:
+                print(json.dumps({"error": "--max-dist-ratio is not "
+                                  "supported for bkt indexes (tree "
+                                  "descent selects heads)"}))
                 spark.stop()
                 return 2
             from sptag_spark.operators import bkt
 
             res = bkt.bkt_probe(spark, args.index, q, k=args.k,
                                 nprobe=args.nprobe,
-                                probe_mode=args.probe_mode)
+                                driver_probe_limit=args.driver_probe_limit,
+                                probe_scratch_dir=args.probe_scratch_dir)
         else:
             res = knn.ivf_probe(spark, args.index, q, k=args.k,
                                 nprobe=args.nprobe,
-                                probe_mode=args.probe_mode,
+                                driver_probe_limit=args.driver_probe_limit,
                                 max_dist_ratio=args.max_dist_ratio,
                                 probe_scratch_dir=args.probe_scratch_dir)
         res.write.mode("overwrite").parquet(args.out)
-        # join-mode probes land in a transient side table (under the
+        # wave probes land in a transient side table (under the
         # index, or --probe-scratch-dir for read-only indexes); results
         # are materialized now, so clean it (best-effort — ivf_compact
         # is the other janitor)

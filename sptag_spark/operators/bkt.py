@@ -216,59 +216,35 @@ def hierarchical_assign(
     return corpus.mapInArrow(run, schema=out_schema)
 
 
-def _probe_buckets_hierarchical(
-    queries: DataFrame,
-    coarse: np.ndarray,
-    fine: np.ndarray,
-    nprobe: int,
-    coarse_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, bucket): top-coarse_probe cells, then global
-    top-nprobe among those cells' fine heads."""
-    import pyarrow as pa
-    from pyspark.sql.types import LongType
+def _hierarchical_kernel(coarse: np.ndarray, fine: np.ndarray, nprobe: int,
+                         coarse_probe: int = 4):
+    """Probe kernel (operators/probe.py): top-coarse_probe cells, then
+    global top-nprobe among those cells' fine heads."""
+    from sptag_spark.operators.probe import ProbeKernel
 
     k1, k2, _ = fine.shape
     cp = min(coarse_probe, k1)
-    out_schema = StructType([
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("bucket", LongType()),
-    ])
 
-    def run(batches):
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            if len(X) == 0:
-                continue
-            qid = batch.column(id_col)
-            if isinstance(qid, pa.ChunkedArray):
-                qid = qid.combine_chunks()
-            qids = qid.to_numpy(zero_copy_only=False)
-            top_cells = np.argsort(
-                -_cos_scores(X, coarse), axis=1, kind="stable"
-            )[:, :cp]
-            out_q, out_b = [], []
-            for r in range(len(X)):
-                cells = top_cells[r]
-                heads = np.concatenate([fine[c] for c in cells])
-                ids = np.concatenate(
-                    [np.arange(k2, dtype=np.int64) + int(c) * k2
-                     for c in cells]
-                )
-                s = _cos_scores(X[r:r + 1], heads)[0]
-                order = np.argsort(-s, kind="stable")[:nprobe]
-                chosen = np.unique(ids[order])
-                out_q.extend([qids[r]] * len(chosen))
-                out_b.extend(chosen.tolist())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_b, pa.int64())],
-                names=["query_id", "bucket"],
+    def fn(X):
+        top_cells = np.argsort(
+            -_cos_scores(X, coarse), axis=1, kind="stable"
+        )[:, :cp]
+        rows, out_b = [], []
+        for r in range(len(X)):
+            cells = top_cells[r]
+            heads = np.concatenate([fine[c] for c in cells])
+            ids = np.concatenate(
+                [np.arange(k2, dtype=np.int64) + int(c) * k2
+                 for c in cells]
             )
+            s = _cos_scores(X[r:r + 1], heads)[0]
+            order = np.argsort(-s, kind="stable")[:nprobe]
+            chosen = np.unique(ids[order])
+            rows.extend([r] * len(chosen))
+            out_b.extend(chosen.tolist())
+        return rows, out_b
 
-    q = queries.select(id_col, vec_col)
-    return q.mapInArrow(run, schema=out_schema)
+    return ProbeKernel(fn)
 
 
 def ivf_build_hierarchical(
@@ -693,23 +669,20 @@ def bkt_assign(
     return corpus.mapInArrow(run, schema=out_schema)
 
 
-def _probe_buckets_bkt(
-    queries: DataFrame,
+def _bkt_kernel(
     parent: np.ndarray,
     cents: np.ndarray,
     is_leaf: np.ndarray,
     nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     live_ids: "set[int] | None" = None,
     orphans: "tuple[np.ndarray, np.ndarray] | None" = None,
-) -> DataFrame:
-    """(query_id, bucket): per-query best-first descent — a priority
-    queue over (−cosine, node id) seeded with the roots; popping an
-    internal node scores+pushes its children, popping a leaf emits its
-    bucket, until nprobe leaves (the reference's SPTQueue tree search,
-    BKTree.h:799-865). The tree rides to tasks in the kernel closure —
-    the same tiny-head-index assumption as _collect_centroids.
+):
+    """Probe kernel (operators/probe.py): per-query best-first descent —
+    a priority queue over (−cosine, node id) seeded with the roots;
+    popping an internal node scores+pushes its children, popping a leaf
+    emits its bucket, until nprobe leaves (the reference's SPTQueue tree
+    search, BKTree.h:799-865). The tree rides in the kernel closure —
+    the same tiny-head-index assumption as knn._collect_centroids.
 
     Lifecycle compatibility (the leaf set IS the flat centroid table, so
     ivf_split/merge/append evolve it): `live_ids` restricts emission to
@@ -722,8 +695,7 @@ def _probe_buckets_bkt(
     the tree (the reference likewise rebuilds its trees at cadence)."""
     import heapq
 
-    import pyarrow as pa
-    from pyspark.sql.types import LongType
+    from sptag_spark.operators.probe import ProbeKernel
 
     child_ids = {n: np.asarray(c, dtype=np.int64)
                  for n, c in _children_index(parent).items()}
@@ -734,54 +706,37 @@ def _probe_buckets_bkt(
     orph_ids, orph_mat = (orphans if orphans is not None
                           else (np.array([], dtype=np.int64), None))
 
-    out_schema = StructType([
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("bucket", LongType()),
-    ])
+    def fn(X):
+        orph_cos = (_cos_scores(X, orph_mat)
+                    if len(orph_ids) else None)
+        rows, out_b = [], []
+        for r in range(len(X)):
+            x = X[r:r + 1]
+            heap = [(-s, int(n)) for s, n in
+                    zip(_cos_scores(x, root_mat)[0], roots)]
+            heapq.heapify(heap)
+            found = []                       # (cos, leaf) descending
+            while heap and len(found) < nprobe:
+                negs, nd = heapq.heappop(heap)
+                if leaf[nd]:
+                    if live_ids is None or nd in live_ids:
+                        found.append((-negs, nd))
+                    continue
+                ids, mat = child_ids[nd], child_mats[nd]
+                for s, c in zip(_cos_scores(x, mat)[0], ids):
+                    heapq.heappush(heap, (-float(s), int(c)))
+            if orph_cos is not None:
+                merged = sorted(
+                    found + [(float(orph_cos[r, j]), int(orph_ids[j]))
+                             for j in range(len(orph_ids))],
+                    key=lambda t: (-t[0], t[1]))[:nprobe]
+            else:
+                merged = found
+            rows.extend([r] * len(merged))
+            out_b.extend(b for _, b in merged)
+        return rows, out_b
 
-    def run(batches):
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            if len(X) == 0:
-                continue
-            qid = batch.column(id_col)
-            if isinstance(qid, pa.ChunkedArray):
-                qid = qid.combine_chunks()
-            qids = qid.to_numpy(zero_copy_only=False)
-            orph_cos = (_cos_scores(X, orph_mat)
-                        if len(orph_ids) else None)
-            out_q, out_b = [], []
-            for r in range(len(X)):
-                x = X[r:r + 1]
-                heap = [(-s, int(n)) for s, n in
-                        zip(_cos_scores(x, root_mat)[0], roots)]
-                heapq.heapify(heap)
-                found = []                       # (cos, leaf) descending
-                while heap and len(found) < nprobe:
-                    negs, nd = heapq.heappop(heap)
-                    if leaf[nd]:
-                        if live_ids is None or nd in live_ids:
-                            found.append((-negs, nd))
-                        continue
-                    ids, mat = child_ids[nd], child_mats[nd]
-                    for s, c in zip(_cos_scores(x, mat)[0], ids):
-                        heapq.heappush(heap, (-float(s), int(c)))
-                if orph_cos is not None:
-                    merged = sorted(
-                        found + [(float(orph_cos[r, j]), int(orph_ids[j]))
-                                 for j in range(len(orph_ids))],
-                        key=lambda t: (-t[0], t[1]))[:nprobe]
-                else:
-                    merged = found
-                for _, b in merged:
-                    out_q.append(qids[r])
-                    out_b.append(b)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_b, pa.int64())],
-                names=["query_id", "bucket"],
-            )
-
-    return queries.select(id_col, vec_col).mapInArrow(run, schema=out_schema)
+    return ProbeKernel(fn)
 
 
 def bkt_build(
@@ -810,7 +765,7 @@ def bkt_build(
     if its stored vector equals the tree centroid bit-for-bit (split can
     re-mint a retired leaf's id once merges have lowered
     max(centroid_id)); everything else — split halves, re-minted ids —
-    is flat-scored as an orphan (see bkt_probe / _probe_buckets_bkt)."""
+    is flat-scored as an orphan (see bkt_probe / _bkt_kernel)."""
     from sptag_spark.operators.knn import _write_index_meta, _write_postings
 
     spark = corpus.sparkSession
@@ -856,29 +811,31 @@ def bkt_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     predicate=None,
-    probe_mode: str = "auto",
+    driver_probe_limit: int = 10_000,
+    probe_scratch_dir: str | None = None,
 ) -> DataFrame:
     """Probe a persisted multi-level BKT index: best-first tree descent
     for nprobe leaf buckets per query, then the SHARED partition-pruned
-    scoring tail (knn.probe_pruned_topk — static-IN or DPP pruning,
-    optional pushed predicate, identical to flat IVF probes).
+    scoring tail (operators/probe.py — static-IN or DPP pruning by
+    batch size, optional pushed predicate, identical to flat IVF
+    probes; `probe_scratch_dir` relocates wave side tables off a
+    read-only index).
 
     Reconciles the tree against the flat `centroids` table so the
     lifecycle ops compose: leaves retired by ivf_merge/ivf_split are
     skipped during descent; heads born after the build (split halves,
     etc.) are flat-scored per query and merged into the probe set."""
-    import numpy as np
-
-    from sptag_spark.operators.knn import probe_pruned_topk
+    from sptag_spark.operators import probe
 
     parent, cents, is_leaf = _read_tree(spark, path)
     live, orphans = _reconcile_heads(spark, path, cents, is_leaf)
-    probes = _probe_buckets_bkt(
-        queries, parent, cents, is_leaf, nprobe, id_col, vec_col,
-        live_ids=live, orphans=orphans)
-    return probe_pruned_topk(spark, path, probes, queries, k,
-                             id_col, vec_col, predicate,
-                             probe_mode=probe_mode)
+    kernel = _bkt_kernel(parent, cents, is_leaf, nprobe,
+                         live_ids=live, orphans=orphans)
+    probes = probe.select_probes(spark, path, queries, kernel, id_col,
+                                 vec_col, driver_probe_limit,
+                                 probe_scratch_dir)
+    return probe.score_probes(spark, path, probes, queries, k, id_col,
+                              vec_col, predicate)
 
 
 def ivf_probe_hierarchical(
@@ -891,13 +848,14 @@ def ivf_probe_hierarchical(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     predicate=None,
-    probe_mode: str = "auto",
+    driver_probe_limit: int = 10_000,
+    probe_scratch_dir: str | None = None,
 ) -> DataFrame:
     """Probe the persisted two-level index: descend the tiers for bucket
     ids, then the SHARED partition-pruned scoring tail
-    (knn.probe_pruned_topk — one probe-kernel execution, optional
-    pushed metadata predicate, driver/join probe-selection split)."""
-    from sptag_spark.operators.knn import probe_pruned_topk
+    (operators/probe.py — driver or wave selection by batch size,
+    optional pushed metadata predicate)."""
+    from sptag_spark.operators import probe
 
     c_rows = spark.read.parquet(f"{path}/coarse").collect()
     f_rows = spark.read.parquet(f"{path}/fine").collect()
@@ -911,9 +869,9 @@ def ivf_probe_hierarchical(
     for r in f_rows:
         fine[r["cell"], r["fine_idx"]] = r["centroid"]
 
-    probes = _probe_buckets_hierarchical(
-        queries, coarse, fine, nprobe, coarse_probe, id_col, vec_col
-    )
-    return probe_pruned_topk(spark, path, probes, queries, k,
-                             id_col, vec_col, predicate,
-                             probe_mode=probe_mode)
+    kernel = _hierarchical_kernel(coarse, fine, nprobe, coarse_probe)
+    probes = probe.select_probes(spark, path, queries, kernel, id_col,
+                                 vec_col, driver_probe_limit,
+                                 probe_scratch_dir)
+    return probe.score_probes(spark, path, probes, queries, k, id_col,
+                              vec_col, predicate)

@@ -22,8 +22,8 @@ Spark restatement — three cooperating plans, all deterministic:
   whole-stage codegen, top-`rerank` per query by (adc ASC, id ASC).
 - re-rank: the surviving Q x rerank candidates broadcast back into a
   second pruned postings read (id, embedding this time), exact
-  quantized-cosine top-k — identical scoring tail to every other knn
-  query (_score_candidates).
+  quantized-cosine top-k — the scoring tail every persisted-index probe
+  shares (operators/probe.py).
 
 Everything is integer or correctly-rounded IEEE on identical inputs, so
 the DuckDB oracle replicates build + ADC + re-rank hash-exactly; recall
@@ -32,6 +32,8 @@ TruthSet.h:242-285).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -50,8 +52,6 @@ from sptag_spark.operators.knn import (
     _collect_centroids,
     _write_postings,
     _nearest_centroid_kernel,
-    _probe_buckets,
-    _score_candidates,
     _write_index_meta,
     quantize,
     select_centroids,
@@ -551,6 +551,67 @@ def _adc_partials_cogrouped(
     ).applyInArrow(score, schema=out_schema)
 
 
+class AdcScorer(NamedTuple):
+    """The IVF-PQ scorer plugged into probe.score_probes: an ADC scan
+    over codes shortlists `rerank` candidates per query, then exact
+    quantized cosine re-ranks them in the ORIGINAL space. `q_probe` /
+    `q_probe_vec` are the (possibly OPQ-rotated) query frame and column
+    head selection and ADC tables use; `rot` is the rotation or None."""
+
+    books: np.ndarray
+    rerank: int
+    rot: "np.ndarray | None"
+    q_probe: DataFrame
+    q_probe_vec: str
+
+    def scan_columns(self, id_col: str) -> list:
+        # codes-only pruned read: the embedding never enters the ADC
+        # scan (column pruning; asserted in test_plans.py)
+        return [id_col, "bucket", "codes"]
+
+    def shortlist(self, scored: DataFrame, id_col: str) -> DataFrame:
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("_adc").asc(), F.col(id_col).asc())
+        return scored.withColumn("_arn", F.row_number().over(w)) \
+            .filter(F.col("_arn") <= self.rerank)
+
+    def wave_partials(self, prune, post, pairs, q_raw, id_col, vec_col):
+        # per-bucket cogrouped numpy ADC with fused exact-rerank dot/
+        # norms — the pair blowup never becomes Spark rows and the
+        # embedding never leaves the kernel scan. Both sides ship RAW
+        # floats; the kernel quantizes (and rotates) bit-identically
+        post_kern = prune(post.select(id_col, "bucket", "codes",
+                                      F.col(vec_col).alias("__pe")))
+        return _adc_partials_cogrouped(post_kern, pairs, q_raw, self.books,
+                                       self.rerank, id_col, R=self.rot)
+
+    def driver_candidates(self, pairs, prune, post, replicated, id_col,
+                          vec_col):
+        m = self.books.shape[0]
+        tables = F.broadcast(_adc_tables_frame(
+            self.q_probe, self.books, id_col, self.q_probe_vec))
+        adc = None
+        for s in range(m):
+            term = F.element_at(
+                F.element_at(F.col("_t"), s + 1),
+                F.element_at(F.col("codes"), s + 1) + 1,
+            )
+            adc = term if adc is None else adc + term
+        scored = pairs.join(tables, "query_id") \
+            .withColumn("_adc", adc.cast("long"))
+        cand = F.broadcast(
+            self.shortlist(scored, id_col).select("query_id", id_col))
+        # exact re-rank: a second pruned read, embeddings only, joined
+        # to the broadcast survivors on id
+        post_vec = prune(post.select(id_col, "bucket", vec_col)) \
+            .drop("bucket")
+        if replicated:
+            # each vector's embedding appears once per replica posting;
+            # the re-rank join must see it once
+            post_vec = post_vec.dropDuplicates([id_col])
+        return post_vec.join(cand, id_col)
+
+
 def ivf_pq_probe(
     spark,
     path: str,
@@ -560,7 +621,6 @@ def ivf_pq_probe(
     rerank: int = 40,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_mode: str = "auto",
     driver_probe_limit: int = 10_000,
     max_dist_ratio: float | None = None,
     probe_scratch_dir: str | None = None,
@@ -569,160 +629,34 @@ def ivf_pq_probe(
     index. Returns (query_id, vec_id, cosine, rank) — the standard knn
     output contract.
 
-    Probe selection mirrors knn.probe_pruned_topk: 'driver' (static
-    bucket IN-list + broadcast probes/tables/candidates — interactive
-    batches) vs 'join' (probes written to an executor-side table,
-    broadcast distinct-bucket semi-join drives dynamic partition
-    pruning, tables/candidates/queries join as AQE-planned joins —
-    probe waves); 'auto' switches on a limit-bounded query count. The
-    ADC tables are ALWAYS computed executor-side (_adc_tables_frame) —
-    no query collect on any path. On a replica-built index candidates
-    dedupe on (query, id) before ADC ranking; `max_dist_ratio` drops
-    far probe heads (knn._probe_buckets); `probe_scratch_dir` relocates
-    join-mode side tables off a read-only index."""
-    from sptag_spark.operators.knn import (
-        _resolve_probes, read_index_meta, read_postings,
-    )
+    Runs the shared probe pipeline (operators/probe.py) with the IVF
+    centroid kernel over the (OPQ-rotated, if the index is rotated)
+    queries and the ADC scorer: batches of at most `driver_probe_limit`
+    queries prune statically and score ADC with broadcast tables;
+    larger waves prune dynamically and score per bucket in a cogrouped
+    Arrow kernel. On a replica-built index candidates dedupe on
+    (query, id) before ADC ranking; `max_dist_ratio` drops far probe
+    heads; `probe_scratch_dir` relocates wave side tables off a
+    read-only index."""
+    from sptag_spark.operators import probe
+    from sptag_spark.operators.knn import read_index_meta
 
-    centroids = spark.read.parquet(f"{path}/centroids")
     books = _read_codebooks(spark, path)
-    m = books.shape[0]
     # rotated (OPQ) index: heads/codes/ADC live in the rotated space, so
     # the query side rotates once (Arrow matmul) for head selection and
-    # tables; the exact re-rank below stays in the ORIGINAL space
-    q_probe, q_probe_vec = queries, vec_col
-    # meta + rotation read ONCE per probe call (each is a parquet
-    # read + driver collect) and reused below
+    # tables; the exact re-rank stays in the ORIGINAL space
     rot = (_read_rotation(spark, path)
            if read_index_meta(spark, path).get("rotated") else None)
+    q_probe, q_probe_vec = queries, vec_col
     if rot is not None:
         from sptag_spark.operators.pq import opq_rotate_col
 
         q_probe = opq_rotate_col(queries, rot, vec_col, "__rot")
         q_probe_vec = "__rot"
-    # small batches: driver-side probe selection (knn._driver_probes —
-    # one Arrow collect replaces the mode count + probe-kernel jobs;
-    # for OPQ the collect executes the rotation kernel, so the driver
-    # scores exactly the executor path's rotated vectors); waves fall
-    # through to the executor kernel + join-mode pruning
-    from sptag_spark.operators.knn import _driver_probes
-
-    probes = _driver_probes(spark, path, q_probe, nprobe, id_col,
-                            q_probe_vec, max_dist_ratio,
-                            driver_probe_limit, probe_mode)
-    if probes is None:
-        probes = _probe_buckets(q_probe, centroids, nprobe, id_col,
-                                q_probe_vec,
-                                max_dist_ratio=max_dist_ratio)
-        eff_mode = "join" if probe_mode == "auto" else probe_mode
-    else:
-        eff_mode = "driver"
-    mode, probes_local, prune = _resolve_probes(
-        spark, path, probes, queries, eff_mode, driver_probe_limit,
-        scratch_dir=probe_scratch_dir)
-    big = mode == "join"
-
-    # ADC scan: codes-only pruned read — the embedding column never
-    # enters this scan (column pruning; asserted in test_plans.py).
-    post = read_postings(spark, path, id_col)
-    replicated = "replica_rank" in post.columns
-
-    def pruned(cols):
-        return prune(post.select(*cols))
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_adc").asc(), F.col(id_col).asc()
-    )
-    if big:
-        # wave path: per-bucket cogrouped numpy scoring, partial
-        # top-rerank per (bucket, query) with fused exact-rerank dot/
-        # norms — the candidate-pair blowup never becomes Spark rows
-        # and the embedding column never leaves the kernel scan
-        # (see _adc_partials_cogrouped). Both sides ship RAW floats;
-        # the kernel quantizes (and rotates, for OPQ) bit-identically
-        post_kern = prune(
-            post.select(id_col, "bucket", "codes",
-                        F.col(vec_col).alias("__pe")))
-        q_raw = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qe"),
-        )
-        partial = _adc_partials_cogrouped(
-            post_kern, probes_local, q_raw, books, rerank, id_col,
-            R=rot)
-        if replicated:
-            # replica copies carry identical codes => identical _adc:
-            # one candidate per (query, vector). Repartitioning on
-            # query_id first lets the dedup AND both ranking windows
-            # share one exchange (subset-clustering satisfaction)
-            partial = partial.repartition("query_id") \
-                .dropDuplicates(["query_id", id_col])
-        from sptag_spark.operators.knn import cosine_from_quantized, idot
-
-        # per-QUERY norm joined back from a tiny broadcast frame (the
-        # kernel no longer ships it on every candidate row)
-        nbf = F.broadcast(queries.select(
-            F.col(id_col).alias("query_id"),
-            idot(quantize(F.col(vec_col)),
-                 quantize(F.col(vec_col))).alias("_nb")))
-        wk = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col(id_col).asc()
-        )
-        return (
-            partial.withColumn("_arn", F.row_number().over(w))
-            .filter(F.col("_arn") <= rerank)
-            .join(nbf, "query_id")
-            .withColumn("cosine", cosine_from_quantized(
-                F.col("_dot"), F.col("_na"), F.col("_nb")))
-            .withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col(id_col).alias("vec_id"), "cosine",
-                    F.col("rank").cast("int").alias("rank"))
-        )
-    else:
-        post_codes = pruned([id_col, "bucket", "codes"])
-        tables = F.broadcast(
-            _adc_tables_frame(q_probe, books, id_col, q_probe_vec))
-        adc = None
-        for s in range(m):
-            term = F.element_at(
-                F.element_at(F.col("_t"), s + 1),
-                F.element_at(F.col("codes"), s + 1) + 1,
-            )
-            adc = term if adc is None else adc + term
-        cand_pairs = (
-            post_codes.join(probes_local, "bucket")
-            .filter(F.col(id_col) != F.col("query_id"))
-        )
-        if replicated:
-            # replica copies carry identical codes: one ADC score per
-            # (query, vector), not per surviving replica posting.
-            # repartition first so the dedup and the rank window share
-            # ONE exchange (CLAUDE.md rule 17 — subset clustering)
-            cand_pairs = cand_pairs.drop("bucket") \
-                .repartition("query_id") \
-                .dropDuplicates(["query_id", id_col])
-        scored = (
-            cand_pairs
-            .join(tables, "query_id")
-            .withColumn("_adc", adc.cast("long"))
-        )
-        cand = F.broadcast(
-            scored.withColumn("_arn", F.row_number().over(w))
-            .filter(F.col("_arn") <= rerank)
-            .select("query_id", id_col)
-        )
-
-    # Exact re-rank (driver mode only — the wave path returned above):
-    # second pruned read, embeddings for ONLY the surviving candidates,
-    # broadcast semi-shape join on id, queries broadcast.
-    post_vec = pruned([id_col, "bucket", vec_col]).drop("bucket")
-    if replicated:
-        # each vector's embedding appears once per replica posting; the
-        # re-rank join must see it once
-        post_vec = post_vec.dropDuplicates([id_col])
-    qvec = F.broadcast(queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    ))
-    rr = post_vec.join(cand, id_col).join(qvec, "query_id")
-    return _score_candidates(rr, k, id_col, vec_col)
+    probes = probe.select_probes(
+        spark, path, q_probe,
+        probe.ivf_kernel(spark, path, nprobe, max_dist_ratio),
+        id_col, q_probe_vec, driver_probe_limit, probe_scratch_dir)
+    return probe.score_probes(
+        spark, path, probes, queries, k, id_col, vec_col,
+        scorer=AdcScorer(books, rerank, rot, q_probe, q_probe_vec))

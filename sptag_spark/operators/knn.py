@@ -990,9 +990,11 @@ def _footer_bucket_counts(postings_path: str, buckets=None):
     """bucket -> row count from the parquet footers of a
     partitionBy('bucket') layout (`bucket=<v>/*.parquet`): the counts
     the postings write already recorded, read driver-side in
-    milliseconds. `buckets` restricts to those partition dirs. Returns
-    None when the layout isn't the expected one (caller falls back to
-    a Spark recount)."""
+    milliseconds. `buckets` restricts to those partition dirs (a filter
+    matching none of them yields {}). Returns None when the layout isn't
+    the expected one — including a postings dir with no `bucket=`
+    entries at all — so the caller falls back to a Spark recount
+    instead of persisting an empty sizes table."""
     import os
 
     import pyarrow.parquet as pq
@@ -1002,10 +1004,12 @@ def _footer_bucket_counts(postings_path: str, buckets=None):
     except OSError:
         return None
     counts: dict[int, int] = {}
+    seen = False
     try:
         for ent in entries:
             if not ent.name.startswith("bucket="):
                 continue
+            seen = True
             try:
                 b = int(ent.name[len("bucket="):])
             except ValueError:
@@ -1025,7 +1029,7 @@ def _footer_bucket_counts(postings_path: str, buckets=None):
             # the Spark groupBy recount emits no row for an empty bucket
     finally:
         entries.close()
-    return counts
+    return counts if seen else None
 
 
 def _read_sizes_table(spark, sizes_path: str) -> dict:
@@ -1337,7 +1341,7 @@ def ivf_compact(
             raise ValueError(f"unknown cap_order {cap_order!r}")
     _write_postings(post, f"{path}/postings_compacting", "overwrite")
     _swap_postings_clearing_tombstones(path)
-    # join-mode probe side tables ({path}/_probes/<uuid>) are transient
+    # wave probe side tables ({path}/_probes/<uuid>) are transient
     # per-wave artifacts; compaction is their janitor
     cleanup_probe_tables(path)
 
@@ -1735,7 +1739,7 @@ def ivf_reassign(
 
 
 def cleanup_probe_tables(path_or_scratch_dir: str) -> None:
-    """Delete join-mode probe side tables. Pass the index path or the
+    """Delete wave probe side tables. Pass the index path or the
     explicit `probe_scratch_dir` a wave used — either way ONLY the
     `_probes` child is removed (probe tables are always written under
     it), so a scratch dir shared with other artifacts is never touched
@@ -1763,352 +1767,6 @@ def replica_histogram(spark, path: str, id_col: str = "vec_id") -> DataFrame:
     )
 
 
-def _exact_partials_cogrouped(
-    post_kern: DataFrame,
-    probes: DataFrame,
-    q_raw: DataFrame,
-    k: int,
-    id_col: str,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Per-BUCKET exact-cosine scoring with per-query partial top-`k` —
-    the flat-index twin of ivfpq._adc_partials_cogrouped (the
-    reference's ProcessPosting shape, ExtraStaticSearcher.h:260-411).
-    One int64 matmul per (bucket x probing-query) block, float64
-    cosine identical to the JVM expression (dot / (sqrt(na)*sqrt(nb)),
-    same op order), stable argsort over id-presorted columns for the
-    exact (cosine DESC, id ASC) partial order. Downstream shuffles
-    carry only ~Q x nprobe x k rows instead of Q x nprobe x |posting|
-    candidate rows through interpreted HOF scoring (CLAUDE.md rules
-    10/13). Emits (query_id, id, _dot, _na); the caller
-    recomputes cosine with the shared JVM expression so global
-    ordering is bit-identical to the driver path.
-
-    Both sides ship RAW floats (`__pe` postings, `__qe` queries); the
-    kernel quantizes with vecarrow.np_quantize — the bit-identical
-    HALF_UP twin of the JVM expression — for half the shuffle bytes
-    and no per-row JVM array allocation (CLAUDE.md rule 13). `_nb`
-    (per-QUERY norm) is joined back by the caller from a broadcast
-    frame instead of riding every candidate row. Zero-norm vectors
-    (NaN cosine) sort last here but first under Spark's NaN-greatest
-    DESC — as with the expression path, zero vectors are out of
-    contract.
-
-    Arrow-native (applyInArrow + vecarrow zero-copy ingestion, like
-    ivfpq._adc_partials_cogrouped); the dot-product matmul runs as
-    float64 BLAS whenever max|q| * max|pv| * dim < 2^53 proves every
-    partial sum exactly representable (numpy's int64 matmul is a naive
-    C loop), falling back to the int64 path otherwise — bit-identical
-    either way."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType([
-        StructField("query_id", probes.schema["query_id"].dataType),
-        StructField(id_col, post_kern.schema[id_col].dataType),
-        StructField("_dot", LongType()),
-        StructField("_na", LongType()),
-    ])
-    arrow_out = to_arrow_schema(out_schema)
-    # key dtypes must match across cogroup sides (partition column is
-    # directory-inferred int, centroid_id is long); data-column names
-    # must not collide (asof._asof_merge rule)
-    probe_q = probes.join(q_raw, "query_id").select(
-        F.col("bucket").cast(post_kern.schema["bucket"].dataType)
-        .alias("__pb_bucket"), "query_id", "__qe")
-
-    def score(left: "pa.Table", right: "pa.Table") -> "pa.Table":
-        if left.num_rows == 0 or right.num_rows == 0:
-            return arrow_out.empty_table()
-        vids_raw = left.column(id_col).to_numpy(zero_copy_only=False)
-        order = np.argsort(vids_raw, kind="stable")  # id ASC tiebreak
-        vids = vids_raw[order]
-        PV = np_quantize(
-            list_to_matrix(left.column("__pe"), np.float64))[order]
-        Xq = np_quantize(list_to_matrix(right.column("__qe"), np.float64))
-        qids = right.column("query_id").to_numpy(zero_copy_only=False)
-        nq, n = len(Xq), len(vids)
-        na = (PV * PV).sum(1)                            # (n,)
-        nb = (Xq * Xq).sum(1)                            # (nq,)
-        sqrt_na = np.sqrt(na.astype(np.float64))[None, :]
-        r = min(k, n)
-        # query-chunked so the chunk's dot/cos matrices and the argsort
-        # working set stay cache-resident (same restructure as
-        # ivfpq._adc_partials_cogrouped — the full-(nq,n) form streams
-        # three matrices through DRAM and flattens at 8 procs);
-        # per-query results are independent, so output is bit-identical
-        QB = max(16, min(nq, 250_000 // max(n, 1)))
-        sel = np.empty((nq, r), dtype=np.int64)
-        dots_sel = np.empty((nq, r), dtype=np.int64)
-        for q0 in range(0, nq, QB):
-            q1 = min(q0 + QB, nq)
-            dots_c = exact_int_matmul(Xq[q0:q1], PV.T)   # (qb, n) int64
-            cos = dots_c.astype(np.float64) / (
-                sqrt_na * np.sqrt(nb[q0:q1].astype(np.float64))[:, None])
-            if exclude_self:
-                cos[qids[q0:q1, None] == vids[None, :]] = -np.inf
-            s_blk = np.argsort(-cos, axis=1, kind="stable")[:, :r]
-            sel[q0:q1] = s_blk
-            dots_sel[q0:q1] = np.take_along_axis(dots_c, s_blk, 1)
-        out_q = np.repeat(qids, r)
-        out_v = vids[sel.reshape(-1)]
-        keep = (out_q != out_v) if exclude_self \
-            else np.ones(len(out_q), dtype=bool)
-        return pa.Table.from_arrays([
-            pa.array(out_q[keep]),
-            pa.array(out_v[keep]),
-            pa.array(dots_sel.reshape(-1)[keep]),
-            pa.array(na[sel].reshape(-1)[keep]),
-        ], schema=arrow_out)
-
-    return post_kern.groupby("bucket").cogroup(
-        probe_q.groupby("__pb_bucket")
-    ).applyInArrow(score, schema=out_schema)
-
-
-def probe_pruned_topk(
-    spark,
-    path: str,
-    probes: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    predicate=None,
-    probe_mode: str = "auto",
-    driver_probe_limit: int = 10_000,
-    probe_scratch_dir: str | None = None,
-) -> DataFrame:
-    """Shared persisted-index probe tail (used by flat ivf_probe and
-    bkt.ivf_probe_hierarchical): resolve the (query_id, bucket) probe
-    frame, then a PARTITION-PRUNED postings scan + exact
-    quantized-cosine top-k.
-
-    Two probe-selection strategies (VERDICT r2 #2):
-
-    - ``driver`` — collect the probe frame, inline the bucket set as a
-      static IN filter, broadcast the probes. Right for interactive
-      query *batches* (the common serve shape): one tiny driver round
-      trip buys static partition pruning with zero extra jobs.
-    - ``join`` — the probe kernel's output is WRITTEN to a side table
-      under the index (executor-side, never through the driver), the
-      distinct-bucket set (bounded by n_centroids, tiny) broadcast-
-      semi-joins the postings scan — dynamic partition pruning selects
-      the bucket partitions — and probes/queries join candidates as
-      ordinary (AQE-planned) joins. Right for probe *waves*: a 10^6-
-      query wave would otherwise funnel millions of rows through the
-      driver and inline a megabyte IN-list.
-    - ``auto`` — ``join`` iff queries exceeds `driver_probe_limit`
-      (decided with a limit-bounded count, so the scan stops early).
-
-    `predicate` (Column or SQL string over posting columns) composes
-    filtered ANN with the index: it lands in the SAME pruned scan as a
-    pushed filter, below the scoring join — the reference's
-    SearchIndexWithFilter over SPANN postings (VectorIndex.h:59)."""
-    mode, probes_resolved, prune = _resolve_probes(
-        spark, path, probes, queries, probe_mode, driver_probe_limit,
-        scratch_dir=probe_scratch_dir)
-    postings = read_postings(spark, path, id_col)
-    replicated = "replica_rank" in postings.columns
-    if predicate is not None:
-        postings = postings.filter(predicate)
-    if mode == "join":
-        # wave path: per-bucket cogrouped numpy scoring with partial
-        # top-k — the candidate-pair blowup never becomes Spark rows
-        # (see _exact_partials_cogrouped)
-        post_kern = prune(postings.select(
-            id_col, "bucket", F.col(vec_col).alias("__pe")))
-        q_raw = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qe"),
-        )
-        partial = _exact_partials_cogrouped(
-            post_kern, probes_resolved, q_raw, k, id_col)
-        if replicated:
-            # replica copies of a row score identically: one candidate
-            # per (query, vector) (the reference's visited set, P5).
-            # Repartition on query_id FIRST: that partitioning satisfies
-            # the dedup's (query_id, id) clustering AND the window's —
-            # one exchange instead of the planner's two
-            partial = partial.repartition("query_id") \
-                .dropDuplicates(["query_id", id_col])
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col(id_col).asc()
-        )
-        # per-QUERY norm from a tiny broadcast frame (not shipped on
-        # every candidate row)
-        nbf = F.broadcast(queries.select(
-            F.col(id_col).alias("query_id"),
-            idot(quantize(F.col(vec_col)),
-                 quantize(F.col(vec_col))).alias("_nb")))
-        return (
-            partial.join(nbf, "query_id")
-            .withColumn("cosine", cosine_from_quantized(
-                F.col("_dot"), F.col("_na"), F.col("_nb")))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", F.col(id_col).alias("vec_id"), "cosine",
-                    F.col("rank").cast("int").alias("rank"))
-        )
-    qvec = F.broadcast(queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    ))
-    candidates = (
-        prune(postings).join(probes_resolved, "bucket")
-        .filter(F.col(id_col) != F.col("query_id"))
-    )
-    if replicated:
-        # replica copies of a row are identical except (bucket,
-        # replica_rank): a query probing two of a vector's postings must
-        # score it once (the reference's visited/dedup set, P5 shape).
-        # repartition first: one exchange serves the dedup AND the
-        # _score_candidates rank window (CLAUDE.md rule 17)
-        candidates = candidates.drop("bucket", "replica_rank") \
-            .repartition("query_id") \
-            .dropDuplicates(["query_id", id_col])
-    candidates = candidates.join(qvec, "query_id")
-    return _score_candidates(candidates, k, id_col, vec_col)
-
-
-def _resolve_probes(spark, path: str, probes: DataFrame,
-                    queries: DataFrame, probe_mode: str,
-                    driver_probe_limit: int,
-                    scratch_dir: str | None = None):
-    """Shared probe-selection strategy (probe_pruned_topk and
-    ivfpq.ivf_pq_probe): resolve 'auto', then return
-    (mode, probes_resolved, prune) where `prune(postings)` applies the
-    bucket pruning — a static IN filter (driver mode) or a broadcast
-    distinct-bucket semi-join that triggers dynamic partition pruning
-    (join mode; probes land in a side table under `scratch_dir`, default
-    {path}/_probes, cleaned by ivf_compact / cleanup_probe_tables —
-    default join mode therefore needs WRITE access to the index path;
-    pass `scratch_dir` to wave-probe a READ-ONLY shared index)."""
-    if probe_mode == "auto":
-        nq = queries.limit(driver_probe_limit + 1).count()
-        probe_mode = "join" if nq > driver_probe_limit else "driver"
-    if probe_mode == "driver":
-        import pandas as pd
-
-        probe_rows = probes.collect()
-        buckets = sorted({r["bucket"] for r in probe_rows})
-        # pandas→Arrow createDataFrame: the row-list path is the slow
-        # non-Arrow local relation, and this runs per probe batch
-        probes_resolved = F.broadcast(spark.createDataFrame(
-            pd.DataFrame(probe_rows, columns=probes.columns),
-            schema=probes.schema))
-
-        def prune(post: DataFrame) -> DataFrame:
-            return post.filter(F.col("bucket").isin(buckets))
-    elif probe_mode == "join":
-        import uuid
-
-        # always under a _probes/ child — cleanup_probe_tables removes
-        # exactly that child, so a user scratch dir's other contents
-        # are out of blast radius
-        base = scratch_dir if scratch_dir is not None else path
-        probe_tbl = f"{base}/_probes/{uuid.uuid4().hex}"
-        probes.write.mode("overwrite").parquet(probe_tbl)
-        probes_resolved = spark.read.parquet(probe_tbl)
-        from pyspark.sql.types import NumericType
-
-        bucket_set = probes_resolved.select("bucket")
-        if isinstance(bucket_set.schema["bucket"].dataType, NumericType):
-            # constant-true comparison: PartitionPruning only inserts
-            # the DPP subquery when the build side carries a "likely
-            # selective" predicate (isnotnull does not count); without
-            # it the semi join filters ROWS but the scan reads every
-            # bucket FILE (plan-gated in test_plans.py)
-            bucket_set = bucket_set.filter(
-                F.col("bucket") >= F.lit(-(1 << 62)))
-        bucket_set = bucket_set.distinct()
-
-        def prune(post: DataFrame) -> DataFrame:
-            return post.join(F.broadcast(bucket_set), "bucket", "semi")
-    else:
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")
-    return probe_mode, probes_resolved, prune
-
-
-def _load_centroids_local(path: str):
-    """Centroid table -> (ids, quantized matrix, norms, bucket arrow
-    type) via a DRIVER pyarrow read on local index paths — zero Spark
-    jobs, where spark.read + _collect_centroids costs a scheduler
-    round-trip per probe call. np_quantize is the bit-identical HALF_UP
-    twin of the JVM quantize expression the collect path applies.
-    Returns None for non-local paths (caller falls back)."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    if not _is_local_fs_path(path):
-        return None
-    tbl = pq.read_table(f"{path}/centroids")
-    ids_raw = tbl.column("centroid_id").to_numpy(zero_copy_only=False)
-    V = list_to_matrix(tbl.column("centroid_vec"), np.float64)
-    order = np.argsort(ids_raw, kind="stable")  # ascending-id contract
-    ids = ids_raw[order]
-    mat = np_quantize(V[order])
-    norms = np.sqrt((mat * mat).sum(axis=1).astype(np.float64))
-    return list(ids), mat, norms, tbl.schema.field("centroid_id").type
-
-
-def _driver_probes(spark, path: str, queries: DataFrame, nprobe: int,
-                   id_col: str, vec_col: str,
-                   max_dist_ratio: float | None,
-                   driver_probe_limit: int, probe_mode: str):
-    """Driver-side probe selection for SMALL query batches: one Arrow
-    collect of (query_id, vec) — which both decides the driver/join
-    mode (limit-bounded) and delivers the vectors — then the shared
-    numpy probe core against driver-loaded centroids. Returns a LOCAL
-    (query_id, bucket) DataFrame, or None when the batch exceeds the
-    bound (or probe_mode forces 'join') and the caller should use the
-    executor-side kernel path. `vec_col` may be a DERIVED column (e.g.
-    the OPQ-rotated query vector): the collect executes its kernel, so
-    the driver sees exactly the executor path's values."""
-    if probe_mode == "driver":
-        local_q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__e")).toArrow()
-    elif probe_mode == "auto":
-        t = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__e")) \
-            .limit(driver_probe_limit + 1).toArrow()
-        if t.num_rows > driver_probe_limit:
-            return None
-        local_q = t
-    else:
-        return None
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.types import from_arrow_type
-    from pyspark.sql.types import StructField, StructType
-
-    loaded = _load_centroids_local(path)
-    if loaded is not None:
-        cent_ids, cent_mat, cent_norms, bucket_at = loaded
-        bucket_dt = from_arrow_type(bucket_at)
-    else:
-        centroids = spark.read.parquet(f"{path}/centroids")
-        cent_ids, cent_mat, cent_norms = _collect_centroids(centroids)
-        bucket_dt = centroids.schema["centroid_id"].dataType
-    X = np_quantize(list_to_matrix(local_q.column("__e"), np.float64))
-    if len(X):
-        rows, buckets = _probe_pairs_np(
-            X, cent_ids, cent_mat, cent_norms, nprobe, max_dist_ratio)
-        qids = local_q.column("query_id") \
-            .to_numpy(zero_copy_only=False)[rows]
-    else:
-        qids, buckets = [], []
-    return spark.createDataFrame(
-        pd.DataFrame({"query_id": qids, "bucket": buckets}),
-        schema=StructType([
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("bucket", bucket_dt),
-        ]))
-
-
 def ivf_probe(
     spark,
     path: str,
@@ -2118,45 +1776,27 @@ def ivf_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     predicate=None,
-    probe_mode: str = "auto",
     max_dist_ratio: float | None = None,
     probe_scratch_dir: str | None = None,
     driver_probe_limit: int = 10_000,
 ) -> DataFrame:
-    """Probe a persisted IVF index: nprobe bucket ids per query via the
-    centroid kernel, then the shared partition-pruned scoring tail
-    (see probe_pruned_topk for the driver/join strategy split — query
-    batches prune statically, query waves prune dynamically).
+    """Probe a persisted IVF index: nprobe bucket ids per query from the
+    centroid kernel, then the shared partition-pruned exact-cosine tail
+    (operators/probe.py — batches of at most `driver_probe_limit`
+    queries select probes on the driver and prune statically, larger
+    waves select on executors and prune dynamically).
     `max_dist_ratio` drops probe heads farther than ratio× the nearest
     head's distance (fewer partitions read for easy queries);
-    `probe_scratch_dir` relocates join-mode side tables off the index
-    path (read-only shared indexes).
+    `probe_scratch_dir` relocates wave side tables off the index path
+    (read-only shared indexes)."""
+    from sptag_spark.operators import probe
 
-    Small batches (<= driver_probe_limit, the same bound that already
-    gates the static-IN pruning) compute their probe buckets ON THE
-    DRIVER: one Arrow collect of the queries replaces the mode-deciding
-    count job AND the probe-kernel job, and the centroid matrix comes
-    from a driver pyarrow read instead of a collect job — an
-    interactive probe pays one cluster job total before scoring, not
-    four. Identical math (_probe_pairs_np) and identical downstream
-    plan; waves keep the executor-side kernel + dynamic pruning."""
-    probes = _driver_probes(spark, path, queries, nprobe, id_col, vec_col,
-                            max_dist_ratio, driver_probe_limit, probe_mode)
-    if probes is not None:
-        return probe_pruned_topk(spark, path, probes, queries, k,
-                                 id_col, vec_col, predicate,
-                                 probe_mode="driver",
-                                 driver_probe_limit=driver_probe_limit,
-                                 probe_scratch_dir=probe_scratch_dir)
-    centroids = spark.read.parquet(f"{path}/centroids")
-    probes = _probe_buckets(queries, centroids, nprobe, id_col, vec_col,
-                            max_dist_ratio=max_dist_ratio)
-    return probe_pruned_topk(spark, path, probes, queries, k,
-                             id_col, vec_col, predicate,
-                             probe_mode="join" if probe_mode == "auto"
-                             else probe_mode,
-                             driver_probe_limit=driver_probe_limit,
-                             probe_scratch_dir=probe_scratch_dir)
+    probes = probe.select_probes(
+        spark, path, queries,
+        probe.ivf_kernel(spark, path, nprobe, max_dist_ratio),
+        id_col, vec_col, driver_probe_limit, probe_scratch_dir)
+    return probe.score_probes(spark, path, probes, queries, k, id_col,
+                              vec_col, predicate)
 
 
 def ivf_topk(
@@ -2504,42 +2144,31 @@ def relaxed_mono_topk(
     )
 
 
-def _budgeted_probes_batch(
-    spark,
-    path: str,
-    queries: DataFrame,
-    max_check: int | None,
-    id_col: str,
-    vec_col: str,
-    walk: str = "auto",
-) -> DataFrame:
-    """Vectorized form of _budgeted_scan's head walk over a QUERIES
-    DataFrame: per Arrow batch, one exact int matmul ranks every head
-    for every query, then the budget walk (probe while rows-before <
-    max_check, threshold = best unprobed non-empty head) runs as numpy
-    prefix arithmetic per query — no driver round-trips, no per-query
-    jobs. Emits (query_id, bucket, __thr): the probe frame the shared
-    pruned-scan tail consumes, with the query's Relaxed-Monotonicity
-    threshold riding every probe row (nullable — null means nothing
-    was truncated).
+def _budget_kernel(spark, path: str, max_check: int | None,
+                   walk: str = "auto"):
+    """Vectorized form of _budgeted_scan's head walk as a probe kernel
+    (operators/probe.py): one exact int matmul ranks every head for
+    every query of a batch, then the budget walk (probe while
+    rows-before < max_check, threshold = best unprobed non-empty head)
+    runs as numpy prefix arithmetic per query — no per-query jobs.
+    Emits (rows, buckets, thresholds): the query's Relaxed-Monotonicity
+    threshold rides every probe row (None means nothing was truncated).
 
     Head cosines, tiebreaks, probe sets and thresholds are
     BIT-IDENTICAL to the per-query driver walk: same quantization
     (np_quantize HALF_UP), same exact integer matmul, same IEEE op
     order (dot / (qnorm * cent_norm)), same stable argsort over
     ascending head ids, and posting sizes from the same persisted
-    _sizes table (read_posting_sizes) broadcast once in the closure.
+    _sizes table (read_posting_sizes) captured once in the closure.
 
     On a bkt index (walk='auto' → 'tree') each query instead runs the
-    SPTQueue best-first tree descent inside the kernel
-    (bkt._descent_walker — quantized matrices built once per task,
-    heapq walk per query) with the SAME sequential budget rule, so
-    batch == per-query parity holds for tree indexes too."""
+    SPTQueue best-first tree descent (bkt._descent_walker — quantized
+    matrices built once per kernel, heapq walk per query) with the SAME
+    sequential budget rule, so batch == per-query parity holds for tree
+    indexes too."""
     import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
+
+    from sptag_spark.operators.probe import ProbeKernel, load_centroids
 
     sizes = read_posting_sizes(spark, path)
     if walk not in ("auto", "flat", "tree"):
@@ -2554,93 +2183,63 @@ def _budgeted_probes_batch(
 
         parent, cents, is_leaf = _bkt._read_tree(spark, path)
         live, orphans = _bkt._reconcile_heads(spark, path, cents, is_leaf)
-        _descent_factory = _bkt._descent_walker
-        n_heads = len(live) + (len(orphans[0]) if orphans else 0)
-        cent_ids = cent_mat = cent_norms = None
-    else:
-        centroids = spark.read.parquet(f"{path}/centroids")
-        cent_ids, cent_mat, cent_norms = _collect_centroids(centroids)
-        n_heads = len(cent_ids)
-    cent_id_arr = (np.asarray(cent_ids, dtype=np.int64)
-                   if cent_ids is not None else None)
-    size_arr = (np.asarray([sizes.get(int(c), 0) for c in cent_ids],
-                           dtype=np.int64)
-                if cent_ids is not None else None)
+        assert len(live) + (len(orphans[0]) if orphans else 0) > 0, \
+            f"empty centroid table under {path}"
+        tree_walk = _bkt._descent_walker(parent, cents, is_leaf, live,
+                                         orphans)
 
-    out_schema = StructType([
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("bucket", LongType()),
-        StructField("__thr", DoubleType()),
-    ])
-    arrow_out = to_arrow_schema(out_schema)
-
-    def run(batches):
-        if walk == "tree":
-            tree_walk = _descent_factory(parent, cents, is_leaf,
-                                         live, orphans)
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            if len(X) == 0:
-                continue
-            qid = batch.column(id_col)
-            if isinstance(qid, pa.ChunkedArray):
-                qid = qid.combine_chunks()
-            qids = qid.to_numpy(zero_copy_only=False)
+        def walk_tree(X):
             Q = np_quantize(X)
-            if walk == "tree":
-                out_q, out_b, out_t = [], [], []
-                for r in range(len(X)):
-                    # the sequential budget rule, verbatim
-                    probed, checked, thr = [], 0, None
-                    for pos, (cid, hc) in enumerate(tree_walk(Q[r])):
-                        if (pos == 0 or max_check is None
-                                or checked < max_check):
-                            probed.append(int(cid))
-                            checked += sizes.get(int(cid), 0)
-                        elif sizes.get(int(cid), 0) > 0:
-                            thr = float(hc)
-                            break
-                    out_q.extend([qids[r]] * len(probed))
-                    out_b.extend(probed)
-                    out_t.extend([thr] * len(probed))
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(out_q).cast(
-                        arrow_out.field("query_id").type),
-                    pa.array(out_b, pa.int64()),
-                    pa.array(out_t, pa.float64()),
-                ], schema=arrow_out)
-                continue
-            dots = exact_int_matmul(Q, cent_mat.T)      # (nq, C) exact
-            qn = np.sqrt((Q * Q).sum(1).astype(np.float64))
-            out_q, out_b, out_t = [], [], []
+            rows, out_b, out_t = [], [], []
             for r in range(len(X)):
-                hcos = dots[r] / (qn[r] * cent_norms)
-                order = np.argsort(-hcos, kind="stable")
-                if max_check is None:
-                    probed, thr = cent_id_arr[order], None
-                else:
-                    sz = size_arr[order]
-                    rows_before = np.concatenate(
-                        ([0], np.cumsum(sz[:-1])))
-                    # rows_before is monotone, so the mask is a prefix:
-                    # exactly the sequential walk's probe set
-                    npb = max(1, int((rows_before < max_check).sum()))
-                    probed = cent_id_arr[order[:npb]]
-                    rest = np.nonzero(sz[npb:] > 0)[0]
-                    thr = (float(hcos[order[npb + rest[0]]])
-                           if rest.size else None)
-                out_q.extend([qids[r]] * len(probed))
-                out_b.extend(int(b) for b in probed)
+                # the sequential budget rule, verbatim
+                probed, checked, thr = [], 0, None
+                for pos, (cid, hc) in enumerate(tree_walk(Q[r])):
+                    if pos == 0 or max_check is None or checked < max_check:
+                        probed.append(int(cid))
+                        checked += sizes.get(int(cid), 0)
+                    elif sizes.get(int(cid), 0) > 0:
+                        thr = float(hc)
+                        break
+                rows.extend([r] * len(probed))
+                out_b.extend(probed)
                 out_t.extend([thr] * len(probed))
-            yield pa.RecordBatch.from_arrays([
-                pa.array(out_q).cast(arrow_out.field("query_id").type),
-                pa.array(out_b, pa.int64()),
-                pa.array(out_t, pa.float64()),
-            ], schema=arrow_out)
+            return rows, out_b, out_t
 
-    assert n_heads > 0, f"empty centroid table under {path}"
-    return queries.select(id_col, vec_col).mapInArrow(
-        run, schema=out_schema)
+        return ProbeKernel(walk_tree, thresholds=True)
+
+    cent_ids, cent_mat, cent_norms, _ = load_centroids(spark, path)
+    assert len(cent_ids) > 0, f"empty centroid table under {path}"
+    cent_id_arr = np.asarray(cent_ids, dtype=np.int64)
+    size_arr = np.asarray([sizes.get(int(c), 0) for c in cent_ids],
+                          dtype=np.int64)
+
+    def walk_flat(X):
+        Q = np_quantize(X)
+        dots = exact_int_matmul(Q, cent_mat.T)          # (nq, C) exact
+        qn = np.sqrt((Q * Q).sum(1).astype(np.float64))
+        rows, out_b, out_t = [], [], []
+        for r in range(len(X)):
+            hcos = dots[r] / (qn[r] * cent_norms)
+            order = np.argsort(-hcos, kind="stable")
+            if max_check is None:
+                probed, thr = cent_id_arr[order], None
+            else:
+                sz = size_arr[order]
+                rows_before = np.concatenate(([0], np.cumsum(sz[:-1])))
+                # rows_before is monotone, so the mask is a prefix:
+                # exactly the sequential walk's probe set
+                npb = max(1, int((rows_before < max_check).sum()))
+                probed = cent_id_arr[order[:npb]]
+                rest = np.nonzero(sz[npb:] > 0)[0]
+                thr = (float(hcos[order[npb + rest[0]]])
+                       if rest.size else None)
+            rows.extend([r] * len(probed))
+            out_b.extend(probed)
+            out_t.extend([thr] * len(probed))
+        return rows, out_b, out_t
+
+    return ProbeKernel(walk_flat, thresholds=True)
 
 
 def relaxed_mono_topk_batch(
@@ -2652,7 +2251,6 @@ def relaxed_mono_topk_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     predicate=None,
-    probe_mode: str = "auto",
     driver_probe_limit: int = 10_000,
     probe_scratch_dir: str | None = None,
     walk: str = "auto",
@@ -2666,73 +2264,24 @@ def relaxed_mono_topk_batch(
     excluded — the cursor returns whatever lives in the probed
     postings, reference semantics).
 
-    Probe selection reuses _resolve_probes: small waves inline the
-    bucket set as a static IN filter (one driver trip for the WHOLE
-    wave, not one per query); large waves write the probe frame to a
-    side table and prune via DPP, scoring through the cogrouped Arrow
-    kernel so the candidate blowup never becomes Spark rows."""
-    probes = _budgeted_probes_batch(
-        spark, path, queries, max_check, id_col, vec_col, walk=walk)
-    mode, probes_resolved, prune = _resolve_probes(
-        spark, path, probes, queries, probe_mode, driver_probe_limit,
-        scratch_dir=probe_scratch_dir)
-    thresholds = probes_resolved.select("query_id", "__thr") \
+    The budget walk is this family's probe kernel in the shared
+    pipeline (operators/probe.py): small batches walk on the driver and
+    prune with a static IN filter (one driver trip for the WHOLE batch,
+    not one per query); larger waves walk on executors, prune via DPP
+    and score through the cogrouped Arrow kernel."""
+    from sptag_spark.operators import probe
+
+    probes = probe.select_probes(
+        spark, path, queries, _budget_kernel(spark, path, max_check, walk),
+        id_col, vec_col, driver_probe_limit, probe_scratch_dir)
+    thresholds = probes.frame.select("query_id", "__thr") \
         .dropDuplicates(["query_id"])
-    postings = read_postings(spark, path, id_col)
-    replicated = "replica_rank" in postings.columns
-    if predicate is not None:
-        postings = postings.filter(predicate)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc())
     flag = F.when(F.col("__thr").isNotNull()
                   & (F.col("cosine") < F.col("__thr")), 1).otherwise(0)
-    if mode == "join":
-        post_kern = prune(postings.select(
-            id_col, "bucket", F.col(vec_col).alias("__pe")))
-        q_raw = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qe"))
-        partial = _exact_partials_cogrouped(
-            post_kern, probes_resolved.select("query_id", "bucket"),
-            q_raw, k, id_col, exclude_self=False)
-        if replicated:
-            partial = partial.repartition("query_id") \
-                .dropDuplicates(["query_id", id_col])
-        nbf = F.broadcast(queries.select(
-            F.col(id_col).alias("query_id"),
-            idot(quantize(F.col(vec_col)),
-                 quantize(F.col(vec_col))).alias("_nb")))
-        scored = (partial.join(nbf, "query_id")
-                  .withColumn("cosine", cosine_from_quantized(
-                      F.col("_dot"), F.col("_na"), F.col("_nb"))))
-    else:
-        qf = F.broadcast(
-            queries.select(F.col(id_col).alias("query_id"),
-                           quantize(F.col(vec_col)).alias("_qq"))
-            .withColumn("_qn", idot(F.col("_qq"), F.col("_qq"))))
-        cand = prune(postings).join(
-            probes_resolved.select("query_id", "bucket"), "bucket")
-        if replicated:
-            # replica copies score identically: one candidate per
-            # (query, vector); repartition first so ONE exchange serves
-            # the dedup and the rank window (CLAUDE.md rule 17)
-            cand = cand.drop("bucket", "replica_rank") \
-                .repartition("query_id") \
-                .dropDuplicates(["query_id", id_col])
-        scored = (
-            cand.join(qf, "query_id")
-            .withColumn("_pq", quantize(F.col(vec_col)))
-            .select(
-                "query_id", F.col(id_col),
-                cosine_from_quantized(
-                    idot(F.col("_pq"), F.col("_qq")),
-                    idot(F.col("_pq"), F.col("_pq")),
-                    F.col("_qn"),
-                ).alias("cosine"),
-            ))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        probe.score_probes(spark, path, probes, queries, k, id_col,
+                           vec_col, predicate, exclude_self=False,
+                           out_id=id_col)
         .join(thresholds, "query_id")
         .withColumn("relaxed_mono", flag.cast("int"))
         .select("query_id", id_col, "cosine", "rank", "relaxed_mono")

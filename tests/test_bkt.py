@@ -194,17 +194,19 @@ def test_multilevel_probe_recall_parity_with_flat_ivf(emb_small, spark,
 
 def test_multilevel_probe_is_deterministic_and_leaf_only(emb_small, spark,
                                                          tmp_path):
-    from sptag_spark.operators.bkt import (
-        _probe_buckets_bkt, _read_tree, bkt_build)
+    from sptag_spark.operators.bkt import _bkt_kernel, _read_tree, bkt_build
+    from sptag_spark.operators.probe import probe_frame
 
     path = str(tmp_path / "bkt")
     bkt_build(emb_small, path, branch=4, leaf_max=32, cell_iters=5)
     parent, cents, is_leaf = _read_tree(spark, path)
     q = emb_small.filter("vec_id < 8")
     a = sorted((r["query_id"], r["bucket"]) for r in
-               _probe_buckets_bkt(q, parent, cents, is_leaf, 4).collect())
+               probe_frame(q, _bkt_kernel(parent, cents, is_leaf, 4))
+               .collect())
     b = sorted((r["query_id"], r["bucket"]) for r in
-               _probe_buckets_bkt(q, parent, cents, is_leaf, 4).collect())
+               probe_frame(q, _bkt_kernel(parent, cents, is_leaf, 4))
+               .collect())
     assert a == b
     assert len(a) == 8 * 4
     assert all(is_leaf[bk] for _, bk in a)

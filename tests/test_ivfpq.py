@@ -115,11 +115,10 @@ def test_ivf_pq_join_mode_equals_driver_mode(spark, emb, index):
     path bit-for-bit."""
     q = emb.filter("vec_id < 16")
     a = sorted(map(tuple, ivf_pq_probe(
-        spark, index, q, k=5, nprobe=4, rerank=32,
-        probe_mode="driver").collect()))
+        spark, index, q, k=5, nprobe=4, rerank=32).collect()))
     b = sorted(map(tuple, ivf_pq_probe(
         spark, index, q, k=5, nprobe=4, rerank=32,
-        probe_mode="join").collect()))
+        driver_probe_limit=0).collect()))
     assert a == b and len(a) == 80
 
 
@@ -214,10 +213,10 @@ def test_ivf_pq_incremental_lifecycle_matches_rebuild(spark, emb,
                  path=rebuilt, centroids=centroids, codebooks=books)
     assert inc == probe(rebuilt)
 
-    # a join-mode probe leaves a side table; compact cleans it AND the
+    # a wave probe leaves a side table; compact cleans it AND the
     # tombstones, preserving results
     ivf_pq_probe(spark, path, q, k=5, nprobe=4, rerank=32,
-                 probe_mode="join").collect()
+                 driver_probe_limit=0).collect()
     assert os.path.isdir(f"{path}/_probes")
     ivf_compact(spark, path)
     assert not os.path.isdir(f"{path}/tombstones")

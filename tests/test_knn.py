@@ -375,11 +375,12 @@ def test_batch_budget_cursor_parity_with_per_query(emb, spark, tmp_path):
     qids = [0, 3, 11, 42]
     queries = emb.filter(F.col("vec_id").isin(qids))
     want = _perquery_rows(spark, path, emb, qids, k=20, max_check=80)
-    for mode in ("driver", "join"):
+    for limit in (10_000, 0):
         got = _batch_rows(relaxed_mono_topk_batch(
-            spark, path, queries, k=20, max_check=80, probe_mode=mode,
+            spark, path, queries, k=20, max_check=80,
+            driver_probe_limit=limit,
             probe_scratch_dir=str(tmp_path / "scratch")))
-        assert got == want, mode
+        assert got == want, limit
     # some query must actually truncate + flag or the test is vacuous
     assert any(f == 1 for *_, f in want)
 
@@ -437,7 +438,7 @@ def test_batch_budget_cursor_wave_runs_as_one_plan(emb, spark, tmp_path):
     path = str(tmp_path / "idx")
     ivf_build(emb, n_centroids=16, path=path)
     res = relaxed_mono_topk_batch(
-        spark, path, emb, k=3, max_check=200, probe_mode="join",
+        spark, path, emb, k=3, max_check=200, driver_probe_limit=0,
         probe_scratch_dir=str(tmp_path / "scratch")).cache()
     try:
         n_q = emb.count()
@@ -574,3 +575,35 @@ def test_ivf_compact_posting_size_cap(spark, tmp_path):
     after = sorted(r["vec_id"] for r in
                    spark.read.parquet(f"{path}/postings").collect())
     assert before == after
+
+
+def test_footer_counts_fall_back_on_unexpected_layout(spark, tmp_path):
+    """A postings dir with no `bucket=` partitions is not a footer-
+    countable layout: _footer_bucket_counts answers None (never an
+    empty dict), so the sizes table comes from the Spark recount
+    instead of being persisted empty. A buckets filter that matches no
+    partition of a proper layout still answers {}."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sptag_spark.operators.knn import (
+        _footer_bucket_counts,
+        _read_sizes_table,
+        _refresh_posting_sizes,
+    )
+
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    pq.write_table(pa.table({"vec_id": [1, 2, 3], "bucket": [4, 4, 5]}),
+                   str(flat / "part-0.parquet"))
+    assert _footer_bucket_counts(str(flat)) is None
+    assert _footer_bucket_counts(str(flat), [4]) is None
+    _refresh_posting_sizes(spark, str(flat))
+    assert _read_sizes_table(spark, f"{flat}/_sizes") == {4: 2, 5: 1}
+
+    part = tmp_path / "part"
+    (part / "bucket=3").mkdir(parents=True)
+    pq.write_table(pa.table({"vec_id": [1, 2]}),
+                   str(part / "bucket=3" / "part-0.parquet"))
+    assert _footer_bucket_counts(str(part)) == {3: 2}
+    assert _footer_bucket_counts(str(part), [7]) == {}

@@ -341,20 +341,20 @@ def test_contamination_kernel_runs_once(spark, docs):
 
 def test_probe_join_mode_uses_dynamic_partition_pruning(spark, tmp_path):
     """VERDICT r2 #2: large probe waves must not funnel through the
-    driver. probe_mode='join' writes probes to a side table and the
-    broadcast distinct-bucket semi-join drives DYNAMIC partition pruning
-    of the postings scan — plan shows dynamicpruningexpression on
-    bucket, and the result is bit-equal to the driver/static path."""
+    driver. A wave (driver_probe_limit=0) writes probes to a side table
+    and the broadcast distinct-bucket semi-join drives DYNAMIC partition
+    pruning of the postings scan — plan shows dynamicpruningexpression
+    on bucket, and the result is bit-equal to the driver/static path."""
     from sptag_spark.operators.knn import ivf_build, ivf_probe
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     path = str(tmp_path / "ivf")
     ivf_build(emb, n_centroids=16, path=path)
     q = emb.filter("vec_id < 32")
-    out = ivf_probe(spark, path, q, k=5, nprobe=3, probe_mode="join")
+    out = ivf_probe(spark, path, q, k=5, nprobe=3, driver_probe_limit=0)
     p = plan_of(out)
     assert "dynamicpruningexpression" in p, p
     a = sorted(map(tuple, out.collect()))
-    b = sorted(map(tuple, ivf_probe(spark, path, q, k=5, nprobe=3,
-                                    probe_mode="driver").collect()))
+    b = sorted(map(tuple, ivf_probe(spark, path, q, k=5,
+                                    nprobe=3).collect()))
     assert a == b and len(a) == 160

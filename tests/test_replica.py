@@ -100,7 +100,7 @@ def test_replica_probe_dedupes_and_modes_agree(spark, emb, tmp_path):
     pairs = [(r["query_id"], r["vec_id"]) for r in rows]
     assert len(pairs) == len(set(pairs))
     a = sorted(map(tuple, rows))
-    b = _probe_sorted(spark, path, q, k=10, nprobe=4, probe_mode="join")
+    b = _probe_sorted(spark, path, q, k=10, nprobe=4, driver_probe_limit=0)
     assert a == b
 
 
@@ -289,25 +289,32 @@ def test_max_dist_ratio_prunes_probes_same_results_at_high_ratio(
 
 
 def test_probe_scratch_dir_on_readonly_index(spark, emb, tmp_path):
-    """Wave (join-mode) probes against a READ-ONLY shared index work
-    when the side table is redirected to probe_scratch_dir (ADVICE r3
-    #3/#9), match the writable-index result, and cleanup_probe_tables
-    empties the scratch dir."""
-    path = str(tmp_path / "idx")
-    ivf_build(emb, 16, path)
+    """Wave probes against a READ-ONLY shared index work when the side
+    table is redirected to probe_scratch_dir (ADVICE r3 #3/#9), match
+    the writable-index result, and cleanup_probe_tables empties the
+    scratch dir — for flat IVF and for the BKT tree descent alike."""
+    from sptag_spark.operators.bkt import bkt_build, bkt_probe
+
     q = emb.filter("vec_id < 8")
-    want = _probe_sorted(spark, path, q, k=5, nprobe=4,
-                         probe_mode="driver")
-    scratch = str(tmp_path / "scratch")
-    os.makedirs(scratch)
-    os.chmod(path, 0o555)
-    try:
-        got = _probe_sorted(spark, path, q, k=5, nprobe=4,
-                            probe_mode="join", probe_scratch_dir=scratch)
-        assert got == want
-        assert not os.path.exists(f"{path}/_probes")
-        assert os.listdir(scratch)
-        cleanup_probe_tables(scratch)
-        assert os.listdir(scratch) == []
-    finally:
-        os.chmod(path, 0o755)
+    for family, probe in (("ivf", ivf_probe), ("bkt", bkt_probe)):
+        path = str(tmp_path / family / "idx")
+        if family == "bkt":
+            bkt_build(emb, path, branch=4, leaf_max=32, cell_iters=5)
+        else:
+            ivf_build(emb, 16, path)
+        want = sorted(map(tuple, probe(spark, path, q, k=5,
+                                       nprobe=4).collect()))
+        scratch = str(tmp_path / family / "scratch")
+        os.makedirs(scratch)
+        os.chmod(path, 0o555)
+        try:
+            got = sorted(map(tuple, probe(
+                spark, path, q, k=5, nprobe=4, driver_probe_limit=0,
+                probe_scratch_dir=scratch).collect()))
+            assert got == want
+            assert not os.path.exists(f"{path}/_probes")
+            assert os.listdir(scratch)
+            cleanup_probe_tables(scratch)
+            assert os.listdir(scratch) == []
+        finally:
+            os.chmod(path, 0o755)

@@ -2,7 +2,7 @@
 token, dedup and prepare_corpus all have measured campaigns; this one
 drives jobs/ann_index.py build + a 10^4-query wave probe — the
 IVF-PQ build (assign + encode + bucketed postings write) and the
-join-mode pruned ADC probe with exact re-rank).
+wave-mode (DPP-pruned) ADC probe with exact re-rank).
 
 Protocol (identical to tools/prep_scaling.py / corpus_scaling.py):
 deterministic synthetic clustered embeddings written as 64 files so the
@@ -87,7 +87,7 @@ def _one_run(cores: int, corpus: str, queries: str, warm_corpus: str,
             cli.main(["search", "--index", f"{root}/warm_idx",
                       "--queries", warm_queries,
                       "--out", f"{root}/warm_res", "--k", str(K),
-                      "--nprobe", str(NPROBE), "--probe-mode", "join"])
+                      "--nprobe", str(NPROBE), "--driver-probe-limit", "0"])
     t0 = time.time()
     with contextlib.redirect_stdout(io.StringIO()):
         cli.main(["build", "--in", corpus, "--index", f"{root}/idx",
@@ -99,7 +99,7 @@ def _one_run(cores: int, corpus: str, queries: str, warm_corpus: str,
         cli.main(["search", "--index", f"{root}/idx", "--queries", queries,
                   "--out", f"{root}/res", "--k", str(K),
                   "--nprobe", str(NPROBE), "--rerank", str(RERANK),
-                  "--probe-mode", "join"])
+                  "--driver-probe-limit", "0"])
     t2 = time.time()
     stop_spark()
     return t1 - t0, t2 - t1
@@ -164,7 +164,7 @@ def main() -> int:
         "config": {"type": "ivf_pq", "centroids": CENTROIDS, "m": M,
                    "k_codes": K_CODES, "replica_count": REPLICAS,
                    "nprobe": NPROBE, "k": K, "rerank": RERANK,
-                   "probe_mode": "join"},
+                   "driver_probe_limit": 0},
         "small": s, "big": b,
         "pass": eff("total_min") >= 0.8,
     }
