@@ -523,7 +523,7 @@ def _reconcile_heads(spark, path: str, cents: np.ndarray,
     leaf's id — a re-minted id would otherwise be routed by the DEAD
     leaf's stale tree centroid instead of flat-scored by its real head
     vector. Shared by bkt_probe and the budgeted cursor's descent walk
-    (knn._budgeted_scan)."""
+    (knn._budget_kernel)."""
     head_rows = spark.read.parquet(f"{path}/centroids").collect()
     live: set[int] = set()
     orphan_rows = []
@@ -826,6 +826,7 @@ def bkt_probe(
     skipped during descent; heads born after the build (split halves,
     etc.) are flat-scored per query and merged into the probe set."""
     from sptag_spark.operators import probe
+    from sptag_spark.operators.knn import read_postings
 
     parent, cents, is_leaf = _read_tree(spark, path)
     live, orphans = _reconcile_heads(spark, path, cents, is_leaf)
@@ -834,8 +835,8 @@ def bkt_probe(
     probes = probe.select_probes(spark, path, queries, kernel, id_col,
                                  vec_col, driver_probe_limit,
                                  probe_scratch_dir)
-    return probe.score_probes(spark, path, probes, queries, k, id_col,
-                              vec_col, predicate)
+    return probe.score_probes(read_postings(spark, path, id_col), probes,
+                              queries, k, id_col, vec_col, predicate)
 
 
 def ivf_probe_hierarchical(
@@ -856,6 +857,7 @@ def ivf_probe_hierarchical(
     (operators/probe.py — driver or wave selection by batch size,
     optional pushed metadata predicate)."""
     from sptag_spark.operators import probe
+    from sptag_spark.operators.knn import read_postings
 
     c_rows = spark.read.parquet(f"{path}/coarse").collect()
     f_rows = spark.read.parquet(f"{path}/fine").collect()
@@ -873,5 +875,5 @@ def ivf_probe_hierarchical(
     probes = probe.select_probes(spark, path, queries, kernel, id_col,
                                  vec_col, driver_probe_limit,
                                  probe_scratch_dir)
-    return probe.score_probes(spark, path, probes, queries, k, id_col,
-                              vec_col, predicate)
+    return probe.score_probes(read_postings(spark, path, id_col), probes,
+                              queries, k, id_col, vec_col, predicate)

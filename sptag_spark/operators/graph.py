@@ -600,7 +600,6 @@ def refine_knn_graph(
     vec_col: str = "embedding",
     include_reverse: bool = True,
     score_unordered: bool = False,
-    broadcast_vectors: bool | str = False,
 ) -> DataFrame:
     """Graph refinement — the reference's RefineGraph pass
     (NeighborhoodGraph.h:444-465 runs it after the TPT init; loop at
@@ -678,64 +677,17 @@ def refine_knn_graph(
     from pyspark.sql.pandas.types import to_arrow_schema
     from sptag_spark.functions.vecarrow import list_to_matrix, np_quantize
 
+    # the between-iteration checkpoint coalesce (below) right-sizes
+    # partition counts from the row count; one metadata-cheap count
+    # buys ~2 s/iteration of empty-task overhead at bench scale
+    n_rows = df.count() if iters > 1 else None
+
     # RAW float vectors ride the candidate joins; quantization happens
     # inside the Arrow kernel (np_quantize — bit-identical to the JVM
     # expression, CLAUDE.md rule 13): array<float> is half the shuffle
     # bytes of a pre-quantized long array, and the norm columns drop
     # out entirely (recomputed exactly from the ints in-kernel). The
     # wide candidate shuffle IS the refine pass's cost at scale.
-    #
-    # broadcast_vectors ('auto': numeric ids AND quantized matrix under
-    # ~128 MB; default OFF) instead ships the WHOLE vector matrix to the
-    # scoring kernel as a broadcast closure and streams candidates as
-    # NARROW (src, dst) pairs — the reference's own memory model
-    # (RefineGraph runs over a fully resident vector set). Both
-    # per-iteration vector-attach joins disappear and every exchange in
-    # the loop carries two ids + a double instead of a 64-float payload.
-    # Values are bit-identical: same np_quantize, same int64 dots, same
-    # sqrt/multiply order. Measured trade at 20k x 64 / iters=2: the
-    # setup (stats job + Arrow collect + broadcast, ~1.5 s) exceeds the
-    # per-iteration exchange savings, so it stays OPT-IN — it pays at
-    # higher iteration counts or wider vectors, and past the byte bound
-    # the relational joins are the 100-TB path regardless.
-    from pyspark.sql.types import IntegralType
-
-    n_rows, dim = None, None
-    if broadcast_vectors == "auto":
-        if isinstance(df.schema[id_col].dataType, IntegralType):
-            stats = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.first(F.size(F.col(vec_col))).alias("d")).first()
-            n_rows, dim = stats["n"], stats["d"] or 0
-            broadcast_vectors = n_rows * dim * 8 <= 128 * 1024 * 1024
-        else:
-            broadcast_vectors = False
-    elif not broadcast_vectors and iters > 1:
-        # the between-iteration checkpoint coalesce (below) right-sizes
-        # partition counts from the row count; one metadata-cheap count
-        # buys ~2 s/iteration of empty-task overhead at bench scale
-        n_rows = df.count()
-    if broadcast_vectors and score_unordered:
-        # score_unordered exists for the spill-bound regime where the
-        # matrix cannot be resident; the combination is contradictory
-        broadcast_vectors = False
-
-    bc_vectors = None
-    if broadcast_vectors:
-        # Arrow collect (toArrow), never the py4j row path — collecting
-        # vector rows row-at-a-time costs seconds at 20k rows
-        tbl = df.select(F.col(id_col).alias("_id"),
-                        F.col(vec_col).alias("_e")).toArrow()
-        ids_np = tbl.column("_id").to_numpy(zero_copy_only=False) \
-            .astype(np.int64)
-        X = list_to_matrix(tbl.column("_e"), np.float64)
-        order = np.argsort(ids_np, kind="stable")
-        ids_np = ids_np[order]
-        Xq = np_quantize(X[order])
-        nrm_np = np.sqrt((Xq * Xq).sum(axis=1).astype(np.float64))
-        bc_vectors = df.sparkSession.sparkContext.broadcast(
-            (ids_np, Xq, nrm_np))
-
     src_side = df.select(F.col(id_col).alias("src"),
                          F.col(vec_col).alias("_se"))
     dst_side = df.select(F.col(id_col).alias("dst"),
@@ -769,31 +721,6 @@ def refine_knn_graph(
                 schema=arrow_out,
             )
 
-    def bcast_dot_kernel(batches):
-        # same arithmetic as dot_kernel (int64 dots, sqrt-then-multiply
-        # in float64), vectors looked up from the broadcast matrix
-        ids_b, Xq_b, nrm_b = bc_vectors.value
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            s = batch.column("src").to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            d = batch.column("dst").to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            si = np.searchsorted(ids_b, s)
-            di = np.searchsorted(ids_b, d)
-            if (ids_b[si] != s).any() or (ids_b[di] != d).any():
-                raise ValueError(
-                    "refine_knn_graph: graph references ids absent "
-                    "from the corpus frame")
-            dots = np.einsum("ij,ij->i", Xq_b[si], Xq_b[di])
-            cos = dots.astype(np.float64) / (nrm_b[si] * nrm_b[di])
-            yield pa.record_batch(
-                [batch.column("src"), batch.column("dst"),
-                 pa.array(cos, pa.float64())],
-                schema=arrow_out,
-            )
-
     w = Window.partitionBy("src").orderBy(
         F.col("cosine").desc(), F.col("dst").asc()
     )
@@ -814,15 +741,7 @@ def refine_knn_graph(
             .filter(F.col("src") != F.col("dst"))
         )
         dtype = graph.schema["src"].dataType.simpleString()
-        if bc_vectors is not None:
-            # in-memory vector matrix: candidates stay NARROW end to
-            # end — one (src,dst) dedup exchange, the map-side lookup
-            # kernel, and the top-k window's own exchange
-            cand = cand.dropDuplicates(["src", "dst"])
-            scored = cand.mapInArrow(
-                bcast_dot_kernel, schema=f"src {dtype}, dst {dtype}, "
-                                         "cosine double")
-        elif include_reverse and score_unordered:
+        if include_reverse and score_unordered:
             # With reversals the candidate set is SYMMETRIC as a set of
             # ordered pairs (base is edges ∪ reverse(edges); for any
             # expansion path s→v→d through base, the reversed path

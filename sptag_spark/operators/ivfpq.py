@@ -639,7 +639,7 @@ def ivf_pq_probe(
     heads; `probe_scratch_dir` relocates wave side tables off a
     read-only index."""
     from sptag_spark.operators import probe
-    from sptag_spark.operators.knn import read_index_meta
+    from sptag_spark.operators.knn import read_index_meta, read_postings
 
     books = _read_codebooks(spark, path)
     # rotated (OPQ) index: heads/codes/ADC live in the rotated space, so
@@ -655,8 +655,10 @@ def ivf_pq_probe(
         q_probe_vec = "__rot"
     probes = probe.select_probes(
         spark, path, q_probe,
-        probe.ivf_kernel(spark, path, nprobe, max_dist_ratio),
+        probe.ivf_kernel(probe.load_centroids(spark, path), nprobe,
+                         max_dist_ratio),
         id_col, q_probe_vec, driver_probe_limit, probe_scratch_dir)
     return probe.score_probes(
-        spark, path, probes, queries, k, id_col, vec_col,
+        read_postings(spark, path, id_col), probes, queries, k, id_col,
+        vec_col,
         scorer=AdcScorer(books, rerank, rot, q_probe, q_probe_vec))

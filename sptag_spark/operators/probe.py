@@ -21,6 +21,11 @@ it through this module in two steps:
   plus exact re-rank); one replica-dedup step; one per-query norm
   broadcast; one rank window. Waves score per bucket inside cogrouped
   Arrow kernels, so the candidate blowup never becomes Spark rows.
+
+In-memory `knn.ivf_topk` skips selection (its broadcast `probe_frame`
+joins the in-memory buckets directly) and shares the scoring tail; the
+single-query budget cursor runs the batch budget kernel on its one-row
+query matrix.
 """
 
 from __future__ import annotations
@@ -51,7 +56,6 @@ from sptag_spark.operators.knn import (
     cosine_from_quantized,
     idot,
     quantize,
-    read_postings,
 )
 
 
@@ -99,12 +103,13 @@ def load_centroids(spark, path: str):
             from_arrow_type(tbl.schema.field("centroid_id").type))
 
 
-def ivf_kernel(spark, path: str, nprobe: int,
+def ivf_kernel(centroids, nprobe: int,
                max_dist_ratio: float | None = None) -> ProbeKernel:
-    """The IVF centroid core: the nprobe nearest heads per query by
-    exact quantized cosine (knn._probe_pairs_np), optionally cut by the
-    reference's adaptive max_dist_ratio (SPANNIndex.cpp:324-330)."""
-    ids, mat, norms, bucket_type = load_centroids(spark, path)
+    """The IVF centroid core over a load_centroids tuple: the nprobe
+    nearest heads per query by exact quantized cosine
+    (knn._probe_pairs_np), optionally cut by the reference's adaptive
+    max_dist_ratio (SPANNIndex.cpp:324-330)."""
+    ids, mat, norms, bucket_type = centroids
 
     def fn(X):
         return _probe_pairs_np(np_quantize(X), ids, mat, norms, nprobe,
@@ -223,13 +228,15 @@ def select_probes(spark, path: str, queries: DataFrame,
                   True)
 
 
-def score_probes(spark, path: str, probes: Probes, queries: DataFrame,
+def score_probes(postings: DataFrame, probes: Probes, queries: DataFrame,
                  k: int, id_col: str = "vec_id",
                  vec_col: str = "embedding", predicate=None,
                  exclude_self: bool = True, scorer=None,
                  out_id: str = "vec_id") -> DataFrame:
     """The shared pruned scoring tail -> (query_id, out_id, cosine,
-    rank), top-k per query by (cosine DESC, id ASC).
+    rank), top-k per query by (cosine DESC, id ASC), over the
+    `postings` rows (a persisted index's read_postings, or in-memory
+    bucketed rows) the probes select.
 
     `scorer=None` scores every probed posting row by exact quantized
     cosine. A pluggable scorer (ivfpq.AdcScorer) shortlists candidates
@@ -239,10 +246,8 @@ def score_probes(spark, path: str, probes: Probes, queries: DataFrame,
     same pruned scan as a pushed filter — the reference's
     SearchIndexWithFilter over SPANN postings (VectorIndex.h:59).
     `exclude_self` drops the query's own id from its results."""
-    post = read_postings(spark, path, id_col)
-    replicated = "replica_rank" in post.columns
-    if predicate is not None:
-        post = post.filter(predicate)
+    replicated = "replica_rank" in postings.columns
+    post = postings if predicate is None else postings.filter(predicate)
     pairs = probes.frame.select("query_id", "bucket")
 
     def dedup(df: DataFrame) -> DataFrame:

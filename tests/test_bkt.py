@@ -511,23 +511,33 @@ def test_budget_walk_tree_descent_order(emb_small, spark, tmp_path):
 def test_budget_walk_flat_tree_parity_one_level(emb_small, spark,
                                                 tmp_path):
     """On a ONE-level tree (every root is a leaf) the SPTQueue descent
-    degenerates to the flat best-first sort, so walk='tree' and
-    walk='flat' must agree row-for-row — probe sets, cosines, ranks,
-    thresholds and relaxed_mono flags — under a binding budget."""
+    degenerates to the flat best-first sort, so the tree walk and the
+    flat walk must agree row-for-row — probe sets, cosines, ranks,
+    thresholds and relaxed_mono flags — under a binding budget. The
+    walk follows the persisted index_type: a copy of the index whose
+    meta drops index_type='bkt' takes the flat walk."""
+    import shutil
+
     from sptag_spark.operators.bkt import _read_tree, bkt_build
-    from sptag_spark.operators.knn import relaxed_mono_topk
+    from sptag_spark.operators.knn import (_write_index_meta,
+                                           read_index_meta,
+                                           relaxed_mono_topk)
 
     path = str(tmp_path / "bkt1")
     bkt_build(emb_small, path, branch=4, leaf_max=512, cell_iters=5)
     parent, _, is_leaf = _read_tree(spark, path)
     assert bool(is_leaf.all()) and int((parent < 0).sum()) == len(parent)
+    flat = str(tmp_path / "bkt1_flat")
+    shutil.copytree(path, flat)
+    _write_index_meta(spark, flat, branch=4, leaf_max=512)
+    assert "index_type" not in read_index_meta(spark, flat)
     qvec = [float(x)
             for x in emb_small.filter("vec_id = 3").first()["embedding"]]
-    rows = lambda w: sorted(  # noqa: E731
+    rows = lambda p: sorted(  # noqa: E731
         ((r["vec_id"], r["cosine"], r["rank"], r["relaxed_mono"])
-         for r in relaxed_mono_topk(spark, path, qvec, k=25,
-                                    max_check=150, walk=w).collect()))
-    assert rows("tree") == rows("flat") and len(rows("tree")) == 25
+         for r in relaxed_mono_topk(spark, p, qvec, k=25,
+                                    max_check=150).collect()))
+    assert rows(path) == rows(flat) and len(rows(path)) == 25
 
 
 def test_budget_batch_matches_per_query_on_bkt(emb_small, spark,

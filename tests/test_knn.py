@@ -486,6 +486,11 @@ def test_multi_index_join_path_agrees_with_literal_path(emb, spark):
     assert [r["vec_id"] for r in lit] == [r["vec_id"] for r in jn]
     for a, b in zip(lit, jn):
         assert abs(a["score"] - b["score"]) < 1e-12
+    # one weight per query, checked even under `python -O`
+    with pytest.raises(ValueError, match="3 queries but 2 weights"):
+        multi_index_topk(
+            emb, emb.filter(F.col("vec_id").isin(qids)),
+            weights=weights[:2], k=10)
 
 
 def test_probe_wave_auto_selects_join_mode(spark, tmp_path):

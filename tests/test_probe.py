@@ -20,6 +20,7 @@ from sptag_spark.operators.ivfpq import ivf_pq_build, ivf_pq_probe
 from sptag_spark.operators.knn import (
     ivf_build,
     ivf_probe,
+    relaxed_mono_topk,
     relaxed_mono_topk_batch,
 )
 
@@ -69,21 +70,29 @@ def _plan(df) -> str:
 # Spark jobs each entry point launched while building its plan (probe
 # selection, before any scoring job) for an 8-query batch, measured at
 # the parent of the shared-pipeline change with the same fixture.
+# `cursor` rents the single-query budget cursor on the flat IVF index;
+# its count was measured at the parent of the change that moved the
+# cursor onto the batch budget kernel.
 PARENT_JOBS = {"ivf": 2, "ivf_pq": 7, "bkt": 8, "hierarchical": 8,
-               "budget": 8}
+               "budget": 8, "cursor": 5}
 
 
-@pytest.mark.parametrize("entry", ENTRIES)
+@pytest.mark.parametrize("entry", ENTRIES + ("cursor",))
 def test_driver_batch_launches_no_more_jobs_than_before(
         spark, emb, indexes, entry):
     """A small batch pays its probe selection in few cluster jobs: the
     count of jobs launched before scoring may only go down."""
     sc = spark.sparkContext
     q = emb.filter("vec_id < 8")
+    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
     group = f"probe-jobs-{entry}"
     sc.setJobGroup(group, group)
     try:
-        _probe(spark, indexes, entry, q)
+        if entry == "cursor":
+            relaxed_mono_topk(spark, f"{indexes}/ivf", qvec, k=5,
+                              max_check=80)
+        else:
+            _probe(spark, indexes, entry, q)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()

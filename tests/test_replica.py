@@ -18,9 +18,9 @@ import shutil
 
 import pytest
 
+from sptag_spark.operators import probe
 from sptag_spark.operators.ivfpq import ivf_pq_build, ivf_pq_probe
 from sptag_spark.operators.knn import (
-    _probe_buckets,
     brute_force_topk,
     cleanup_probe_tables,
     ivf_append,
@@ -274,12 +274,12 @@ def test_max_dist_ratio_prunes_probes_same_results_at_high_ratio(
     path = str(tmp_path / "idx")
     ivf_build(emb, 16, path)
     q = emb.filter("vec_id < 16")
-    cents = spark.read.parquet(f"{path}/centroids")
-    full = _probe_buckets(q, cents, 4).count()
-    cut = _probe_buckets(q, cents, 4, max_dist_ratio=1.05).count()
-    assert cut < full
-    per_q = (_probe_buckets(q, cents, 4, max_dist_ratio=1.05)
-             .groupBy("query_id").count().agg({"count": "min"})
+    cents = probe.load_centroids(spark, path)
+    full = probe.probe_frame(q, probe.ivf_kernel(cents, 4))
+    cut = probe.probe_frame(
+        q, probe.ivf_kernel(cents, 4, max_dist_ratio=1.05))
+    assert cut.count() < full.count()
+    per_q = (cut.groupBy("query_id").count().agg({"count": "min"})
              .collect()[0][0])
     assert per_q >= 1
     a = _probe_sorted(spark, path, q, k=10, nprobe=4)
