@@ -18,4 +18,10 @@ Everything is pyspark.sql DataFrames + Window + vectorized Arrow/pandas UDFs;
 no per-row Python in any hot path.
 """
 
+from sptag_spark import _zipcache
+
 __version__ = "0.1.0"
+
+# Every package UDF imports this package in the Python worker: from then
+# on a task start no longer re-parses every zip on sys.path (_zipcache).
+_zipcache.install()

@@ -207,6 +207,19 @@ def auto_max_df(df: DataFrame) -> int:
     )
 
 
+def _sizes_for(ids_sorted, ns, ids):
+    """Jaccard kernel 2's sizes lookup: ``ns`` at each of ``ids`` in the
+    sorted, unique ``ids_sorted``. An id the table lacks raises the
+    diagnostic ValueError; the searchsorted index is clipped first, so an
+    id past the largest one (or any id on an empty table) gets it too
+    instead of an IndexError."""
+    i = ids_sorted.searchsorted(ids).clip(max=max(len(ids_sorted) - 1, 0))
+    if len(ids) and (not len(ids_sorted) or (ids_sorted[i] != ids).any()):
+        raise ValueError("jaccard blob kernel: pair id missing from the "
+                         "sizes table")
+    return ns[i]
+
+
 def _pair_counts_blob(sh: DataFrame, id_ddl: str, threshold: float):
     """(id_a, id_b, n_a, n_b, n_common, jaccard) — the co-occurrence
     count + threshold filter done as two Arrow kernels exchanging PACKED
@@ -347,12 +360,8 @@ def _pair_counts_blob(sh: DataFrame, id_ddl: str, threshold: float):
         n_common = np.add.reduceat(cnt, starts)
         ua, ub = id_a[starts], id_b[starts]
         ids_sorted, ns = bc_sizes.value
-        ia = np.searchsorted(ids_sorted, ua)
-        ib = np.searchsorted(ids_sorted, ub)
-        if (ids_sorted[ia] != ua).any() or (ids_sorted[ib] != ub).any():
-            raise ValueError("jaccard blob kernel: pair id missing from "
-                             "the sizes table")
-        na, nb = ns[ia], ns[ib]
+        na = _sizes_for(ids_sorted, ns, ua)
+        nb = _sizes_for(ids_sorted, ns, ub)
         # same IEEE ops as the relational expression: exact int64
         # numerator/denominator, one correctly-rounded float64 divide
         jac = n_common.astype(np.float64) / \

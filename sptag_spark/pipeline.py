@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sptag_spark.functions.tokens import with_arrow_token_features
@@ -67,6 +67,16 @@ def serve_asof(features: DataFrame, probes: DataFrame,
     )
 
 
+def _observed(obs: Observation, df: DataFrame, aggs: list) -> dict:
+    """``obs``'s metrics from the sink job. AQE replaces a subtree whose
+    shuffle stage came back empty with an empty relation and drops the
+    observation inside it (no row at all, which ``Observation.get``
+    fails on); only then pay a recount job: ``aggs`` over ``df``."""
+    if obs._jo.getRow().length():
+        return obs.get
+    return df.agg(*aggs).first().asDict()
+
+
 def run_pipeline(
     spark: SparkSession,
     sequences_path: str,
@@ -74,36 +84,42 @@ def run_pipeline(
     out_path: str | None = None,
     asof_strategy: str = "union",
 ) -> dict:
-    """End-to-end run; returns throughput metrics."""
+    """End-to-end run; returns throughput metrics.
+
+    The row and token counts come from the sink job itself: observed
+    metrics on the raw input (before featurize, so rows any later stage
+    drops still count) and on the result, read after the write. No job
+    re-runs the union shuffle or re-scans the corpus to count."""
     t0 = time.time()
-    seqs = spark.read.parquet(sequences_path)
-    feats = featurize(seqs)
+    seen, out = Observation(), Observation()
+    seq_aggs = [F.count(F.lit(1)).alias("n_seq"),
+                F.coalesce(F.sum("n_tok"), F.lit(0)).alias("n_tok")]
+    out_aggs = [F.count(F.lit(1)).alias("n_out")]
+    raw = spark.read.parquet(sequences_path)
+    feats = featurize(raw.observe(seen, *seq_aggs))
     if probes_path:
         probes = spark.read.parquet(probes_path)
         result = serve_asof(feats, probes, strategy=asof_strategy)
     else:
         result = feats
+    sink = result.observe(out, *out_aggs)
     if out_path:
-        result.write.mode("overwrite").parquet(out_path)
-        elapsed = time.time() - t0
-        n_out = spark.read.parquet(out_path).count()  # footer-cheap
+        sink.write.mode("overwrite").parquet(out_path)
     else:
         # noop write, NOT count(): count() column-prunes the served
         # payload out of the plan (MapInArrow + every window feature
         # disappear) and would time a join skeleton that computes no
         # features (CLAUDE.md rule 11). The row count afterwards is
         # deliberately outside the timed section.
-        result.write.format("noop").mode("overwrite").save()
-        elapsed = time.time() - t0
-        n_out = result.count()
-    stats = seqs.agg(
-        F.count(F.lit(1)).alias("n_seq"), F.sum("n_tok").alias("n_tok")
-    ).collect()[0]
+        sink.write.format("noop").mode("overwrite").save()
+    elapsed = time.time() - t0
+    stats = _observed(seen, raw, seq_aggs)
+    n_seq, n_tok = stats["n_seq"], stats["n_tok"]
     return {
         "elapsed_sec": elapsed,
-        "rows_out": n_out,
-        "sequences": stats["n_seq"],
-        "tokens": int(stats["n_tok"]),
-        "sequences_per_sec": stats["n_seq"] / elapsed,
-        "tokens_per_sec": int(stats["n_tok"]) / elapsed,
+        "rows_out": _observed(out, result, out_aggs)["n_out"],
+        "sequences": n_seq,
+        "tokens": n_tok,
+        "sequences_per_sec": n_seq / elapsed,
+        "tokens_per_sec": n_tok / elapsed,
     }

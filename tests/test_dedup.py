@@ -159,6 +159,27 @@ def test_minhash_params_never_overflow_int64():
         assert a * xmax + b < (1 << 63)
 
 
+def test_jaccard_sizes_lookup_raises_diagnostic_error():
+    """Kernel 2's sizes lookup returns each id's size, and an id the
+    table lacks raises the diagnostic ValueError, never an IndexError:
+    past the largest id, in a gap between ids, and on an empty table."""
+    import numpy as np
+
+    from sptag_spark.operators.dedup import _sizes_for
+
+    ids = np.array([3, 7, 9], dtype=np.int64)
+    ns = np.array([30, 70, 90], dtype=np.int64)
+    got = _sizes_for(ids, ns, np.array([9, 3, 7, 3], dtype=np.int64))
+    assert got.tolist() == [90, 30, 70, 30]
+    assert _sizes_for(ids, ns, np.array([], dtype=np.int64)).size == 0
+    empty = np.array([], dtype=np.int64)
+    assert _sizes_for(empty, empty, empty).size == 0
+    for table, query in [(ids, [3, 10]), (ids, [5]), (empty, [3])]:
+        with pytest.raises(ValueError, match="missing from the sizes"):
+            _sizes_for(table, ns[:len(table)],
+                       np.array(query, dtype=np.int64))
+
+
 def test_minhash_large_num_hashes_runs(docs):
     from sptag_spark.operators.dedup import minhash_signature
 

@@ -194,6 +194,59 @@ def test_run_pipeline_metrics(spark, corpus, tmp_path):
     assert m["sequences_per_sec"] > 0
 
 
+def _recount(spark, corpus) -> dict:
+    seqs = spark.read.parquet(str(corpus / "sequences.parquet"))
+    stats = seqs.agg(F.count(F.lit(1)).alias("n"),
+                     F.sum("n_tok").alias("t")).first()
+    probes = spark.read.parquet(str(corpus / "probes.parquet"))
+    served = serve_asof(featurize(seqs), probes)
+    return {"rows_out": served.count(), "sequences": stats["n"],
+            "tokens": stats["t"]}
+
+
+@pytest.mark.parametrize("sink", ["noop", "parquet"])
+def test_run_pipeline_counts_come_from_the_sink_job(spark, corpus, tmp_path,
+                                                    sink):
+    """The row and token counts are observed during the sink job: a noop
+    call launches at most 5 jobs (9 before the counts were observed; the
+    recounts re-ran the union shuffle and re-scanned the corpus), and
+    the counts equal a separate count() and agg over the same inputs."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "out.parquet") if sink == "parquet" else None
+    group = f"run-pipeline-{sink}"
+    sc.setJobGroup(group, group)
+    try:
+        m = run_pipeline(spark, str(corpus / "sequences.parquet"),
+                         str(corpus / "probes.parquet"), out_path=out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    if sink == "noop":
+        assert n_jobs <= 5, n_jobs
+    assert {k: m[k] for k in ("rows_out", "sequences", "tokens")} \
+        == _recount(spark, corpus)
+    if out:
+        assert spark.read.parquet(out).count() == m["rows_out"]
+
+
+@pytest.mark.parametrize("sink", ["noop", "parquet"])
+def test_run_pipeline_on_empty_sequences(spark, corpus, tmp_path, sink):
+    """A schema-only sequences table yields zero sequences and tokens
+    (the sum over no rows is null) instead of a TypeError; every probe
+    still comes back, unmatched."""
+    empty = str(tmp_path / "empty.parquet")
+    spark.read.parquet(str(corpus / "sequences.parquet")).limit(0) \
+        .write.parquet(empty)
+    out = str(tmp_path / "out.parquet") if sink == "parquet" else None
+    m = run_pipeline(spark, empty, str(corpus / "probes.parquet"),
+                     out_path=out)
+    assert (m["rows_out"], m["sequences"], m["tokens"]) == (200, 0, 0)
+    assert m["sequences_per_sec"] == m["tokens_per_sec"] == 0
+    m = run_pipeline(spark, empty, out_path=out)
+    assert (m["rows_out"], m["sequences"], m["tokens"]) == (0, 0, 0)
+
+
 def test_kernel_wide_vocab_path():
     """Tokenizers with vocab >= 2^16 (e.g. 100k BPE) take the int64
     distinct/sum path; values must stay exact."""
