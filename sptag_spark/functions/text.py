@@ -44,10 +44,6 @@ def ws_tokens(text: Column) -> Column:
     return F.split(F.trim(text), "\\s+")
 
 
-def ws_token_count(text: Column) -> Column:
-    return F.size(ws_tokens(text))
-
-
 def bpe_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_PATTERN), F.lit(0)))
 
@@ -286,6 +282,22 @@ def shingle_min_fingerprint(text: Column, n: int = 3) -> Column:
     """MinHash with one hash function: lexicographic min of per-shingle
     md5s — a locality-sensitive 1-perm sketch of the document."""
     return F.array_min(F.transform(word_shingles(text, n), F.md5))
+
+
+def near_dup_key(text_col: Column, id_col: Column, n: int = 3) -> Column:
+    """The cheap near-dup key: 1-perm shingle MinHash
+    (shingle_min_fingerprint). Two exact duplicates always share it (same
+    normalized shingle set); two near-duplicates share it with
+    probability ~= their Jaccard similarity — the 1-perm MinHash
+    collision law, so keying on it is an UNDER-approximation of the
+    batch LSH pipeline (never more aggressive than batch at the same n).
+    NULL and empty/whitespace-only text both fall back to a per-doc
+    sentinel so contentless rows never collapse onto each other (empty
+    strings would otherwise all share md5(''))."""
+    sentinel = F.concat(F.lit("__null__"), id_col.cast("string"))
+    contentless = text_col.isNull() | (F.length(F.trim(text_col)) == 0)
+    return F.when(contentless, sentinel).otherwise(
+        F.coalesce(shingle_min_fingerprint(text_col, n), sentinel))
 
 
 def fingerprints_arrow(

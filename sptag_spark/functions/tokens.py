@@ -44,10 +44,6 @@ for _i in range(1, _MAX_LEN):
 
 # --- column-expression tier -------------------------------------------------
 
-def token_count(tokens: Column) -> Column:
-    return F.size(tokens)
-
-
 def token_sum(tokens: Column) -> Column:
     return F.aggregate(tokens, F.lit(0).cast("long"), lambda s, x: s + x)
 

@@ -37,12 +37,6 @@ def _md5_key(col: Column, salt: str, denom: int) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % denom
 
 
-def md5_key_sql(expr: str, salt: str, denom: int) -> str:
-    """DuckDB twin of _md5_key (kept adjacent so they evolve together)."""
-    return (f"(('0x' || substr(md5('{salt}|' || CAST({expr} AS VARCHAR)), "
-            f"1, 8))::BIGINT % {denom})")
-
-
 # ---------------------------------------------------------------------------
 # Benchmark decontamination
 # ---------------------------------------------------------------------------

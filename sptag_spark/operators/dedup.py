@@ -800,52 +800,6 @@ def simhash_from_hashes(hashes: "F.Column") -> "F.Column":
     return out
 
 
-def _simhash_arrow(hashed: DataFrame) -> DataFrame:
-    """(_id, _h array<long>) -> (_id, sim): the 60 per-bit majority votes
-    in one vectorized numpy pass per Arrow batch. Bit-identical to
-    simhash_from_hashes — md5 stays JVM-side, only the bit math moves to
-    numpy. SUPERSEDED on the hot path by simhash_sketch_arrow (which
-    fuses normalize+shingle+md5 into the kernel too — the JVM md5 string
-    churn was the thread-scaling bottleneck); kept for callers that
-    already hold a feature-hash array column (e.g. non-text features)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType([
-        StructField("_id", hashed.schema["_id"].dataType),
-        StructField("sim", LongType()),
-    ])
-    weights = 1 << np.arange(SIMHASH_BITS, dtype=np.int64)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column("_h")
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = col.values.to_numpy(zero_copy_only=False)
-            n = len(offs) - 1
-            if len(flat) == 0:
-                sims = np.zeros(n, dtype=np.int64)
-            else:
-                # ±1 votes per (element, bit), summed per row segment
-                bits = ((flat[:, None] >> np.arange(SIMHASH_BITS)) & 1)
-                votes = (bits * 2 - 1).astype(np.int64)
-                starts = np.minimum(offs[:-1], len(flat) - 1)
-                sums = np.add.reduceat(votes, starts, axis=0)
-                sums[offs[:-1] == offs[1:]] = 0
-                sims = ((sums > 0) * weights).sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("_id"), pa.array(sims, pa.int64())],
-                names=["_id", "sim"],
-            )
-
-    return hashed.mapInArrow(run, schema=out_schema)
-
-
 def simhash_sketch_arrow(
     df: DataFrame,
     id_col: str = "doc_id",

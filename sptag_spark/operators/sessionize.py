@@ -4,8 +4,8 @@ session_id(entity) = cumulative count of gaps > threshold in event-time
 order — the standard cumulative-sum trick: one shuffle on the entity key,
 one sort, two running window expressions, all JVM-side.
 
-The streaming twin (F.session_window / applyInPandasWithState) lives in
-sptag_spark.streaming; this batch form is the oracle for it.
+The engine sessionizes in batch only; the `sessionize` and `session_agg`
+contract queries check this form against DuckDB.
 
 Reference analog: SPTAG has no event-time sessions, but its split/merge
 maintenance groups contiguous activity per partition

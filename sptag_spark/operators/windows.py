@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 AGGS = {
@@ -120,9 +120,3 @@ def backfill(
         F.last(c, ignorenulls=True).over(w).alias(f"{c}{suffix}") for c in cols
     ]
     return df.select("*", *exprs)
-
-
-def feature_window(keys: Sequence[str], order_by: Sequence[str]) -> WindowSpec:
-    """The shared window spec — expose so callers can add custom exprs that
-    reuse the same Exchange+Sort."""
-    return Window.partitionBy(*keys).orderBy(*_order_cols(order_by))

@@ -6,9 +6,16 @@ The reference checkpoints by quiescing and flushing component files
 equivalent: split the job into hash buckets of the entity key, write each
 bucket's output + a manifest record (bucket id, row count, min/max ts,
 order-insensitive digest — reference F11 checksum / A9 stat counters),
-and on restart skip every bucket already present in the manifest. Bucket
-filtering happens at the source scan (predicate pushdown on the hash), so
-a resume never reads completed work.
+and on restart skip every bucket already present in the manifest. Each
+record also carries the bucket layout (key, n_buckets); a restart under a
+different layout raises ManifestLayoutError instead of mixing buckets cut
+two ways.
+
+The bucket filter ``pmod(xxhash64(key), n) == b`` is not a predicate
+parquet can push down, so every bucket job scans the whole source
+(perfbench traces ``manifest.scan_amplification`` at exactly the bucket
+count). A resume skips completed buckets, but each remaining bucket still
+reads their rows. Staging the bucketed source once is ROADMAP item 6.
 
 At cluster scale each bucket is itself a distributed job over many tasks;
 bucket count is a checkpoint granularity knob, not a parallelism limit.
@@ -61,6 +68,10 @@ def digest_frame(df: DataFrame, ts_col: str | None = None) -> dict:
     return row
 
 
+class ManifestLayoutError(ValueError):
+    """A resume found buckets committed under another (key, n_buckets)."""
+
+
 class Manifest:
     """JSON-file manifest: one record per completed bucket."""
 
@@ -109,8 +120,18 @@ def run_resumable(
     """Run ``process`` over each hash bucket of ``source``, writing
     ``out_dir/data/bucket=N`` + manifest per bucket; skip completed
     buckets on rerun. ``fail_after`` injects a crash after N buckets
-    (for resume tests). Returns summary stats."""
+    (for resume tests). Raises ManifestLayoutError when ``out_dir`` holds
+    buckets committed under another ``key`` or ``n_buckets``. Returns
+    summary stats."""
     manifest = Manifest(out_dir)
+    for rec in manifest.read():
+        if (rec.get("key"), rec.get("n_buckets")) != (key, n_buckets) \
+                or rec["bucket"] >= n_buckets:
+            raise ManifestLayoutError(
+                f"{manifest.dir}: bucket {rec['bucket']} was committed with "
+                f"key={rec.get('key')!r}, n_buckets={rec.get('n_buckets')}; "
+                f"this run asks for key={key!r}, n_buckets={n_buckets}. "
+                "Resume with the recorded layout or use a fresh out_dir.")
     done = manifest.done_buckets()
     src = with_bucket(source(spark), key, n_buckets)
     completed_now = 0
@@ -124,7 +145,7 @@ def run_resumable(
         path = os.path.join(out_dir, "data", f"bucket={b}")
         result.write.mode("overwrite").parquet(path)
         stats = digest_frame(spark.read.parquet(path), ts_col=ts_col)
-        manifest.record(b, stats)
+        manifest.record(b, {**stats, "key": key, "n_buckets": n_buckets})
         completed_now += 1
     recs = manifest.read()
     return {

@@ -1,365 +1,25 @@
-"""Structured Streaming twins of the batch operators.
+"""Streaming vector ingest into a persisted IVF / IVF-PQ index.
 
-The reference's fresh-update layer (SPFresh: insert/delete/split/merge
-with versioned late-data rejection, ExtraDynamicSearcher.h) is a hand-
-rolled streaming system; Spark restates those concerns declaratively:
-
-- late data     -> withWatermark (the version check at :680)
-- sessionize    -> session_window aggregation (batch twin: operators/
-                   sessionize.py gap trick — tested to agree)
-- rolling stats -> sliding window() aggregation
-- incremental append + compaction -> foreachBatch MERGE/append micro-
-                   batches (T1/T2, BKTIndex.cpp:1062-1147)
-
-Every builder takes and returns DataFrames so batch and streaming share
-plans; tests drive them with availableNow file sources (deterministic,
-no timing races).
+The reference's fresh-update layer (SPFresh: foreground append plus
+background posting split, ExtraDynamicSearcher.h:637-894) is a hand-rolled
+streaming system. Here it is one Structured Streaming foreachBatch sink,
+stream_ann_ingest, reached by the ``jobs/ann_index.py ingest`` verb: each
+micro-batch runs the batch index lifecycle in operators/knn.py and
+operators/ivfpq.py (append, then split), made replay-safe by per-batch
+markers under the checkpoint directory.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def read_events_stream(
-    spark: SparkSession,
-    path: str,
-    schema,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream over a parquet directory (the sandbox stand-in
-    for Kafka/Kinesis; swap `format` at deploy time, the plan is equal)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def stream_sessionize(
-    events: DataFrame,
-    keys: list[str],
-    ts: str = "ts",
-    gap_seconds: int = 1800,
-    watermark: str = "2 hours",
-    value_col: str | None = None,
-) -> DataFrame:
-    """Gap-based session aggregation with event-time watermarking.
-
-    session_window closes a session when no event lands within the gap —
-    identical grouping to the batch cumulative-gap trick (tested equal).
-    The watermark bounds state: sessions older than (max event time −
-    watermark) finalize and evict, the declarative version of the
-    reference's stale-version eviction (VersionLabel.h:36-57).
-    """
-    # Parquet timestamps arrive as TIMESTAMP_NTZ, which cannot carry a
-    # watermark; reinterpret as TIMESTAMP (session tz pinned UTC).
-    ev = events.withColumn(ts, F.col(ts).cast("timestamp")) \
-        .withWatermark(ts, watermark)
-    aggs = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(ts).alias("session_start"),
-        F.max(ts).alias("session_end"),
-    ]
-    if value_col is not None:
-        aggs.append(F.sum(value_col).alias(f"sum_{value_col}"))
-    return (
-        ev.groupBy(
-            F.session_window(F.col(ts), f"{gap_seconds} seconds"), *keys
-        )
-        .agg(*aggs)
-        .select(
-            *keys,
-            F.col("session_window.start").alias("window_start"),
-            F.col("session_window.end").alias("window_end"),
-            *[F.col(c) for c in
-              ("n_events", "session_start", "session_end")],
-            *([F.col(f"sum_{value_col}")] if value_col else []),
-        )
-    )
-
-
-def stream_sliding_counts(
-    events: DataFrame,
-    keys: list[str],
-    ts: str = "ts",
-    window_seconds: int = 3600,
-    slide_seconds: int = 600,
-    watermark: str = "2 hours",
-    value_col: str | None = None,
-) -> DataFrame:
-    """Sliding event-time window aggregates (the rolling-feature twin)."""
-    ev = events.withColumn(ts, F.col(ts).cast("timestamp")) \
-        .withWatermark(ts, watermark)
-    aggs = [F.count(F.lit(1)).alias("n_events")]
-    if value_col is not None:
-        aggs += [
-            F.sum(value_col).alias(f"sum_{value_col}"),
-            F.min(value_col).alias(f"min_{value_col}"),
-            F.max(value_col).alias(f"max_{value_col}"),
-        ]
-    return (
-        ev.groupBy(
-            F.window(F.col(ts), f"{window_seconds} seconds",
-                     f"{slide_seconds} seconds"),
-            *keys,
-        )
-        .agg(*aggs)
-        .select(
-            *keys,
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_events",
-            *([F.col(f"sum_{value_col}"), F.col(f"min_{value_col}"),
-               F.col(f"max_{value_col}")] if value_col else []),
-        )
-    )
-
-
-def stream_stateful_counts(
-    events: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: a per-key
-    running (count, sum-of-epoch-seconds-as-proxy) accumulator that
-    persists across micro-batches — the reference's in-memory per-key
-    update state (SPFresh append counters, IExtraSearcher.h:83-158) with
-    Spark's state store replacing the hand-rolled map."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType, StructField, StructType,
-    )
-
-    out_schema = StructType([
-        StructField(key, LongType()),
-        StructField("n_events", LongType()),
-        StructField("n_batches", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("n", LongType()),
-        StructField("b", LongType()),
-    ])
-
-    def update(key_tuple, pdfs, state: GroupState):
-        n_new = 0
-        for pdf in pdfs:
-            n_new += len(pdf)
-        if state.exists:
-            n, b = state.get
-        else:
-            n, b = 0, 0
-        state.update((n + n_new, b + 1))
-        yield pd.DataFrame({
-            key: [key_tuple[0]],
-            "n_events": [n + n_new],
-            "n_batches": [b + 1],
-        })
-
-    ev = events.withColumn(ts, F.col(ts).cast("timestamp")) \
-        .withWatermark(ts, watermark)
-    return ev.groupBy(key).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming exact dedup: content fingerprint (md5 of normalized
-    text, identical to the batch operator's) + dropDuplicatesWithinWatermark
-    — the reference's visited-set CheckAndSet (WorkSpace.h:114-165) with
-    Spark's state store as the set and the watermark as its eviction
-    policy: a duplicate arriving within the watermark of the first copy
-    is dropped; state older than the watermark evicts, bounding memory at
-    any corpus size. Keeps the FIRST-arrived copy (stream-time keep-first
-    — the batch twin keeps min doc_id; both are 'one canonical survivor
-    per fingerprint', tested to agree on the survivor fp set)."""
-    from sptag_spark.functions.text import doc_fingerprint
-
-    ev = docs.withColumn("fp", doc_fingerprint(F.col(text_col)))
-    ev = ev.withColumn(ts, F.col(ts).cast("timestamp")) \
-        .withWatermark(ts, watermark)
-    return ev.dropDuplicatesWithinWatermark(["fp"])
-
-
-def near_dup_key(text_col: Column, id_col: Column, n: int = 3) -> Column:
-    """The cheap streaming near-dup key: 1-perm shingle MinHash
-    (functions/text.py shingle_min_fingerprint — lexicographic min of
-    per-shingle md5s). Two exact duplicates always share it (same
-    normalized shingle set); two near-duplicates share it with
-    probability ~= their Jaccard similarity — the 1-perm MinHash
-    collision law, which is exactly what makes it a useful
-    drop-within-watermark key and an UNDER-approximation of the batch
-    LSH pipeline (never more aggressive than batch at the same n).
-    NULL and empty/whitespace-only text both fall back to a per-doc
-    sentinel so contentless rows never collapse onto each other (empty
-    strings would otherwise all share md5(''))."""
-    from sptag_spark.functions.text import shingle_min_fingerprint
-
-    contentless = text_col.isNull() | (F.length(F.trim(text_col)) == 0)
-    return F.when(
-        contentless, F.concat(F.lit("__null__"), id_col.cast("string"))
-    ).otherwise(F.coalesce(
-        shingle_min_fingerprint(text_col, n),
-        F.concat(F.lit("__null__"), id_col.cast("string")),
-    ))
-
-
-def stream_near_dup_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts: str = "ts",
-    watermark: str = "2 hours",
-    n: int = 3,
-) -> DataFrame:
-    """Streaming exact+near dedup in ONE stateful operator: key on the
-    1-perm MinHash (exact dups share normalized text, hence the key;
-    near dups collide with probability ~= Jaccard), keep the
-    FIRST-arrived doc per key within the watermark, evict state beyond
-    it. The batch twin is keep-min-id per key; stream and batch are
-    gated to agree on the survivor KEY set (same discipline as
-    stream_exact_dedup)."""
-    ev = docs.withColumn(
-        "nd_key", near_dup_key(F.col(text_col), F.col(id_col), n)
-    )
-    ev = ev.withColumn(ts, F.col(ts).cast("timestamp")) \
-        .withWatermark(ts, watermark)
-    return ev.dropDuplicatesWithinWatermark(["nd_key"])
-
-
-def stream_corpus_gate(
-    docs: DataFrame,
-    rates: dict[str, int],
-    min_quality: float = 0.5,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    default_rate: int = 0,
-    near_dup_within: str | None = None,
-    text_col: str = "text",
-    ts: str = "ts",
-    ngram: int = 3,
-) -> DataFrame:
-    """Streaming corpus-preparation gate: quality scoring + deterministic
-    mixture sampling on a document stream. The base gate is entirely
-    STATELESS (pure per-row expressions, md5 sampling key) — no
-    watermark, no state store, append-mode safe at any rate; a restart
-    or replay admits exactly the same rows because the sample key is a
-    pure function of the row. Tested row-identical to the batch
-    operators.
-
-    `near_dup_within` (a watermark duration, e.g. '2 hours') appends the
-    stateful exact+near dedup stage (stream_near_dup_dedup) AFTER the
-    stateless gate, so only quality-admitted, sampled docs pay for
-    dedup state — the full streaming prep shape: score -> sample ->
-    near-dup drop."""
-    from sptag_spark.functions.text import with_text_stats
-    from sptag_spark.operators.corpus import stratified_sample
-
-    scored = with_text_stats(docs).filter(
-        F.col("quality_score") >= min_quality
-    )
-    out = stratified_sample(
-        scored, rates, strata_col=strata_col, id_col=id_col,
-        default_rate=default_rate,
-    )
-    if near_dup_within is not None:
-        out = stream_near_dup_dedup(
-            out, text_col=text_col, id_col=id_col, ts=ts,
-            watermark=near_dup_within, n=ngram,
-        )
-    return out
-
-
-def incremental_append(
-    stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    partition_by: list[str] | None = None,
-):
-    """Micro-batch append sink with exactly-once file semantics via the
-    streaming checkpoint — the reference's AddIndex append path (T1/T2)
-    with Spark's own WAL replacing the hand-rolled persist buffer
-    (SPANN/Index.h:256-281)."""
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    return writer.start()
-
-
-def _asof_enrich_handler(features: DataFrame, on: str, probe_ts: str,
-                         data_ts: str, out_path: str):
-    """foreachBatch handler for stream_asof_enrich; module-level so the
-    replay-idempotency property is directly testable."""
-    from sptag_spark.operators.asof import asof_join
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        enriched = asof_join(batch, features, on=on, probe_ts=probe_ts,
-                             data_ts=data_ts, strategy="broadcast")
-        enriched.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch={batch_id}")
-        )
-
-    return handle
-
-
-def stream_asof_enrich(
-    probe_stream: DataFrame,
-    features: DataFrame,
-    on: str,
-    probe_ts: str,
-    data_ts: str,
-    out_path: str,
-    checkpoint_path: str,
-):
-    """Streaming point-in-time enrichment: each micro-batch of probes is
-    as-of joined against the (static) feature table and written — the
-    serving loop of the reference's SearchIndex under continuous query
-    load (SPANNIndex.cpp:293-395). Micro-batches are small by
-    construction, so the join auto-routes to the broadcast strategy
-    (features never shuffle).
-
-    Exactly-once OUTPUT despite foreachBatch's at-least-once invocation:
-    each batch lands in a deterministic `batch=<id>` subdirectory with
-    mode('overwrite'), so a micro-batch replayed after a crash (write
-    succeeded, checkpoint commit didn't) rewrites the same directory
-    instead of appending duplicates. Readers see `batch` as a hive
-    partition column of the output."""
-    handle = _asof_enrich_handler(features, on, probe_ts, data_ts, out_path)
-    return (
-        probe_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _ann_ingest_handler(index_path: str, id_col: str, vec_col: str,
                         max_posting_size: int | None, marker_dir: str,
                         is_pq: bool):
     """foreachBatch handler for stream_ann_ingest; module-level so the
-    replay-idempotency property is directly testable (the same pattern
-    as _asof_enrich_handler).
+    replay-idempotency property is directly testable.
 
     Replay protocol (foreachBatch is at-least-once): a per-batch marker
     file is written BETWEEN the append and the split, which makes every
@@ -504,19 +164,3 @@ def stream_ann_ingest(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def run_available_now(
-    stream_df: DataFrame, sink_table: str, output_mode: str = "complete"
-) -> None:
-    """Drain the stream into an in-memory sink table and block until done
-    (deterministic test/driver harness for availableNow sources).
-    output_mode: 'complete' for aggregations, 'append' for map-only."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

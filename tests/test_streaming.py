@@ -1,435 +1,8 @@
-"""Structured Streaming tests, driven deterministically with availableNow
-file sources (no timing races).
-
-Gates: (1) streaming session_window agrees with the batch gap-trick
-sessionizer on real data; (2) sliding-window stream agrees with the same
-aggregation run in batch; (3) the append sink is exactly-once across a
-restart with the same checkpoint (reference T7 checkpoint/recovery,
-SPANN/Index.h:256-281)."""
+"""The 1-perm MinHash near-dup key (functions/text.py near_dup_key), the
+key a drop-within-watermark dedup groups on: contentless documents must
+each keep a key of their own."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
-
-from sptag_spark.operators.sessionize import session_aggregate
-from sptag_spark.streaming.jobs import (
-    incremental_append,
-    read_events_stream,
-    run_available_now,
-    stream_sessionize,
-    stream_sliding_counts,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    """Re-materialize sf0.001 events as a clean parquet dir (the driver
-    file is a single .parquet file; streaming sources want a directory)."""
-    out = str(tmp_path_factory.mktemp("events_src"))
-    spark.read.parquet(f"{SF}/events.parquet").repartition(4) \
-        .write.mode("overwrite").parquet(out)
-    return out
-
-
-@pytest.fixture(scope="module")
-def events_schema(spark):
-    return spark.read.parquet(f"{SF}/events.parquet").schema
-
-
-def test_stream_sessionize_matches_batch(spark, events_dir, events_schema):
-    stream = read_events_stream(spark, events_dir, events_schema)
-    sess = stream_sessionize(stream, keys=["user_id"], ts="ts",
-                             gap_seconds=1800, watermark="0 seconds")
-    run_available_now(sess, "sess_stream", output_mode="complete")
-    got = {
-        (r["user_id"], r["session_start"].replace(tzinfo=None),
-         r["session_end"].replace(tzinfo=None), r["n_events"])
-        for r in spark.table("sess_stream").collect()
-    }
-    batch = session_aggregate(
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select("event_id", "user_id", "ts"),
-        keys=["user_id"], ts="ts", gap_seconds=1800,
-    )
-    want = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in batch.collect()
-    }
-    # session_window closes at gap >= g, the batch trick at gap > g; real
-    # exact-boundary ties would surface as a diff — assert full equality
-    # and let a tie fail loudly (none exist in the driver corpus).
-    assert got == want
-
-
-def test_stream_sliding_counts_matches_batch(spark, events_dir, events_schema):
-    from pyspark.sql import functions as F
-
-    stream = read_events_stream(spark, events_dir, events_schema)
-    out = stream_sliding_counts(
-        stream, keys=["event_type"], ts="ts",
-        window_seconds=3600, slide_seconds=1800,
-        watermark="0 seconds", value_col="value",
-    )
-    run_available_now(out, "slide_stream", output_mode="complete")
-    got = spark.table("slide_stream")
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    want = (
-        ev.groupBy(F.window("ts", "3600 seconds", "1800 seconds"),
-                   "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.sum("value").alias("sum_value"),
-             F.min("value").alias("min_value"),
-             F.max("value").alias("max_value"))
-        .select("event_type",
-                F.col("window.start").alias("window_start"),
-                F.col("window.end").alias("window_end"),
-                "n_events", "sum_value", "min_value", "max_value")
-    )
-    key = lambda r: (r["event_type"],
-                     r["window_start"].replace(tzinfo=None))
-    g = {key(r): (r["n_events"], r["min_value"], r["max_value"])
-         for r in got.collect()}
-    w = {key(r): (r["n_events"], r["min_value"], r["max_value"])
-         for r in want.collect()}
-    assert g == w
-
-
-def test_stateful_counts_accumulate_across_microbatches(
-        spark, events_dir, events_schema):
-    from sptag_spark.streaming.jobs import stream_stateful_counts
-
-    stream = read_events_stream(spark, events_dir, events_schema,
-                                max_files_per_trigger=1)  # >1 micro-batch
-    out = stream_stateful_counts(stream, key="user_id")
-    q = (
-        out.writeStream.format("memory").queryName("state_stream")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    # in update mode the sink holds one row per (key, batch) emission;
-    # the LAST emission per key is the final accumulated state
-    import pyspark.sql.functions as F
-    final = (
-        spark.table("state_stream")
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"),
-             F.max("n_batches").alias("n_batches"))
-    )
-    got = {r["user_id"]: (r["n_events"], r["n_batches"])
-           for r in final.collect()}
-    want = {r["user_id"]: r["n"]
-            for r in spark.read.parquet(events_dir).groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert {k: v[0] for k, v in got.items()} == want
-    # state genuinely persisted across micro-batches for some key
-    assert any(v[1] > 1 for v in got.values())
-
-
-def test_incremental_append_exactly_once(spark, events_dir, events_schema,
-                                         tmp_path):
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    n_src = spark.read.parquet(events_dir).count()
-
-    q = incremental_append(
-        read_events_stream(spark, events_dir, events_schema,
-                           max_files_per_trigger=1),
-        out, ckpt, partition_by=["event_type"],
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(out).count() == n_src
-
-    # restart with the same checkpoint: nothing new -> no duplicates
-    q2 = incremental_append(
-        read_events_stream(spark, events_dir, events_schema), out, ckpt
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(out).count() == n_src
-    # partition pruning works on the sink layout
-    one = spark.read.parquet(out).filter("event_type = 'purchase'")
-    assert one.count() == spark.read.parquet(events_dir) \
-        .filter("event_type = 'purchase'").count()
-
-
-def test_stream_asof_enrich_matches_batch(spark, events_dir, events_schema,
-                                          tmp_path):
-    from pyspark.sql import functions as F
-
-    from sptag_spark.operators.asof import asof_join
-    from sptag_spark.streaming.jobs import stream_asof_enrich
-
-    ev = spark.read.parquet(events_dir)
-    features = ev.filter("event_type='click'").select(
-        "user_id", "ts", F.col("value").alias("click_value"))
-    probes_dir = str(tmp_path / "probes")
-    ev.filter("event_type='purchase'").select("event_id", "user_id", "ts") \
-        .repartition(3).write.parquet(probes_dir)
-
-    out = str(tmp_path / "enriched")
-    q = stream_asof_enrich(
-        spark.readStream.schema(
-            spark.read.parquet(probes_dir).schema
-        ).option("maxFilesPerTrigger", 1).parquet(probes_dir),
-        features, on="user_id", probe_ts="ts", data_ts="ts",
-        out_path=out, checkpoint_path=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(out)
-    want = asof_join(
-        spark.read.parquet(probes_dir), features,
-        on="user_id", probe_ts="ts", data_ts="ts",
-    )
-    # contract strictness (VERDICT r4 #7): EVERY column of the batch
-    # asof output, full row multiset — not a projected key comparison.
-    # The sink adds its per-batch overwrite partition column (`batch`),
-    # which carries no asof semantics.
-    cols = sorted(want.columns)
-    assert set(cols) <= set(got.columns)
-    assert sorted(set(got.columns) - set(cols)) == ["batch"]
-    from collections import Counter
-
-    assert Counter(map(tuple, got.select(*cols).collect())) \
-        == Counter(map(tuple, want.select(*cols).collect()))
-
-
-def test_watermark_drops_late_events(spark, tmp_path):
-    """Late data beyond the watermark must NOT reopen a finalized session
-    (reference stale-version rejection, ExtraDynamicSearcher.h:680). Two
-    micro-batches: batch 2 carries an event hours older than batch 1's
-    max event time; with a tight watermark its session was already
-    finalized, so in append mode the late event cannot merge into it."""
-    import datetime as dt
-
-    from sptag_spark.streaming.jobs import stream_sessionize
-
-    base = dt.datetime(2025, 1, 1, 12, 0, 0)
-    src = str(tmp_path / "src")
-    schema_df = spark.createDataFrame(
-        [(1, 7, base)], ["event_id", "user_id", "ts"])
-    # batch 1: a session for user 7 plus a much later event that advances
-    # the stream's max event time far past the watermark
-    spark.createDataFrame(
-        [(1, 7, base), (2, 7, base + dt.timedelta(minutes=5)),
-         (3, 8, base + dt.timedelta(hours=10))],
-        ["event_id", "user_id", "ts"],
-    ).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(schema_df.schema) \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    sess = stream_sessionize(stream, keys=["user_id"], ts="ts",
-                             gap_seconds=1800, watermark="10 minutes")
-    out = str(tmp_path / "out")
-    q = (sess.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination()
-    first = spark.read.parquet(out)
-    u7 = first.filter("user_id = 7").collect()
-    assert len(u7) == 1 and u7[0]["n_events"] == 2  # session finalized
-
-    # batch 2: an event INSIDE user 7's old session window, but hours
-    # late — beyond the watermark, so the finalized session must not grow
-    spark.createDataFrame(
-        [(9, 7, base + dt.timedelta(minutes=6))],
-        ["event_id", "user_id", "ts"],
-    ).coalesce(1).write.mode("append").parquet(src)
-    q2 = (sess.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", str(tmp_path / "ck"))
-          .outputMode("append").trigger(availableNow=True).start())
-    q2.awaitTermination()
-    after = spark.read.parquet(out).filter("user_id = 7").collect()
-    assert all(r["n_events"] <= 2 for r in after)
-    assert sum(r["n_events"] for r in after) <= 3  # never merged into 3
-
-
-def test_asof_enrich_batch_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: replaying a micro-batch (same
-    batch_id) must not duplicate output rows — each batch overwrites its
-    own batch=<id> directory."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from sptag_spark.streaming.jobs import _asof_enrich_handler
-
-    t0 = dt.datetime(2025, 1, 1)
-    probes = spark.createDataFrame(
-        [(1, 7, t0), (2, 7, t0 + dt.timedelta(minutes=1))],
-        ["event_id", "user_id", "ts"])
-    features = spark.createDataFrame(
-        [(7, t0 - dt.timedelta(minutes=5), 3.5)],
-        ["user_id", "ts", "click_value"])
-    out = str(tmp_path / "enriched")
-    handle = _asof_enrich_handler(features, "user_id", "ts", "ts", out)
-    handle(probes, 0)
-    n1 = spark.read.parquet(out).count()
-    handle(probes, 0)  # crash-replay of the same micro-batch
-    assert spark.read.parquet(out).count() == n1 == 2
-
-
-def test_stream_exact_dedup_matches_batch(spark, tmp_path):
-    """Duplicates within AND across micro-batches collapse to one
-    survivor per fingerprint; the survivor fp set equals the batch
-    operator's canonical set."""
-    import datetime as dt
-
-    from sptag_spark.operators.dedup import exact_dedup
-    from sptag_spark.streaming.jobs import (
-        run_available_now, stream_exact_dedup,
-    )
-
-    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
-    texts = ["alpha beta gamma", "delta epsilon", "alpha beta gamma",
-             "zeta eta", "delta  epsilon!",  # normalizes equal to #2
-             "theta iota"]
-    rows = [(i, texts[i], t0 + dt.timedelta(minutes=i))
-            for i in range(len(texts))]
-    src = str(tmp_path / "docs")
-    df = spark.createDataFrame(rows, ["doc_id", "text", "ts"])
-    # two files -> with maxFilesPerTrigger=1, dups straddle micro-batches
-    df.filter("doc_id < 3").coalesce(1).write.parquet(src)
-    df.filter("doc_id >= 3").coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(df.schema) \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    out = stream_exact_dedup(stream)
-    run_available_now(out, "dedup_sink", output_mode="append")
-    got = spark.sql("SELECT * FROM dedup_sink").collect()
-
-    batch = exact_dedup(df).filter("is_duplicate = 0").collect()
-    assert {r["fp"] for r in got} == {r["fp"] for r in batch}
-    assert len(got) == len(batch) == 4
-
-
-def test_stream_corpus_gate_matches_batch(spark, tmp_path_factory):
-    """The stateless corpus gate (quality filter + deterministic
-    sampling) admits exactly the same rows on a stream as in batch."""
-    from pyspark.sql import functions as F
-
-    from sptag_spark.functions.text import with_text_stats
-    from sptag_spark.operators.corpus import stratified_sample
-    from sptag_spark.streaming.jobs import (
-        run_available_now, stream_corpus_gate,
-    )
-
-    docs_dir = str(tmp_path_factory.mktemp("docs_src"))
-    batch_docs = spark.read.parquet(f"{SF}/documents.parquet")
-    batch_docs.repartition(4).write.mode("overwrite").parquet(docs_dir)
-    schema = batch_docs.schema
-
-    rates = {"src0": 600, "src1": 250}
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
-    gated = stream_corpus_gate(stream, rates, min_quality=0.4,
-                               default_rate=100)
-    run_available_now(gated, "gate_stream", output_mode="append")
-    got = {(r["doc_id"], r["sample_key"])
-           for r in spark.table("gate_stream").collect()}
-
-    want_df = stratified_sample(
-        with_text_stats(batch_docs).filter("quality_score >= 0.4"),
-        rates, default_rate=100,
-    )
-    want = {(r["doc_id"], r["sample_key"]) for r in want_df.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_stream_near_dup_dedup_matches_batch(spark, tmp_path):
-    """VERDICT r2 #8: the streaming near-dup gate (1-perm MinHash key,
-    dropDuplicatesWithinWatermark) must collapse exact AND near dups
-    within the watermark — across micro-batch boundaries — and agree
-    with the batch keep-first twin on the survivor KEY set."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from sptag_spark.streaming.jobs import (
-        near_dup_key, run_available_now, stream_near_dup_dedup,
-    )
-
-    t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
-    texts = [
-        "the quick brown fox jumps over the lazy dog",      # 0
-        "pack my box with five dozen liquor jugs",          # 1
-        "The quick brown fox  jumps over the lazy dog!",    # 2 exact-ish of 0
-        "the quick brown fox jumps over the lazy cat",      # 3 near of 0
-        "sphinx of black quartz judge my vow",              # 4
-        "pack my box with five dozen liquor jugs",          # 5 exact of 1
-        None,                                               # 6 null text
-        None,                                               # 7 null text
-    ]
-    rows = [(i, texts[i], t0 + dt.timedelta(minutes=i))
-            for i in range(len(texts))]
-    df = spark.createDataFrame(rows, ["doc_id", "text", "ts"])
-    src = str(tmp_path / "docs")
-    df.filter("doc_id < 4").coalesce(1).write.parquet(src)
-    df.filter("doc_id >= 4").coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(df.schema) \
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    out = stream_near_dup_dedup(stream, watermark="2 hours")
-    run_available_now(out, "nd_sink", output_mode="append")
-    got = spark.sql("SELECT * FROM nd_sink").collect()
-
-    batch_keys = df.withColumn(
-        "nd_key", near_dup_key(F.col("text"), F.col("doc_id"))
-    )
-    batch = batch_keys.groupBy("nd_key").agg(
-        F.min("doc_id").alias("doc_id"))
-    assert {r["nd_key"] for r in got} == \
-        {r["nd_key"] for r in batch.collect()}
-    # doc 2 (exact dup) collapsed with 0; doc 5 with 1; the two null
-    # docs each survive (sentinel keys); doc 3 near-dup shares the
-    # 1-perm minhash of doc 0 with prob ~J — verify against the actual
-    # key equality rather than assuming:
-    kmap = {r["doc_id"]: r["nd_key"] for r in batch_keys.collect()}
-    assert kmap[0] == kmap[2] and kmap[1] == kmap[5]
-    assert kmap[6] != kmap[7]
-    survivors = {r["doc_id"] for r in got}
-    assert 2 not in survivors and 5 not in survivors
-    assert {6, 7} <= survivors
-
-
-def test_stream_corpus_gate_near_dup_stage_matches_batch(spark, tmp_path):
-    """The composed streaming prep (quality -> sample -> near-dup drop)
-    equals the batch pipeline on admitted keys."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from sptag_spark.functions.text import with_text_stats
-    from sptag_spark.operators.corpus import stratified_sample
-    from sptag_spark.streaming.jobs import (
-        near_dup_key, run_available_now, stream_corpus_gate,
-    )
-
-    t0 = dt.datetime(2025, 1, 1)
-    base = spark.read.parquet(f"{SF}/documents.parquet").limit(200)
-    docs = base.withColumn(
-        "ts", F.to_timestamp(F.lit(t0.isoformat()))
-        + F.make_interval(secs=F.col("doc_id").cast("double"))
-    )
-    src = str(tmp_path / "docs")
-    docs.repartition(3).write.parquet(src)
-    rates = {"src0": 800, "src1": 500}
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    gated = stream_corpus_gate(stream, rates, min_quality=0.3,
-                               default_rate=300,
-                               near_dup_within="2 hours")
-    run_available_now(gated, "gate_nd_sink", output_mode="append")
-    got = {r["nd_key"] for r in spark.table("gate_nd_sink").collect()}
-
-    want_df = stratified_sample(
-        with_text_stats(docs).filter("quality_score >= 0.3"),
-        rates, default_rate=300,
-    ).withColumn("nd_key", near_dup_key(F.col("text"), F.col("doc_id")))
-    want = {r["nd_key"] for r in
-            want_df.groupBy("nd_key").agg(F.min("doc_id")).collect()}
-    assert got == want and len(got) > 0
 
 
 def test_near_dup_key_contentless_docs_never_collapse(spark):
@@ -437,7 +10,7 @@ def test_near_dup_key_contentless_docs_never_collapse(spark):
     key — md5('') must not merge every empty doc into one survivor."""
     from pyspark.sql import functions as F
 
-    from sptag_spark.streaming.jobs import near_dup_key
+    from sptag_spark.functions.text import near_dup_key
 
     df = spark.createDataFrame(
         [(0, None), (1, ""), (2, "   "), (3, ""), (4, "real text here")],

@@ -19,7 +19,7 @@ from sptag_spark.functions.tokens import (
     with_token_features_expr,
 )
 from sptag_spark.pipeline import featurize, run_pipeline, serve_asof
-from sptag_spark.sources.manifest import run_resumable
+from sptag_spark.sources.manifest import ManifestLayoutError, run_resumable
 
 N_DOCS = 300
 
@@ -180,6 +180,22 @@ def test_resume_idempotent_digest(spark, corpus, tmp_path):
     assert stats_b["buckets_done"] == 8
     assert stats_a["rows"] == stats_b["rows"]
     assert stats_a["digest"] == stats_b["digest"]
+
+
+@pytest.mark.parametrize("changed", [{"n_buckets": 8}, {"key": "source"}])
+def test_resume_rejects_changed_layout(spark, corpus, tmp_path, changed):
+    """Buckets cut under one (key, n_buckets) never mix with another's:
+    a resume under a changed layout raises instead of returning extra
+    rows."""
+    def source(s):
+        return s.read.parquet(str(corpus / "sequences.parquet"))
+
+    out = str(tmp_path / "out")
+    layout = {"key": "doc_id", "n_buckets": 4}
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, source, featurize, out, fail_after=2, **layout)
+    with pytest.raises(ManifestLayoutError, match="key='doc_id', n_buckets=4;"):
+        run_resumable(spark, source, featurize, out, **{**layout, **changed})
 
 
 def test_run_pipeline_metrics(spark, corpus, tmp_path):
