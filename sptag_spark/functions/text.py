@@ -1,12 +1,21 @@
-"""Text-analysis kernels for the documents table.
+"""Text-analysis functions for the documents table.
 
 The training-data-pipeline layer the reference's metadata machinery
 implies but never ships (MetadataSet is an opaque byte payload,
 AnnService/inc/Core/MetadataSet.h:13-45): tokenization stats, quality
-scoring, language-ID heuristics, and document fingerprinting — all as
-JVM-side column expressions (whole-stage codegen, zero Python in the hot
-path), each with an exact ANSI-SQL twin so the DuckDB oracle can verify
-values hash-identically.
+scoring, language-ID heuristics, and the normalize/shingle rules that
+document fingerprinting and dedup are built on. Each rule exists twice,
+side by side in this module:
+
+- as a JVM column expression (`normalize_text`, `word_shingles`,
+  `ws_tokens` and the features built on them), which the contract's
+  DuckDB oracles mirror term for term and which tests compare every
+  kernel against;
+- as a Python twin (`py_normalize_text`, `py_word_shingles`,
+  `py_ws_tokens`), which every Arrow kernel calls through `map_texts`.
+  The kernels are the hot paths: per-row string work flat-lines across
+  threads in one JVM, while Python workers scale across cores
+  (CLAUDE.md rule 13).
 
 Determinism rules (see __spark_entry__ module docstring):
 - counts/ratios derive from integer token counts; ratios are single
@@ -17,8 +26,13 @@ Determinism rules (see __spark_entry__ module docstring):
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
 
 # Marker-word sets per language for the n-gram/stopword language-ID
 # heuristic. On real corpora these are the classic high-frequency function
@@ -37,11 +51,17 @@ STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is")
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space
 # symbols — the standard GPT-2-style pre-split shape.
 BPE_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
+PUNCT_PATTERN = "[^a-zA-Z0-9\\s]"
+# Java's \s without UNICODE_CHARACTER_CLASS is the ASCII set [ \t\n\x0b\f\r],
+# the same set as Python's \s under re.ASCII: the Python twins compile
+# these patterns with re.ASCII.
+WS_PATTERN = "\\s+"
+NON_NORM_PATTERN = "[^a-z0-9\\s]"
 
 
 def ws_tokens(text: Column) -> Column:
     """Whitespace tokenization (split on runs of whitespace)."""
-    return F.split(F.trim(text), "\\s+")
+    return F.split(F.trim(text), WS_PATTERN)
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -56,7 +76,7 @@ def stopword_count(text: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Colu
 def punct_count(text: Column) -> Column:
     """Characters outside [a-zA-Z0-9 and whitespace]."""
     return F.length(text) - F.length(
-        F.regexp_replace(text, "[^a-zA-Z0-9\\s]", "")
+        F.regexp_replace(text, PUNCT_PATTERN, "")
     )
 
 
@@ -166,65 +186,34 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     frozensets — and Python workers scale across cores where the JVM
     split/string churn flat-lines (rule 13). Measured 7.7 s -> ~0.6 s
     at 50k docs / 32 cores."""
-    import pyarrow as pa
-
     langs = list(LANG_MARKERS)           # insertion order: de, en, es, fr
     marker_sets = [frozenset(LANG_MARKERS[lg]) for lg in langs]
-    sorted_idx = [langs.index(lg) for lg in sorted(langs)]
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
-    ) + ", " + ", ".join(f"score_{lg} bigint" for lg in langs) \
-        + ", lang_guess string"
-    in_names = [f.name for f in df.schema]
-    tidx = in_names.index(text_col)
-    sorted_langs = sorted(langs)
+    by_name = sorted(range(len(langs)), key=langs.__getitem__)
 
-    def kernel(batches):
-        import re
+    def row(text):
+        toks = py_ws_tokens(text)
+        if toks is None:
+            return [(*[None] * len(langs), "und")]
+        scores = [sum(t in ms for t in toks) for ms in marker_sets]
+        best = max(scores)
+        # lexicographically-first language achieving the max
+        guess = next(langs[i] for i in by_name if scores[i] == best) \
+            if best else "und"
+        return [(*scores, guess)]
 
-        r_split = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            n_langs = len(marker_sets)
-            score_cols: list[list] = [[] for _ in range(n_langs)]
-            guesses: list = []
-            for txt in batch.column(tidx).to_pylist():
-                if txt is None:
-                    for c in score_cols:
-                        c.append(None)
-                    guesses.append("und")
-                    continue
-                toks = r_split.split(txt.strip(" "))
-                scores = [sum(1 for t in toks if t in ms)
-                          for ms in marker_sets]
-                for c, s in zip(score_cols, scores):
-                    c.append(s)
-                best = max(scores)
-                if best == 0:
-                    guesses.append("und")
-                else:
-                    # lexicographically-first language achieving the max
-                    for si, lg in zip(sorted_idx, sorted_langs):
-                        if scores[si] == best:
-                            guesses.append(lg)
-                            break
-            yield pa.record_batch(
-                list(batch.columns)
-                + [pa.array(c, pa.int64()) for c in score_cols]
-                + [pa.array(guesses, pa.string())],
-                names=in_names + [f"score_{lg}" for lg in langs]
-                + ["lang_guess"],
-            )
-
-    from sptag_spark.operators.dedup import _ensure_parallel
-
-    return _ensure_parallel(df).mapInArrow(kernel, schema=schema)
+    return map_texts(
+        df, text_col, df.columns,
+        [(f"score_{lg}", pa.int64()) for lg in langs]
+        + [("lang_guess", pa.string())],
+        row,
+    )
 
 
 def normalize_text(text: Column) -> Column:
     """Canonical form for dedup: lowercase, strip non-alnum, collapse
     whitespace."""
-    cleaned = F.regexp_replace(F.lower(text), "[^a-z0-9\\s]", " ")
-    return F.trim(F.regexp_replace(cleaned, "\\s+", " "))
+    cleaned = F.regexp_replace(F.lower(text), NON_NORM_PATTERN, " ")
+    return F.trim(F.regexp_replace(cleaned, WS_PATTERN, " "))
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
@@ -300,6 +289,103 @@ def near_dup_key(text_col: Column, id_col: Column, n: int = 3) -> Column:
         F.coalesce(shingle_min_fingerprint(text_col, n), sentinel))
 
 
+# ---------------------------------------------------------------------------
+# Python twins of the JVM rules, and the Arrow plumbing the kernels share
+# ---------------------------------------------------------------------------
+
+_WS_RE = re.compile(WS_PATTERN, re.ASCII)
+_NON_NORM_RE = re.compile(NON_NORM_PATTERN, re.ASCII)
+_PUNCT_RE = re.compile(PUNCT_PATTERN, re.ASCII)
+_BPE_RE = re.compile(BPE_PATTERN, re.ASCII)
+
+
+def py_ws_tokens(text: str | None) -> list[str] | None:
+    """ws_tokens in Python: Spark's trim strips spaces only (not tabs or
+    newlines, which therefore give empty edge tokens), then the ASCII
+    whitespace split. NULL stays NULL."""
+    return None if text is None else _WS_RE.split(text.strip(" "))
+
+
+def py_normalize_text(text: str | None) -> str | None:
+    """normalize_text in Python, char for char: lowercase, every char
+    outside [a-z0-9] and ASCII whitespace (non-ASCII letters included)
+    becomes a space, whitespace runs collapse to one space, trimmed.
+    NULL stays NULL."""
+    if text is None:
+        return None
+    return _WS_RE.sub(" ", _NON_NORM_RE.sub(" ", text.lower())).strip(" ")
+
+
+def py_word_shingles(norm: str | None, n: int = 3) -> list[str | None]:
+    """word_shingles in Python, over an already NORMALIZED text (the
+    kernels that also hash the whole text normalize once): the distinct
+    n-word shingles in first-occurrence order, as array_distinct keeps
+    them; fewer than n words gives [norm]; NULL gives [None]."""
+    if norm is None:
+        return [None]
+    toks = norm.split(" ")
+    if len(toks) < n:
+        return [norm]
+    return list(dict.fromkeys(
+        " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)))
+
+
+def _ensure_parallel(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+    """CPU-dense per-row work (thousands of md5 calls per row) dies on
+    parallelism, not data volume: a small parquet file arrives as ONE
+    input split and pins a single core. Repartition only when the scan is
+    narrower than the cluster — at real scale input splits >> cores and
+    this is a no-op (no shuffle added)."""
+    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
+
+
+def map_texts(df: DataFrame, text_col: str, carry: list[str],
+              fields: list[tuple[str, pa.DataType]], row) -> DataFrame:
+    """Run `row` over every `text_col` cell of `df` in Python Arrow
+    workers (after _ensure_parallel) — the plumbing of every text kernel.
+
+    Returns the `carry` columns, with their input names and types, then
+    `fields`. row(text) gets one cell (None for NULL) and returns a list
+    of output rows, each a tuple of `fields` values: one row per text for
+    the per-document kernels, several for a kernel that explodes. The
+    carried columns follow each output row by take() on the source row
+    index, which keeps their exact Arrow type and nulls: a column rebuilt
+    with pa.array(values) infers int64 and crashes int or string id
+    schemas at read time."""
+    names = list(carry) + ([] if text_col in carry else [text_col])
+    src = _ensure_parallel(df).select(*names)
+    tidx, k = names.index(text_col), len(carry)
+    schema = pa.schema(fields)
+    ddl = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema][:k]
+        + [f"`{f.name}` {from_arrow_type(f.type).simpleString()}"
+           for f in schema])
+
+    def kernel(batches):
+        for batch in batches:
+            rows, src_idx = [], []
+            for i, text in enumerate(batch.column(tidx).to_pylist()):
+                out = row(text)
+                rows += out
+                src_idx += [i] * len(out)
+            take = pa.array(src_idx, pa.int32())
+            values = list(zip(*rows)) or [()] * len(schema)
+            yield pa.record_batch(
+                [batch.column(j).take(take) for j in range(k)]
+                + [pa.array(v, f.type) for v, f in zip(values, schema)],
+                names=list(carry) + schema.names,
+            )
+
+    return src.mapInArrow(kernel, schema=ddl)
+
+
+# ---------------------------------------------------------------------------
+# Arrow kernels
+# ---------------------------------------------------------------------------
+
 def fingerprints_arrow(
     df: "DataFrame", id_col: str = "doc_id", text_col: str = "text",
     n: int = 3,
@@ -311,51 +397,16 @@ def fingerprints_arrow(
     in one JVM (see operators/dedup.py minhash_signature_arrow), while
     Python workers bring process-level allocators. NULL text -> NULL fp
     and NULL minhash1 (md5(null)/min-over-[null] expression semantics)."""
-    import pyarrow as pa
+    def row(text):
+        norm = py_normalize_text(text)
+        if norm is None:
+            return [(None, None)]
+        return [(hashlib.md5(norm.encode()).hexdigest(),
+                 min(hashlib.md5(s.encode()).hexdigest()
+                     for s in py_word_shingles(norm, n)))]
 
-    nn = n
-
-    def kernel(batches):
-        import hashlib
-        import re
-
-        r_punct = re.compile(r"[^a-z0-9\s]", re.ASCII)
-        r_ws = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            fps, mins = [], []
-            for txt in batch.column("_text").to_pylist():
-                if txt is None:
-                    fps.append(None)
-                    mins.append(None)
-                    continue
-                nm = r_ws.sub(" ", r_punct.sub(" ", txt.lower())).strip()
-                fps.append(hashlib.md5(nm.encode("utf-8")).hexdigest())
-                toks = nm.split(" ")
-                if len(toks) >= nn:
-                    shingles = {
-                        " ".join(toks[i:i + nn])
-                        for i in range(len(toks) - nn + 1)
-                    }
-                else:
-                    shingles = {nm}
-                mins.append(min(
-                    hashlib.md5(s.encode("utf-8")).hexdigest()
-                    for s in shingles
-                ))
-            yield pa.record_batch(
-                [batch.column("_id"), pa.array(fps, pa.string()),
-                 pa.array(mins, pa.string())],
-                names=["_id", "fp", "minhash1"],
-            )
-
-    from sptag_spark.operators.dedup import _ensure_parallel
-
-    src = _ensure_parallel(df).select(F.col(id_col).alias("_id"),
-                                      F.col(text_col).alias("_text"))
-    id_type = df.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(
-        kernel, schema=f"_id {id_type}, fp string, minhash1 string"
-    ).withColumnRenamed("_id", id_col)
+    return map_texts(df, text_col, [id_col],
+                     [("fp", pa.string()), ("minhash1", pa.string())], row)
 
 
 def doc_fingerprint_arrow(
@@ -363,40 +414,15 @@ def doc_fingerprint_arrow(
 ) -> "DataFrame":
     """(id, text) -> (id, fp): the md5 content fingerprint alone — the
     fp half of fingerprints_arrow without the per-shingle MinHash work.
-    Same normalize twin (Python re.ASCII, char-identical to the JVM
-    normalize_text — tested), same NULL semantics (NULL text -> NULL
-    fp). exact_dedup's hot path: one Python md5 per doc scales across
-    cores where the JVM regex+md5 string churn flat-lines (CLAUDE.md
-    rule 13)."""
-    import pyarrow as pa
+    Same NULL semantics (NULL text -> NULL fp). exact_dedup's hot path:
+    one Python md5 per doc scales across cores where the JVM regex+md5
+    string churn flat-lines (CLAUDE.md rule 13)."""
+    def row(text):
+        norm = py_normalize_text(text)
+        return [(None if norm is None
+                 else hashlib.md5(norm.encode()).hexdigest(),)]
 
-    def kernel(batches):
-        import hashlib
-        import re
-
-        r_punct = re.compile(r"[^a-z0-9\s]", re.ASCII)
-        r_ws = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            fps = [
-                None if txt is None else hashlib.md5(
-                    r_ws.sub(" ", r_punct.sub(" ", txt.lower())).strip()
-                    .encode("utf-8")
-                ).hexdigest()
-                for txt in batch.column("_text").to_pylist()
-            ]
-            yield pa.record_batch(
-                [batch.column("_id"), pa.array(fps, pa.string())],
-                names=["_id", "fp"],
-            )
-
-    from sptag_spark.operators.dedup import _ensure_parallel
-
-    src = _ensure_parallel(df).select(F.col(id_col).alias("_id"),
-                                      F.col(text_col).alias("_text"))
-    id_type = df.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(
-        kernel, schema=f"_id {id_type}, fp string"
-    ).withColumnRenamed("_id", id_col)
+    return map_texts(df, text_col, [id_col], [("fp", pa.string())], row)
 
 
 def with_text_stats_arrow(
@@ -407,78 +433,31 @@ def with_text_stats_arrow(
     empty text -> NULL punct_ratio/quality_score) and thread-scalable:
     the JVM split/filter/array churn is the single-JVM scaling
     bottleneck (see operators/dedup.py minhash_signature_arrow).
-    Tokenization twins: Java trim == strip(chars <= U+0020); Java \\s ==
-    Python re.ASCII \\s; the BPE/punct regexes are ASCII classes."""
-    import pyarrow as pa
-
-    stat_fields = (
-        "n_ws_tokens bigint, n_bpe_tokens bigint, n_distinct_tokens "
-        "bigint, n_stopwords bigint, n_punct bigint, avg_word_len "
-        "double, distinct_ratio double, stopword_ratio double, "
-        "punct_ratio double, quality_score double"
-    )
-    schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
-    ) + ", " + stat_fields
+    Tokenization is py_ws_tokens (Spark's trim strips spaces only); the
+    BPE and punctuation patterns are ASCII classes, compiled re.ASCII."""
     sw = frozenset(STOPWORDS)
-    in_names = [f.name for f in df.schema]  # plain list: the kernel must
-    # not reference `df` (it would drag SparkContext into the closure)
-    tidx = in_names.index(text_col)
 
-    def kernel(batches):
-        import re
+    def row(text):
+        toks = py_ws_tokens(text)
+        if toks is None:
+            return [(None,) * 10]
+        n = len(toks)
+        nd = len(set(toks))
+        ns = sum(t in sw for t in toks)
+        n_punct = len(_PUNCT_RE.findall(text))
+        dr, sr = nd / n, ns / n
+        pr = n_punct / len(text) if text else None
+        q = None if pr is None else dr * 0.4 + sr * 0.4 + (1.0 - pr) * 0.2
+        return [(n, len(_BPE_RE.findall(text)), nd, ns, n_punct,
+                 sum(map(len, toks)) / n, dr, sr, pr, q)]
 
-        r_split = re.compile(r"\s+", re.ASCII)
-        r_bpe = re.compile(BPE_PATTERN, re.ASCII)
-        r_alnum = re.compile(r"[^a-zA-Z0-9\s]", re.ASCII)
-        for batch in batches:
-            cols = {k: [] for k in (
-                "nw", "nb", "nd", "ns", "np", "avg", "dr", "sr", "pr", "q",
-            )}
-            for txt in batch.column(tidx).to_pylist():
-                if txt is None:
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                toks = r_split.split(txt.strip(" "))
-                n = len(toks)
-                nd = len(set(toks))
-                ns = sum(1 for t in toks if t in sw)
-                np_ = len(r_alnum.findall(txt))
-                nc = len(txt)
-                swl = sum(len(t) for t in toks)
-                avg = float(swl) / n
-                dr = float(nd) / n
-                sr = float(ns) / n
-                pr = float(np_) / nc if nc else None
-                q = (dr * 0.4 + sr * 0.4 + (1.0 - pr) * 0.2) \
-                    if pr is not None else None
-                for k, v in (("nw", n), ("nb", len(r_bpe.findall(txt))),
-                             ("nd", nd), ("ns", ns), ("np", np_),
-                             ("avg", avg), ("dr", dr), ("sr", sr),
-                             ("pr", pr), ("q", q)):
-                    cols[k].append(v)
-            yield pa.record_batch(
-                list(batch.columns) + [
-                    pa.array(cols["nw"], pa.int64()),
-                    pa.array(cols["nb"], pa.int64()),
-                    pa.array(cols["nd"], pa.int64()),
-                    pa.array(cols["ns"], pa.int64()),
-                    pa.array(cols["np"], pa.int64()),
-                    pa.array(cols["avg"], pa.float64()),
-                    pa.array(cols["dr"], pa.float64()),
-                    pa.array(cols["sr"], pa.float64()),
-                    pa.array(cols["pr"], pa.float64()),
-                    pa.array(cols["q"], pa.float64()),
-                ],
-                names=in_names + [
-                    "n_ws_tokens", "n_bpe_tokens", "n_distinct_tokens",
-                    "n_stopwords", "n_punct", "avg_word_len",
-                    "distinct_ratio", "stopword_ratio", "punct_ratio",
-                    "quality_score",
-                ],
-            )
-
-    from sptag_spark.operators.dedup import _ensure_parallel
-
-    return _ensure_parallel(df).mapInArrow(kernel, schema=schema)
+    return map_texts(
+        df, text_col, df.columns,
+        [(c, pa.int64()) for c in ("n_ws_tokens", "n_bpe_tokens",
+                                   "n_distinct_tokens", "n_stopwords",
+                                   "n_punct")]
+        + [(c, pa.float64()) for c in ("avg_word_len", "distinct_ratio",
+                                       "stopword_ratio", "punct_ratio",
+                                       "quality_score")],
+        row,
+    )

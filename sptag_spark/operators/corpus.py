@@ -4,8 +4,11 @@ packing, stratified sampling / mixture weighting, and repetition stats.
 These are the dataset-preparation steps a 100-TB LLM pipeline runs after
 dedup/quality filtering (the layer the reference's metadata machinery
 implies but never ships — its MetadataSet is an opaque payload,
-AnnService/inc/Core/MetadataSet.h:13-45). Everything here is JVM-side
-column expressions / relational plans with an exact ANSI-SQL twin, so the
+AnnService/inc/Core/MetadataSet.h:13-45). Shingling and the repetition
+signal run in Python Arrow kernels on the shared text core of
+functions/text.py (the JVM string churn flat-lines across threads,
+CLAUDE.md rule 13); the joins, aggregates, packing and sampling are
+relational plans. Every operator has an exact ANSI-SQL twin, so the
 DuckDB oracle verifies values hash-identically:
 
 - counts/offsets are exact integers; ratios are single double divisions;
@@ -22,10 +25,19 @@ sees more than one block.
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sptag_spark.functions.text import word_shingles, ws_tokens
+from sptag_spark.functions.text import (
+    map_texts,
+    py_normalize_text,
+    py_word_shingles,
+    py_ws_tokens,
+    ws_tokens,
+)
 
 
 def _md5_key(col: Column, salt: str, denom: int) -> Column:
@@ -52,65 +64,16 @@ def _exploded_shingles_arrow(
     [null]) but thread-scalable (the JVM string churn law, see
     dedup.minhash_signature_arrow). id_col=None emits shingle rows with
     no id column at all (corpus-wide vocabulary passes)."""
-    import pyarrow as pa
+    def row(text):
+        sh = py_word_shingles(py_normalize_text(text), n)
+        return [(len(sh), s) for s in sh] if with_count else [(s,) for s in sh]
 
-    nn = n
-    emit_id = id_col is not None
-
-    def kernel(batches):
-        import re
-
-        r_punct = re.compile(r"[^a-z0-9\s]", re.ASCII)
-        r_ws = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            out_idx, out_counts, out_sh = [], [], []
-            for ridx, txt in enumerate(batch.column("_text").to_pylist()):
-                if txt is None:
-                    shingles = [None]
-                else:
-                    nm = r_ws.sub(" ", r_punct.sub(" ", txt.lower())) \
-                        .strip()
-                    toks = nm.split(" ")
-                    if len(toks) >= nn:
-                        shingles = list(dict.fromkeys(
-                            " ".join(toks[i:i + nn])
-                            for i in range(len(toks) - nn + 1)
-                        ))
-                    else:
-                        shingles = [nm]
-                if emit_id:
-                    out_idx.extend([ridx] * len(shingles))
-                if with_count:
-                    out_counts.extend([len(shingles)] * len(shingles))
-                out_sh.extend(shingles)
-            # take() replicates the ORIGINAL id column by row index —
-            # exact type (int/long/string) and null preservation, unlike
-            # pa.array(values) whose inferred int64 crashes non-bigint
-            # id schemas at read time
-            cols, names = [], []
-            if emit_id:
-                cols.append(batch.column("_id")
-                            .take(pa.array(out_idx, pa.int32())))
-                names.append("_id")
-            if with_count:
-                cols.append(pa.array(out_counts, pa.int64()))
-                names.append("_n_sh")
-            cols.append(pa.array(out_sh, pa.string()))
-            names.append("_sh")
-            yield pa.record_batch(cols, names=names)
-
-    from sptag_spark.operators.dedup import _ensure_parallel
-
-    if emit_id:
-        src = _ensure_parallel(df).select(
-            F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-        )
-        head = f"_id {df.schema[id_col].dataType.simpleString()}, "
-    else:
-        src = _ensure_parallel(df).select(F.col(text_col).alias("_text"))
-        head = ""
-    mid = "_n_sh long, " if with_count else ""
-    return src.mapInArrow(kernel, schema=f"{head}{mid}_sh string")
+    fields = ([("_n_sh", pa.int32())] if with_count else []) \
+        + [("_sh", pa.string())]
+    if id_col is None:
+        return map_texts(df, text_col, [], fields, row)
+    return map_texts(df, text_col, [id_col], fields, row) \
+        .withColumnRenamed(id_col, "_id")
 
 
 def contamination_report(
@@ -427,85 +390,7 @@ def weighted_mix(
 # Repetition stats (Gopher-style quality signal)
 # ---------------------------------------------------------------------------
 
-def repetition_stats_arrow(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Fused Python kernel for the repetition signal — value-identical to
-    the relational form (tested) and thread-scalable: the bigram
-    explode + string groupBy churns JVM strings, which flat-lines across
-    threads in one JVM (see dedup.minhash_signature_arrow).
-
-    Exact-twin notes: tokenization is Java-trim (strip chars <= U+0020)
-    + re.ASCII \\s+ split, both char-identical to ws_tokens; the argmax
-    tiebreak is min((-count, bigram)) = highest count then
-    lexicographically smallest bigram, identical to the SQL oracle's
-    row_number ordering; rep_ratio is one float division (IEEE-identical
-    to Spark's double division)."""
-    import pyarrow as pa
-
-    def kernel(batches):
-        import re
-        from collections import Counter
-
-        r_split = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            nb, tb, tc, rr = [], [], [], []
-            for txt in batch.column("_text").to_pylist():
-                if txt is None:
-                    # relational twin: bigrams = [trim(null)] = [null];
-                    # groupBy counts the null group
-                    nb.append(1)
-                    tb.append(None)
-                    tc.append(1)
-                    rr.append(1.0)
-                    continue
-                trimmed = txt.strip(" ")
-                toks = r_split.split(trimmed)
-                if len(toks) >= 2:
-                    bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-                else:
-                    bigrams = [trimmed]
-                counts = Counter(bigrams)
-                cnt, bg = min((-c, g) for g, c in counts.items())
-                nb.append(len(bigrams))
-                tb.append(bg)
-                tc.append(-cnt)
-                rr.append(float(-cnt) / len(bigrams))
-            yield pa.record_batch(
-                [batch.column("_id"), pa.array(nb, pa.int64()),
-                 pa.array(tb, pa.string()), pa.array(tc, pa.int64()),
-                 pa.array(rr, pa.float64())],
-                names=["_id", "n_bigrams", "top_bigram", "top_count",
-                       "rep_ratio"],
-            )
-
-    from sptag_spark.operators.dedup import _ensure_parallel
-
-    src = _ensure_parallel(df).select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(
-        kernel,
-        schema=(f"_id {id_type}, n_bigrams long, top_bigram string, "
-                "top_count long, rep_ratio double"),
-    ).withColumnRenamed("_id", id_col)
-
-
 def repetition_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    engine: str = "arrow",
-) -> DataFrame:
-    if engine == "arrow":
-        return repetition_stats_arrow(df, id_col, text_col)
-    return _repetition_stats_relational(df, id_col, text_col)
-
-
-def _repetition_stats_relational(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -516,6 +401,40 @@ def _repetition_stats_relational(
       (doc_id, n_bigrams, top_bigram, top_count, rep_ratio)
     with rep_ratio = top_count / n_bigrams. Tiebreak on equal counts is
     lexicographic-smallest bigram (unique, mirrored in the oracle).
+
+    One fused Python kernel, value-identical to the relational form
+    _repetition_stats_relational (tested) and thread-scalable: the bigram
+    explode + string groupBy churns JVM strings, which flat-lines across
+    threads in one JVM (see dedup.minhash_signature_arrow). Tokenization
+    is py_ws_tokens (Spark's trim strips spaces only); the argmax
+    tiebreak min((-count, bigram)) is the oracle's row_number ordering;
+    rep_ratio is one float division (IEEE-identical to Spark's)."""
+    def row(text):
+        toks = py_ws_tokens(text)
+        if toks is None:
+            # relational twin: bigrams = [trim(null)] = [null]; groupBy
+            # counts the null group
+            return [(1, None, 1, 1.0)]
+        # one token: the trimmed text itself is the one "bigram"
+        bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])] or toks
+        neg, top = min((-c, g) for g, c in Counter(bigrams).items())
+        return [(len(bigrams), top, -neg, -neg / len(bigrams))]
+
+    return map_texts(
+        df, text_col, [id_col],
+        [("n_bigrams", pa.int64()), ("top_bigram", pa.string()),
+         ("top_count", pa.int64()), ("rep_ratio", pa.float64())],
+        row,
+    )
+
+
+def _repetition_stats_relational(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """The relational form of repetition_stats, the reference its kernel
+    is tested against: the same columns and values.
 
     Scale: explode + two map-side-combinable aggregations keyed by
     (doc, bigram) then doc — partial aggregation absorbs the blowup

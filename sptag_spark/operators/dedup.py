@@ -4,9 +4,13 @@ The reference dedups candidates per-query with a visited-set hash
 (WorkSpace.h:114-165 CheckAndSet) and prunes near-duplicate neighbors with
 the RNG rule (RelativeNeighborhoodGraph.h:18-35). A training-data engine
 needs the corpus-level versions: exact dedup, shingle-Jaccard similarity
-join, MinHash+LSH banding, and SimHash hamming blocking. All four are
-pure DataFrame compositions (shuffle-aware, no Python in the hot path)
-with exact ANSI-SQL oracles.
+join, MinHash+LSH banding, and SimHash hamming blocking. The per-row
+string work (normalize, shingle, md5, sketch) runs in Python Arrow
+kernels built on the shared text core of functions/text.py; joins,
+banding and aggregates are DataFrame plans. Every operator has an exact
+ANSI-SQL oracle, and every kernel is tested against the JVM expression
+it replaces (minhash_signature, simhash_sketch, doc_fingerprint,
+word_shingles).
 
 Scale notes (100 TB):
 - exact dedup is one hash-aggregate on md5(normalized text) — map-side
@@ -26,27 +30,24 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import hashlib
 import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from sptag_spark.functions.text import (
-    doc_fingerprint,
-    normalize_text,
+    _ensure_parallel,
+    doc_fingerprint_arrow,
+    map_texts,
+    py_normalize_text,
+    py_word_shingles,
     word_shingles,
 )
-
-def _ensure_parallel(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """CPU-dense per-row expressions (thousands of md5 calls per row) die
-    on parallelism, not data volume: a small parquet file arrives as ONE
-    input split and pins a single core. Repartition only when the scan is
-    narrower than the cluster — at real scale input splits >> cores and
-    this is a no-op (no shuffle added)."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from sptag_spark.operators.corpus import _exploded_shingles_arrow
 
 
 # ---------------------------------------------------------------------------
@@ -55,32 +56,23 @@ def _ensure_parallel(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 
 def exact_dedup(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Tag every row with its content fingerprint, the canonical (minimum)
     id holding that fingerprint, and an is_duplicate flag.
 
     Fingerprints come from the Arrow kernel (doc_fingerprint_arrow —
-    char-identical to the JVM md5(normalize) expression, and it scales
-    across cores where the JVM regex+md5 churn flat-lines, CLAUDE.md
-    rule 13; engine='expr' keeps the expression twin). Canonical id and
-    copy count are window aggregates over partitionBy(fp) — ONE exchange
-    and ONE fingerprint evaluation, where the old groupBy + join-back
+    char-identical to the JVM md5(normalize) expression doc_fingerprint,
+    and it scales across cores where the JVM regex+md5 churn flat-lines,
+    CLAUDE.md rule 13). Canonical id and copy count are window
+    aggregates over partitionBy(fp) — ONE exchange and ONE fingerprint
+    evaluation, where the old groupBy + join-back
     re-ran the scan+fingerprint for each join branch (the aggregated
     side broadcasts, so nothing reuses the first exchange). NULL-fp rows
     (NULL text) are dropped, exactly as the old inner join on fp did.
     """
     from pyspark.sql.window import Window
 
-    from sptag_spark.functions.text import doc_fingerprint_arrow
-
-    if engine == "arrow":
-        fp = doc_fingerprint_arrow(df, id_col, text_col) \
-            .select(F.col(id_col), "fp")
-    else:
-        fp = df.select(
-            F.col(id_col), doc_fingerprint(F.col(text_col)).alias("fp")
-        )
+    fp = doc_fingerprint_arrow(df, id_col, text_col)
     w = Window.partitionBy("fp")
     return (
         fp.filter(F.col("fp").isNotNull())
@@ -104,7 +96,6 @@ def exact_dedup(
 
 def _exploded_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int, max_df: int | None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Exploded (doc, shingle) rows hash-repartitioned on the shingle
     string `_sh`.
@@ -134,34 +125,13 @@ def _exploded_shingles(
 
     Shingling runs in the Arrow kernel (corpus._exploded_shingles_arrow
     — char-identical strings to the word_shingles expression, same
-    distinct/degenerate/NULL semantics; engine='expr' keeps the JVM
-    expression twin): the normalize regex + shingle string churn is the
-    classic single-JVM thread-scaling killer (CLAUDE.md rule 13)."""
+    distinct/degenerate/NULL semantics): the normalize regex + shingle
+    string churn is the classic single-JVM thread-scaling killer
+    (CLAUDE.md rule 13)."""
     from sptag_spark.session import shuffle_parts
 
-    if engine == "arrow":
-        from sptag_spark.operators.corpus import _exploded_shingles_arrow
-
-        sh = _exploded_shingles_arrow(
-            df, id_col, text_col, n, with_count=True
-        ).withColumn("_n_sh", F.col("_n_sh").cast("int"))  # schema parity
-    else:
-        # explode_OUTER, not explode: InferFiltersFromGenerate rewrites a
-        # plain explode into Filter(size(gen)>0 AND isnotnull(gen)) +
-        # Generate, re-inlining the whole shingle expression into the
-        # filter — the normalize regexes would run TWICE per row.
-        # word_shingles always yields >= 1 element, so outer semantics
-        # are identical except for NULL text rows, which the
-        # isnotnull(_sh) filter removes as before.
-        sh = _ensure_parallel(df).select(
-            F.col(id_col).alias("_id"),
-            word_shingles(F.col(text_col), n).alias("_shingles"),
-        ).select(
-            "_id",
-            F.size("_shingles").alias("_n_sh"),
-            F.explode_outer("_shingles").alias("_sh"),
-        )
-    sh = sh.filter(F.col("_sh").isNotNull()) \
+    sh = _exploded_shingles_arrow(df, id_col, text_col, n, with_count=True) \
+        .filter(F.col("_sh").isNotNull()) \
         .repartition(shuffle_parts(df.sparkSession), "_sh")
     if max_df is not None:
         # The dummy max() aggregates keep _id/_n_sh referenced in this
@@ -246,9 +216,6 @@ def _pair_counts_blob(sh: DataFrame, id_ddl: str, threshold: float):
     ONLY the pairs at or above the threshold — thousands of rows, not
     114M. Pair-for-pair, bit-for-bit equal to the join+aggregate path
     (test_jaccard_engines_identical)."""
-    import numpy as np
-    import pyarrow as pa
-
     from sptag_spark.session import shuffle_parts
 
     spark = sh.sparkSession
@@ -391,7 +358,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_df: int | str | None = "auto",
-    engine: str = "arrow",
 ) -> DataFrame:
     """All pairs (a < b) with shingle-Jaccard >= threshold.
 
@@ -404,16 +370,15 @@ def jaccard_pairs(
     rows that is THE scale-killer (reference analog: the λ-penalty
     stop-key pruning, BKTree.h:250-251). Pass None to disable (exact
     textbook Jaccard, correctness baseline only).
+
+    bigint ids take the packed-binary pair count (_pair_counts_blob): the
+    row-per-pair formulations are boundary-bound in both engines. Other
+    id types take the relational self-join below, with the same values.
     """
     if max_df == "auto":
         max_df = auto_max_df(df)
-    sh = _exploded_shingles(df, id_col, text_col, n, max_df, engine=engine)
-    from pyspark.sql.types import LongType
-
-    if engine == "arrow" and isinstance(df.schema[id_col].dataType,
-                                        LongType):
-        # packed-binary pair counting (see _pair_counts_blob) — the
-        # row-per-pair formulations are boundary-bound in both engines
+    sh = _exploded_shingles(df, id_col, text_col, n, max_df)
+    if isinstance(df.schema[id_col].dataType, LongType):
         return _pair_counts_blob(sh, "bigint", threshold)
     # Self-join on the exact shingle string — it is the join KEY, not a
     # post-join check, so both sides consume the shared `_sh` exchange
@@ -472,8 +437,6 @@ def _mh_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic multiply-shift constants (a_h odd 31-bit, b_h
     61-bit) from md5 bytes — shared literals between the Spark
     expressions and the SQL oracle."""
-    import hashlib
-
     out = []
     for h in range(num_hashes):
         d = hashlib.md5(f"mh|{seed}|{h}".encode()).digest()
@@ -492,7 +455,6 @@ def minhash_signature(
     text_col: str = "text",
     num_hashes: int = 12,
     n: int = 3,
-    shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc MinHash signature: ONE md5 per shingle (base hash x =
     first 8 md5 hex chars as int), then num_hashes exact-integer
@@ -500,19 +462,15 @@ def minhash_signature(
     a_i < 2^31 and x < 2^32, so every product stays inside int64 and
     both engines compute it exactly. ~10x less hashing than num_hashes
     seeded md5s per shingle; the md5 base keeps the family engine-
-    neutral for the oracle.
-
-    `shingled` (columns `_id`, `_shingles`) lets a caller that needs the
-    shingle arrays elsewhere too (jaccard_pairs_lsh's verify join) hand
-    in one shared frame so the pipeline runs once."""
+    neutral for the oracle. The JVM expression form:
+    minhash_signature_arrow is the hot path and is tested against it."""
     # Materialize shingles AND the base-hash array in their own
     # projections: each is referenced by num_hashes sibling expressions,
     # and CollapseProject would otherwise re-inline the md5 per hash.
-    if shingled is None:
-        shingled = _ensure_parallel(df).select(
-            F.col(id_col).alias("_id"),
-            word_shingles(F.col(text_col), n).alias("_shingles"),
-        )
+    shingled = _ensure_parallel(df).select(
+        F.col(id_col).alias("_id"),
+        word_shingles(F.col(text_col), n).alias("_shingles"),
+    )
     based = shingled.select(
         "_id",
         F.transform(
@@ -549,67 +507,35 @@ def minhash_signature_arrow(
     PROCESSES with private allocators — the same design that gives the
     token pipeline its 0.83-0.95 scaling efficiency (BENCH.md).
 
-    Normalization ALSO runs in the kernel (Python re with re.ASCII —
-    asserted char-identical to the JVM normalize_text on every corpus,
-    tests/test_dedup.py): the JVM regex+string churn is the part that
-    does NOT scale across threads in one JVM (measured ~35us/doc at 1
-    thread degrading ~10x per-core at 8 threads — allocator/GC
-    contention), while separate Python processes scale at ~1.0. The
-    kernel then splits on single spaces (exact: normalize collapses
-    whitespace), md5s each n-shingle (identical bytes), and applies the
-    shared multiply-shift permutations in int64 (a < 2^30, x < 2^32 —
-    no overflow, same as the expression and the DuckDB oracle)."""
-    import numpy as np
-    import pyarrow as pa
-
+    Normalization and shingling ALSO run in the kernel (the shared
+    py_normalize_text / py_word_shingles, asserted char-identical to the
+    JVM rules on every corpus, tests/test_dedup.py): the JVM regex+string
+    churn is the part that does NOT scale across threads in one JVM
+    (measured ~35us/doc at 1 thread degrading ~10x per-core at 8 threads
+    — allocator/GC contention), while separate Python processes scale at
+    ~1.0. The kernel md5s each n-shingle (identical bytes) and applies
+    the shared multiply-shift permutations in int64 (a < 2^30, x < 2^32
+    — no overflow, same as the expression and the DuckDB oracle)."""
     params = _mh_params(num_hashes)
     A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     B = np.array([b for _, b in params], dtype=np.int64)[:, None]
-    nn = n
 
-    def kernel(batches):
-        import hashlib
-        import re
+    def row(text):
+        norm = py_normalize_text(text)
+        if norm is None:
+            # expr twin: word_shingles(NULL) = [null] -> md5(null) = null
+            # -> array_min = null per hash
+            return [([None] * num_hashes,)]
+        xs = np.frombuffer(
+            b"".join(hashlib.md5(s.encode()).digest()[:4]
+                     for s in py_word_shingles(norm, n)),
+            dtype=">u4",
+        ).astype(np.int64)
+        return [(((A * xs + B) & _MH_MASK61).min(axis=1).tolist(),)]
 
-        r_punct = re.compile(r"[^a-z0-9\s]", re.ASCII)
-        r_ws = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            ids = batch.column("_id")
-            sig_rows = []
-            for txt in batch.column("_text").to_pylist():
-                if txt is None:
-                    # expr twin: word_shingles(NULL) = [null] -> md5(null)
-                    # = null -> array_min = null per hash
-                    sig_rows.append([None] * num_hashes)
-                    continue
-                nm = r_ws.sub(" ", r_punct.sub(" ", txt.lower())).strip()
-                toks = nm.split(" ")
-                if len(toks) >= nn:
-                    shingles = [
-                        " ".join(toks[i:i + nn])
-                        for i in range(len(toks) - nn + 1)
-                    ]
-                else:
-                    shingles = [nm]
-                xs = np.frombuffer(
-                    b"".join(hashlib.md5(s.encode("utf-8")).digest()[:4]
-                             for s in shingles),
-                    dtype=">u4",
-                ).astype(np.int64)
-                sig_rows.append(
-                    ((A * xs + B) & _MH_MASK61).min(axis=1).tolist()
-                )
-            yield pa.record_batch(
-                [ids, pa.array(sig_rows, type=pa.list_(pa.int64()))],
-                names=["_id", "sig"],
-            )
-
-    src = _ensure_parallel(df).select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_text"),
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(kernel, schema=f"_id {id_type}, sig array<long>")
+    return map_texts(df, text_col, [id_col],
+                     [("sig", pa.list_(pa.int64()))], row) \
+        .withColumnRenamed(id_col, "_id")
 
 
 def minhash_lsh_pairs(
@@ -619,26 +545,21 @@ def minhash_lsh_pairs(
     num_hashes: int = 12,
     bands: int = 4,
     n: int = 3,
-    shingled: DataFrame | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Candidate near-dup pairs (a < b) sharing at least one LSH band.
 
     rows-per-band r = num_hashes/bands; collision prob ≈ 1-(1-j^r)^b.
     The band key is md5 over the band's signature slice; the self-join is
     per (band_idx, band_key) so hot buckets parallelize across bands.
+    Signatures come from minhash_signature_arrow.
     """
-    assert num_hashes % bands == 0
+    if bands < 1 or num_hashes < 1 or num_hashes % bands:
+        raise ValueError(
+            f"minhash_lsh_pairs: num_hashes={num_hashes} must be a positive "
+            f"multiple of bands={bands} (every band takes num_hashes/bands "
+            "rows of the signature)")
     r = num_hashes // bands
-    if shingled is not None or engine == "expr":
-        sigs = minhash_signature(df, id_col, text_col, num_hashes, n,
-                                 shingled=shingled)
-    else:
-        # Arrow kernel by default: bit-identical, and it scales across
-        # cores (separate-process allocators) where the JVM expression
-        # tree hits single-JVM GC/bandwidth contention — see
-        # minhash_signature_arrow's docstring.
-        sigs = minhash_signature_arrow(df, id_col, text_col, num_hashes, n)
+    sigs = minhash_signature_arrow(df, id_col, text_col, num_hashes, n)
     # Band keys are the RAW signature slice as r long columns, NOT a
     # concat string: the multi-key long equi-join has identical
     # semantics (delimited concat equality == tuple equality) with zero
@@ -814,51 +735,24 @@ def simhash_sketch_arrow(
     md5-first-15-hex int64 (= first 8 digest bytes >> 4), NULL text ->
     all-bits-lose -> sim 0 (the expression's when(null).otherwise(-1)
     semantics)."""
-    import numpy as np
-    import pyarrow as pa
-
     ar = np.arange(SIMHASH_BITS, dtype=np.int64)
     weights = (1 << ar).astype(np.int64)
 
-    def kernel(batches):
-        import hashlib
-        import re
+    def row(text):
+        norm = py_normalize_text(text)
+        if norm is None:
+            return [(0,)]
+        # first 15 md5 hex chars == first 8 digest bytes >> 4
+        xs = (np.frombuffer(
+            b"".join(hashlib.md5(s.encode()).digest()[:8]
+                     for s in py_word_shingles(norm, 3)),
+            dtype=">u8",
+        ) >> np.uint64(4)).astype(np.int64)
+        votes = (((xs[:, None] >> ar) & 1) * 2 - 1).sum(axis=0)
+        return [(int(((votes > 0) * weights).sum()),)]
 
-        r_punct = re.compile(r"[^a-z0-9\s]", re.ASCII)
-        r_ws = re.compile(r"\s+", re.ASCII)
-        for batch in batches:
-            sims = []
-            for txt in batch.column("_text").to_pylist():
-                if txt is None:
-                    sims.append(0)
-                    continue
-                nm = r_ws.sub(" ", r_punct.sub(" ", txt.lower())).strip()
-                toks = nm.split(" ")
-                if len(toks) >= 3:
-                    shingles = list(dict.fromkeys(
-                        " ".join(toks[i:i + 3])
-                        for i in range(len(toks) - 2)
-                    ))
-                else:
-                    shingles = [nm]
-                # first 15 md5 hex chars == first 8 digest bytes >> 4
-                xs = (np.frombuffer(
-                    b"".join(hashlib.md5(s.encode("utf-8")).digest()[:8]
-                             for s in shingles),
-                    dtype=">u8",
-                ) >> np.uint64(4)).astype(np.int64)
-                votes = (((xs[:, None] >> ar) & 1) * 2 - 1).sum(axis=0)
-                sims.append(int(((votes > 0) * weights).sum()))
-            yield pa.record_batch(
-                [batch.column("_id"), pa.array(sims, pa.int64())],
-                names=["_id", "sim"],
-            )
-
-    src = _ensure_parallel(df).select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_text")
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(kernel, schema=f"_id {id_type}, sim long")
+    return map_texts(df, text_col, [id_col], [("sim", pa.int64())], row) \
+        .withColumnRenamed(id_col, "_id")
 
 
 def simhash_pairs(
@@ -887,8 +781,11 @@ def simhash_pairs(
     """
     # radius 0 is the degenerate single combination (m = 6): blocking
     # on the whole sketch == exact-sketch equality, still lossless
-    assert 0 <= max_hamming <= SIMHASH_BLOCKS - 1, \
-        "6-block pigeonhole only covers 0 <= radius <= blocks-1"
+    if not 0 <= max_hamming <= SIMHASH_BLOCKS - 1:
+        raise ValueError(
+            f"simhash_pairs: max_hamming={max_hamming} is outside "
+            f"0..{SIMHASH_BLOCKS - 1}; the {SIMHASH_BLOCKS}-block pigeonhole "
+            "covers only those radii")
     from itertools import combinations
 
     m = SIMHASH_BLOCKS - max_hamming

@@ -5,9 +5,8 @@ asymmetric distance (ADC) lookup tables (PQQuantizer.h:23-208, training
 src/Quantizer/main.cpp:116-175, ADC tables PQQuantizer.h:111-130). Spark
 restatement:
 
-- train  = m independent balanced-kmeans fits over vector slices
-  (operators/kmeans.py — each fit is a broadcast-argmin scan + one
-  aggregation per iteration);
+- train  = opq_train: numpy k-means per subspace on a deterministic
+  hash-ordered sample collected to the driver (opq_iters=0 is plain PQ);
 - encode = per-slice argmin against codebook literals, emitting
   array<int> codes — one codegen scan, 4 bytes/subspace here
   (uint8 at rest via parquet dictionary encoding);
@@ -30,36 +29,9 @@ from pyspark.sql import functions as F
 
 from sptag_spark.functions.vecarrow import list_to_matrix
 
-from sptag_spark.operators.kmeans import kmeans_fit
-
 
 def _slice_col(vec_col: str, start: int, length: int) -> Column:
     return F.slice(F.col(vec_col), start + 1, length)
-
-
-def pq_train(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    iters: int = 8,
-) -> np.ndarray:
-    """Train codebooks; returns array (m, k, dim/m)."""
-    dim = len(df.select(vec_col).first()[0])
-    assert dim % m == 0, "dim must divide into m subspaces"
-    dsub = dim // m
-    books = []
-    for s in range(m):
-        sliced = df.select(
-            F.col(id_col),
-            _slice_col(vec_col, s * dsub, dsub).alias("embedding"),
-        )
-        centroids, _ = kmeans_fit(
-            sliced, k=k, id_col=id_col, vec_col="embedding", iters=iters
-        )
-        books.append(centroids)
-    return np.stack(books)
 
 
 def _argmin_code(vec_slice: Column, codebook: np.ndarray) -> Column:
@@ -104,7 +76,7 @@ def pq_reconstruct(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
 
 # ---------------------------------------------------------------------------
 # Integer PQ/ADC on deterministic sample codebooks — the oracle-checkable
-# quantizer-APPLY path (training quality lives in pq_train/opq_train; this
+# quantizer-APPLY path (training quality lives in opq_train; this
 # isolates encode + ADC scoring so DuckDB can replicate them bit-exactly)
 # ---------------------------------------------------------------------------
 

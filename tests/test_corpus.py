@@ -320,12 +320,12 @@ def test_repetition_arrow_matches_relational(spark, docs):
     """Kernel vs relational repetition stats — value-identical incl.
     the lexicographic argmax tiebreak and degenerate rows."""
     from sptag_spark.operators.corpus import (
-        _repetition_stats_relational, repetition_stats_arrow,
+        _repetition_stats_relational, repetition_stats,
     )
 
     a = {r["doc_id"]: (r["n_bigrams"], r["top_bigram"], r["top_count"],
                        r["rep_ratio"])
-         for r in repetition_stats_arrow(docs).collect()}
+         for r in repetition_stats(docs).collect()}
     b = {r["doc_id"]: (r["n_bigrams"], r["top_bigram"], r["top_count"],
                        r["rep_ratio"])
          for r in _repetition_stats_relational(docs).collect()}
@@ -340,7 +340,7 @@ def test_repetition_arrow_matches_relational(spark, docs):
                     StructField("text", StringType())]),
     )
     ea = {r["doc_id"]: (r["n_bigrams"], r["top_bigram"], r["top_count"])
-          for r in repetition_stats_arrow(edge).collect()}
+          for r in repetition_stats(edge).collect()}
     eb = {r["doc_id"]: (r["n_bigrams"], r["top_bigram"], r["top_count"])
           for r in _repetition_stats_relational(edge).collect()}
     assert ea == eb

@@ -67,6 +67,10 @@ def test_minhash_lsh_candidates(docs):
              for r in minhash_lsh_pairs(docs, num_hashes=12, bands=4).collect()}
     assert (0, 1) in pairs          # identical docs always collide
     assert (0, 3) not in pairs      # unrelated docs shouldn't
+    # caller input is checked before any job, also under python -O
+    for num_hashes, bands in ((12, 5), (12, 0), (10, 4), (0, 4)):
+        with pytest.raises(ValueError, match=f"num_hashes={num_hashes}"):
+            minhash_lsh_pairs(docs, num_hashes=num_hashes, bands=bands)
 
 
 def test_simhash_blocked_join_is_lossless(docs, spark):
@@ -94,6 +98,11 @@ def test_simhash_blocked_join_is_lossless(docs, spark):
         got = {(r["id_a"], r["id_b"])
                for r in simhash_pairs(docs, max_hamming=radius).collect()}
         assert got == brute_r, radius
+    # past the pigeonhole's radii the blocking would be lossy (6 = one
+    # empty key, a full self cross join): rejected before any job
+    for radius in (-1, 6):
+        with pytest.raises(ValueError, match=f"max_hamming={radius} .*0..5"):
+            simhash_pairs(docs, max_hamming=radius)
 
 
 def test_sf001_documents_planted_dups(spark):
@@ -214,29 +223,41 @@ def test_minhash_signature_arrow_bit_identical(spark):
 
 
 def test_python_normalize_matches_jvm(spark):
-    """The Arrow kernel's re.ASCII normalize must be char-identical to
-    the JVM normalize_text on the corpus and on tricky ASCII edges
-    (the cross-engine md5s depend on the exact normalized bytes)."""
-    import re
-
+    """The Python twins every Arrow kernel calls (py_normalize_text,
+    py_word_shingles, py_ws_tokens) must equal the JVM normalize_text,
+    word_shingles and ws_tokens value for value, on the corpus and on
+    edge rows (the cross-engine md5s depend on the exact bytes)."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType, StructField, StructType
 
-    from sptag_spark.functions.text import normalize_text
+    from sptag_spark.functions.text import (
+        normalize_text, py_normalize_text, py_word_shingles, py_ws_tokens,
+        word_shingles, ws_tokens,
+    )
 
-    r_punct = re.compile(r"[^a-z0-9\s]", re.ASCII)
-    r_ws = re.compile(r"\s+", re.ASCII)
-
-    def py_norm(t):
-        return r_ws.sub(" ", r_punct.sub(" ", t.lower())).strip()
-
-    edges = ["", "   ", "A\tB\nC\x0b\x0cD", "a--b__c", "UPPER lower 42",
-             "!@#$%^&*()", "  spaced\t\tout  ", "mIxEd-CaSe.9"]
+    edges = [None, "", "   ", "A\tB\nC\x0b\x0cD", "\t x y \n", "a--b__c",
+             "UPPER lower 42", "!@#$%^&*()", "  spaced\t\tout  ",
+             "mIxEd-CaSe.9", "one two", "x y x y x y x y",
+             "Crème brûlée, NIÑO über straße", "naïve café ü é",
+             "x\u00a0y z"]
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     texts = [r["text"] for r in docs.select("text").collect()] + edges
-    jvm = spark.createDataFrame([(t,) for t in texts], ["text"]) \
-        .select(normalize_text(F.col("text")).alias("n")).collect()
+    jvm = spark.createDataFrame(
+        [(t,) for t in texts],
+        StructType([StructField("text", StringType())]),
+    ).select(
+        normalize_text(F.col("text")).alias("norm"),
+        word_shingles(F.col("text"), 3).alias("sh3"),
+        word_shingles(F.col("text"), 2).alias("sh2"),
+        ws_tokens(F.col("text")).alias("toks"),
+    ).collect()
+    assert len(jvm) == len(texts)
     for t, row in zip(texts, jvm):
-        assert py_norm(t) == row["n"], repr(t)
+        norm = py_normalize_text(t)
+        assert norm == row["norm"], repr(t)
+        assert py_word_shingles(norm, 3) == row["sh3"], repr(t)
+        assert py_word_shingles(norm, 2) == row["sh2"], repr(t)
+        assert py_ws_tokens(t) == row["toks"], repr(t)
 
 
 def test_simhash_sketch_arrow_bit_identical(spark):
@@ -266,19 +287,28 @@ def test_simhash_sketch_arrow_bit_identical(spark):
 
 
 def test_jaccard_engines_identical(spark):
-    """Arrow shingle kernel vs the word_shingles expression path: the
-    full jaccard pipeline (cap, join, aggregate) must emit identical
-    rows with identical schema."""
+    """bigint ids take the blob kernel, other id types the relational
+    self-join: on the same docs (doc_id cast to int keeps every a < b
+    order) both emit identical rows, and identical column types apart
+    from the ids, which keep their input type."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType, LongType
+
     from sptag_spark.operators.dedup import jaccard_pairs
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     cols = ["id_a", "id_b", "n_a", "n_b", "n_common", "jaccard"]
-    a = jaccard_pairs(docs, threshold=0.2, engine="arrow")
-    e = jaccard_pairs(docs, threshold=0.2, engine="expr")
-    # names + types; nullability differs (kernel columns are nullable
-    # where count(*) is not) and is invisible to the value-hash oracle
-    assert [(f.name, f.dataType) for f in a.schema] == \
-        [(f.name, f.dataType) for f in e.schema]
-    ra = {tuple(r[c] for c in cols) for r in a.collect()}
-    re_ = {tuple(r[c] for c in cols) for r in e.collect()}
-    assert ra == re_ and len(ra) > 0
+    blob = jaccard_pairs(docs, threshold=0.2)
+    rel = jaccard_pairs(
+        docs.withColumn("doc_id", F.col("doc_id").cast("int")), threshold=0.2)
+    # nullability differs (kernel columns are nullable where count(*) is
+    # not) and is invisible to the value-hash oracle
+    types = {f.name: f.dataType for f in blob.schema}
+    assert [f.name for f in blob.schema] == cols
+    assert types["id_a"] == types["id_b"] == LongType()
+    assert [(f.name, f.dataType) for f in rel.schema] == [
+        (c, IntegerType() if c in ("id_a", "id_b") else types[c])
+        for c in cols]
+    rb = sorted(tuple(r[c] for c in cols) for r in blob.collect())
+    rr = sorted(tuple(r[c] for c in cols) for r in rel.collect())
+    assert rb == rr and len(rb) > 0

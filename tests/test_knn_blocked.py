@@ -77,12 +77,23 @@ def test_lsh_block_mode_equals_banded_mode(emb):
 
 
 def test_exact_dedup_engines_identical(spark):
+    """exact_dedup (Arrow fingerprints) against the fingerprints of the
+    JVM doc_fingerprint expression, grouped here in Python."""
+    from collections import defaultdict
+
+    from pyspark.sql import functions as F
+
+    from sptag_spark.functions.text import doc_fingerprint
     from sptag_spark.operators.dedup import exact_dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     cols = ["doc_id", "fp", "canonical_doc_id", "n_copies", "is_duplicate"]
-    a = {tuple(r[c] for c in cols)
-         for r in exact_dedup(docs, engine="arrow").collect()}
-    e = {tuple(r[c] for c in cols)
-         for r in exact_dedup(docs, engine="expr").collect()}
+    a = {tuple(r[c] for c in cols) for r in exact_dedup(docs).collect()}
+    ids_by_fp = defaultdict(list)
+    for r in docs.select("doc_id", doc_fingerprint(F.col("text"))
+                         .alias("fp")).collect():
+        if r["fp"] is not None:
+            ids_by_fp[r["fp"]].append(r["doc_id"])
+    e = {(i, fp, min(ids), len(ids), int(i != min(ids)))
+         for fp, ids in ids_by_fp.items() for i in ids}
     assert a == e and len(a) == docs.count()

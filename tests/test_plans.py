@@ -259,7 +259,7 @@ def test_jaccard_plan_shapes(docs):
     require co-partitioning on ALL join keys, so anything but the exact
     key set re-exchanged 2.6M rows per side at bench scale).
 
-    engine='expr' keeps the relational self-join: single scan with
+    Non-bigint ids take the relational self-join: single scan with
     runtime ReusedExchange everywhere else, the ShuffledHashJoin
     consuming the `_sh` repartition directly."""
     import re
@@ -279,7 +279,8 @@ def test_jaccard_plan_shapes(docs):
     assert not re.findall(
         r"hashpartitioning\(_sh#\d+[^)]*\), ENSURE_REQUIREMENTS", final)
 
-    df2 = jaccard_pairs(docs, threshold=0.5, engine="expr")
+    df2 = jaccard_pairs(
+        docs.withColumn("doc_id", F.col("doc_id").cast("int")), threshold=0.5)
     df2.collect()
     final2 = df2._jdf.queryExecution().executedPlan().toString() \
         .split("== Initial Plan ==")[0]

@@ -9,10 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from sptag_spark.operators.pq import (
+    opq_train,
     pq_adc_topk,
     pq_encode,
     pq_reconstruct,
-    pq_train,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -30,7 +30,7 @@ M, K = 8, 16
 
 @pytest.fixture(scope="module")
 def trained(emb):
-    books = pq_train(emb, m=M, k=K, iters=5)
+    _, books = opq_train(emb, m=M, k=K, opq_iters=0, kmeans_iters=5)
     codes = pq_encode(emb, books).cache()
     return books, codes
 
@@ -62,7 +62,7 @@ def test_adc_equals_exact_on_reconstructed(emb, trained):
 
 def test_quantization_error_shrinks_with_k(emb):
     def mse(k):
-        books = pq_train(emb, m=4, k=k, iters=5)
+        _, books = opq_train(emb, m=4, k=k, opq_iters=0, kmeans_iters=5)
         pdf = pq_encode(emb, books).toPandas()
         recon = pq_reconstruct(np.array(pdf["codes"].tolist()), books)
         orig = np.array(

@@ -1,9 +1,10 @@
 """Reachability guard: every top-level def and class in sptag_spark/ is
 reached from engine code, or TEST_ONLY says why it stays.
 
-A name counts as reached when it appears as a word outside its own
-definition anywhere in the package, the spark-submit jobs, the tools, the
-benchmark or the driver contract. Tests do not count. Code that only its
+A name counts as reached when it appears as a NAME token of code outside
+its own definition anywhere in the package, the spark-submit jobs, the
+tools, the benchmark or the driver contract. A mention in a comment,
+docstring or string does not count, and neither do tests. Code that only its
 own tests reach fails this test until it is deleted or listed below with
 a reason. No Spark session is started.
 """
@@ -11,7 +12,8 @@ a reason. No Spark session is started.
 from __future__ import annotations
 
 import ast
-import re
+import io
+import tokenize
 from collections import Counter
 from pathlib import Path
 
@@ -23,6 +25,54 @@ TEST_ONLY = {
     "sptag_spark.functions.tokens.with_token_features_expr":
         "JVM-expression tier that test_kernel_tiers_agree checks the Arrow "
         "tier against (ROADMAP item 5)",
+    "sptag_spark.functions.text.with_text_stats":
+        "JVM-expression reference for the with_text_stats_arrow kernel "
+        "(test_with_text_stats_arrow_bit_identical)",
+    "sptag_spark.functions.text.with_lang_id_expr":
+        "JVM-expression reference for the with_lang_id kernel "
+        "(test_with_lang_id_arrow_bit_identical)",
+    "sptag_spark.functions.text.doc_fingerprint":
+        "JVM md5(normalize_text) reference for the doc_fingerprint_arrow "
+        "and fingerprints_arrow kernels and for exact_dedup",
+    "sptag_spark.operators.dedup.minhash_signature":
+        "JVM-expression reference for the minhash_signature_arrow kernel "
+        "(test_minhash_signature_arrow_bit_identical)",
+    "sptag_spark.operators.dedup.simhash_sketch":
+        "JVM-expression reference for the simhash_sketch_arrow kernel; "
+        "the simhash_pairs losslessness test brute-forces over it",
+    "sptag_spark.operators.corpus._repetition_stats_relational":
+        "relational reference for the repetition_stats kernel "
+        "(test_repetition_arrow_matches_relational)",
+    "sptag_spark.operators.knn.cosine_near_dup_pairs":
+        "exact quadratic all-pairs cosine, the baseline the LSH near-dup "
+        "modes are tested against",
+    "sptag_spark.operators.knn.ivf_topk":
+        "one-shot in-memory IVF build + probe; the persisted ivf_build + "
+        "ivf_probe pair is the engine path",
+    "sptag_spark.operators.knn.multi_index_topk_join":
+        "broadcast-join form of multi_index_topk for large query sets",
+    "sptag_spark.operators.knn.paged_topk":
+        "keyset-paginated top-k cursor over a frame (reference "
+        "GetIterator)",
+    "sptag_spark.operators.knn.paged_topk_indexed":
+        "paged cursor over a persisted IVF index with the relaxed-"
+        "monotonicity budget (reference SearchIndexIterativeNext)",
+    "sptag_spark.operators.layout.compact_small_files":
+        "parquet small-file compaction; test_layout checks the digest "
+        "stays the same",
+    "sptag_spark.operators.layout.write_range_sorted":
+        "range-partitioned sorted parquet write with lineage stats",
+    "sptag_spark.operators.pq.opq_encode":
+        "OPQ encode (rotate + PQ encode); test_pq checks the rotation "
+        "against plain PQ",
+    "sptag_spark.operators.pq.opq_adc_topk":
+        "ADC top-k in the OPQ-rotated space, the scoring half of the OPQ "
+        "tests",
+    "sptag_spark.operators.skew.salted_join":
+        "hot-key salted equi-join (reference replicaCount pattern)",
+    "sptag_spark.operators.upsert.reject_stale":
+        "stale-update filter of the upsert family (reference version "
+        "check)",
     "sptag_spark.functions.text.near_dup_key":
         "1-perm MinHash dedup key with per-doc sentinels for contentless "
         "text; test_streaming checks the sentinels",
@@ -80,26 +130,28 @@ def _scope_files() -> list[Path]:
     return out
 
 
-def _words(text: str) -> Counter:
-    return Counter(re.findall(r"\w+", text))
+def _names(text: str) -> list[tuple[str, int]]:
+    """(name, line) of every NAME token: code, not comments or strings."""
+    return [(t.string, t.start[0]) for t in
+            tokenize.generate_tokens(io.StringIO(text).readline)
+            if t.type == tokenize.NAME]
 
 
 def unreached() -> set[str]:
     texts = {p: p.read_text() for p in _scope_files()}
-    total = Counter()
-    for text in texts.values():
-        total += _words(text)
+    names = {p: _names(text) for p, text in texts.items()}
+    total = Counter(name for toks in names.values() for name, _ in toks)
     out = set()
     for path in sorted((ROOT / "sptag_spark").rglob("*.py")):
-        lines = texts[path].splitlines()
         module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
         for node in ast.parse(texts[path]).body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                      ast.ClassDef)):
                 continue
             start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            own = _words("\n".join(lines[start - 1:node.end_lineno]))
-            if total[node.name] - own[node.name] == 0:
+            own = sum(1 for name, line in names[path] if name == node.name
+                      and start <= line <= node.end_lineno)
+            if total[node.name] - own == 0:
                 out.add(f"{module}.{node.name}")
     return out
 
