@@ -10,6 +10,8 @@ plans/r07/.
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py q1 q2 ...
     python bench_extra.py --explain=plans/r07 --suffix=_before q1 q2
+    SPARK_GRAFT_BENCH_REPEATS=0 python bench_extra.py --explain=DIR q1
+                                           # write the plans, time nothing
     python bench_extra.py --all            # every declared query
 
 Env:
@@ -91,6 +93,9 @@ def main() -> int:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
             print(f"wrote {path}")
+    if repeats == 0:  # plans only: no warm pass, no timing summary
+        spark.stop()
+        return 0
 
     samples: dict[str, list[float]] = {n: [] for n in names}
     for name in names:  # warm pass, untimed

@@ -522,7 +522,7 @@ def _reconcile_heads(spark, path: str, cents: np.ndarray,
     ivf_merge retires high-id leaves that max can dip below a retired
     leaf's id — a re-minted id would otherwise be routed by the DEAD
     leaf's stale tree centroid instead of flat-scored by its real head
-    vector. Shared by bkt_probe and the budgeted cursor's descent walk
+    vector. Shared by bkt_probe and the budgeted scan's descent walk
     (knn._budget_kernel)."""
     head_rows = spark.read.parquet(f"{path}/centroids").collect()
     live: set[int] = set()
@@ -555,11 +555,11 @@ def _descent_walker(parent: np.ndarray, cents: np.ndarray,
     `walk(q)` yields (head_id, cosine) — a priority queue over
     (−cosine, node id) seeded with the roots; popping an internal node
     scores+pushes its children, popping a LIVE leaf emits it. This is
-    the probe order the budgeted cursor rents against a bkt index — the
+    the probe order the budgeted scan rents against a bkt index — the
     tree's own frontier, not a flat global sort, so renting costs
     O(visited·branch) head scores instead of O(C) at large head counts.
     The quantized node/orphan matrices are built ONCE here and shared by
-    every walk (one factory per batch/cursor, one walk per query).
+    every walk (one factory per budget kernel, one walk per query).
 
     `q` is the np_quantize'd query (int64). Node cosines use the
     engine's exact integer matmul + IEEE op order

@@ -1157,153 +1157,3 @@ def graph_beam_search(
                 "rank", "hops")
     )
 
-
-def graph_append(
-    graph: DataFrame,
-    corpus: DataFrame,
-    new_df: DataFrame,
-    k: int = 8,
-    beam: int = 8,
-    rounds: int = 2,
-    n_seeds: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incremental graph ingest — the reference's AddIndex path for the
-    memory index (VectorIndex::AddIndex -> BKTIndex::AddIndexInternal:
-    search the CURRENT graph with the new vector, link it to its top
-    matches, and back-link those matches to it; RefineIndex restores
-    full quality at cadence).
-
-    Relational restatement, one batch of new vectors at a time:
-    1. forward edges: graph_beam_search over the EXISTING graph/corpus
-       finds each new vector's top-k old neighbors (self-matches of
-       re-ingested ids are excluded).
-    2. back-links: every found (new -> old) edge is reversed into a
-       candidate (old -> new); each affected old node re-ranks its
-       current adjacency UNION the new candidates by exact cosine and
-       keeps top-k — the same per-src window the builders use. Nodes
-       the search never reached are untouched (exactly the reference,
-       which only back-links the discovered neighbors).
-    3. result: untouched rows + re-ranked affected rows + new nodes'
-       rows, degree <= k everywhere, ranks 1..deg contiguous.
-
-    Deterministic end-to-end. Approximation matches the reference's:
-    new-node edges are as good as the beam search; a refine_knn_graph
-    pass afterwards is the RefineIndex analog."""
-    # 1. forward: new vectors search the existing graph
-    found = graph_beam_search(
-        graph, corpus, new_df, k=k + 1, beam=beam, rounds=rounds,
-        n_seeds=n_seeds, id_col=id_col, vec_col=vec_col,
-    ).filter(F.col("query_id") != F.col(id_col))
-    wk = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst").asc())
-    fwd = (found.select(F.col("query_id").alias("src"),
-                        F.col(id_col).alias("dst"), "cosine")
-           .withColumn("rank", F.row_number().over(wk).cast("int"))
-           .filter(F.col("rank") <= k))
-    # 2. back-links: affected old nodes re-rank adjacency ∪ reversals
-    back = fwd.select(F.col("dst").alias("src"),
-                      F.col("src").alias("dst"), "cosine")
-    affected = back.select("src").dropDuplicates(["src"])
-    untouched = graph.select("src", "dst", "cosine").join(
-        affected, "src", "left_anti")
-    merged = (
-        graph.select("src", "dst", "cosine").join(affected, "src",
-                                                  "left_semi")
-        .unionByName(back)
-        .dropDuplicates(["src", "dst"])
-        .withColumn("rank", F.row_number().over(wk).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-    wfin = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst").asc())
-    return (
-        untouched.withColumn("rank",
-                             F.row_number().over(wfin).cast("int"))
-        .unionByName(merged)
-        .unionByName(fwd)
-    )
-
-
-def graph_delete(
-    graph: DataFrame,
-    corpus: DataFrame,
-    delete_ids: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incremental graph delete — the reference's DeleteIndex path
-    (VectorIndex::DeleteIndex tombstones the node; the graph drops it
-    from adjacency and RefineIndex repairs quality at cadence). This
-    operator does both steps at once, with the repair LOCALIZED to the
-    nodes that actually lost edges:
-
-    1. drop every row whose src OR dst is deleted.
-    2. affected srcs (those that lost >= 1 out-edge) re-search through
-       their REMAINING adjacency: candidates = remaining neighbors ∪
-       neighbors-of-remaining-neighbors over the surviving edge set
-       (one bounded self-join — a refine iteration scoped to the
-       affected rows), exact re-rank, top-k. A src left with zero
-       surviving edges keeps zero (the reference equally cannot repair
-       a fully-orphaned node without a re-search; compose
-       graph_beam_search seeds or a rebuild for that).
-    3. untouched rows pass through bit-identical.
-
-    All shuffles key on ids; the only wide exchange is the vector join
-    onto the affected srcs' candidate lists — O(affected * k^2) rows,
-    independent of graph size."""
-    dels = F.broadcast(delete_ids.select(
-        F.col(delete_ids.columns[0]).alias("_del")))
-    alive = (
-        graph.select("src", "dst", "cosine")
-        .join(dels, F.col("src") == F.col("_del"), "left_anti")
-    )
-    survivors = alive.join(dels, F.col("dst") == F.col("_del"),
-                           "left_anti")
-    affected = (
-        alive.join(dels, F.col("dst") == F.col("_del"), "left_semi")
-        .select("src").dropDuplicates(["src"])
-    )
-    untouched = survivors.join(affected, "src", "left_anti")
-    kept = survivors.join(affected, "src", "left_semi")
-    # neighbor-of-neighbor expansion over the SURVIVING edge set,
-    # restricted to affected srcs (ids only — no vectors ride this)
-    expansion = (
-        kept.select("src", "dst")
-        .join(survivors.select(F.col("src").alias("dst"),
-                               F.col("dst").alias("_d2")), "dst")
-        .select("src", F.col("_d2").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .join(dels, F.col("dst") == F.col("_del"), "left_anti")
-    )
-    cand = (
-        kept.select("src", "dst")
-        .unionByName(expansion)
-        .repartition("dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    sv = _with_quantized(corpus, id_col, vec_col)
-    dstv = sv.select(F.col("_id").alias("dst"), F.col("_q").alias("_dq"),
-                     F.col("_norm").alias("_dn"))
-    srcv = sv.select(F.col("_id").alias("src"), F.col("_q").alias("_sq"),
-                     F.col("_norm").alias("_sn"))
-    w = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst").asc())
-    repaired = (
-        cand.join(dstv.hint("shuffle_hash"), "dst")
-        .join(srcv.hint("shuffle_hash"), "src")
-        .select(
-            "src", "dst",
-            cosine_from_quantized(
-                idot(F.col("_sq"), F.col("_dq")),
-                F.col("_sn"), F.col("_dn")).alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-    return (
-        untouched.withColumn("rank",
-                             F.row_number().over(w).cast("int"))
-        .unionByName(repaired)
-    )

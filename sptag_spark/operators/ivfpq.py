@@ -56,19 +56,7 @@ from sptag_spark.operators.knn import (
     quantize,
     select_centroids,
 )
-from sptag_spark.operators.pq import pq_codebooks_md5
-
-
-def _encode_codes(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
-    """(n, dim) int64 -> (n, m) int32 per-subspace argmin codes (exact
-    integer squared-L2, numpy first-min == lowest-code tiebreak)."""
-    m, kk, dsub = codebooks.shape
-    codes = np.empty((len(X), m), dtype=np.int32)
-    for s in range(m):
-        sl = X[:, s * dsub:(s + 1) * dsub]
-        d = ((sl[:, None, :] - codebooks[s][None, :, :]) ** 2).sum(axis=2)
-        codes[:, s] = d.argmin(axis=1)
-    return codes
+from sptag_spark.operators.pq import _encode_codes, pq_codebooks_md5
 
 
 def _assign_encode(

@@ -1736,42 +1736,6 @@ def ivf_probe(
                               queries, k, id_col, vec_col, predicate)
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 32,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    replica_count: int = 1,
-) -> DataFrame:
-    """One-shot approximate top-k (build-in-memory + probe): probe only
-    the nprobe nearest buckets per query. For repeated probing use
-    ivf_build + ivf_probe — the persisted index is the scale path.
-
-    Deterministic end-to-end (md5 head selection, exact integer math,
-    RNG replica closure when replica_count > 1), so the DuckDB oracle
-    replicates it exactly; recall@k vs brute force is additionally gated
-    in tests (reference harness TruthSet.h:242-285).
-    """
-    from sptag_spark.operators import probe
-
-    centroids = select_centroids(corpus, n_centroids, id_col, vec_col)
-    bucketed = assign_buckets(corpus, centroids, id_col, vec_col,
-                              replica_count=replica_count)
-    kernel = probe.ivf_kernel(
-        (*_collect_centroids(centroids),
-         centroids.schema["centroid_id"].dataType), nprobe)
-    # queries x nprobe probe rows: broadcast, and the in-memory buckets
-    # have no partitions to prune
-    probes = probe.Probes(
-        F.broadcast(probe.probe_frame(queries, kernel, id_col, vec_col)),
-        lambda post: post, False)
-    return probe.score_probes(bucketed, probes, queries, k, id_col,
-                              vec_col)
-
-
 def multi_index_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1791,14 +1755,15 @@ def multi_index_topk(
     the scan is whole-stage-codegen'd. Query i's weight is weights[i],
     matching the reference's weighted-sum rank UDF (:41-49).
 
-    For MANY queries (beyond ~10², where inlining N×dim literals stops
-    compiling well) use `multi_index_topk_join` — same semantics, the
-    query frame broadcasts as data instead of literals.
+    The driver collects at most len(weights) + 1 query rows, enough to
+    tell a count mismatch without pulling a large frame.
     """
-    qrows = queries.select(id_col, vec_col).collect()
-    if len(qrows) != len(weights):
-        raise ValueError(f"multi_index_topk: {len(qrows)} queries but "
-                         f"{len(weights)} weights (one weight per query)")
+    n = len(weights)
+    qrows = queries.select(id_col, vec_col).limit(n + 1).collect()
+    if len(qrows) != n:
+        got = f"more than {n}" if len(qrows) > n else str(len(qrows))
+        raise ValueError(f"multi_index_topk: {got} queries but {n} "
+                         "weights (one weight per query)")
     c = _with_quantized(corpus, id_col, vec_col)
     score = F.lit(0.0)
     for row, w in zip(qrows, weights):
@@ -1811,156 +1776,6 @@ def multi_index_topk(
     )
 
 
-def multi_index_topk_join(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    weight_col: str = "weight",
-) -> DataFrame:
-    """Rank join for LARGE query sets: the query frame (with its weight
-    column) broadcasts as data, every (corpus row × query) pair scores
-    in one codegen pass, and the weighted sum folds in a map-side-
-    combinable aggregation — no literals, no driver collect, so 10⁴
-    queries cost one broadcast instead of 10⁴×dim inlined constants.
-    Same semantics as multi_index_topk (which stays the small-N fast
-    path); agreement is tested to float tolerance (the aggregation's
-    addition order is partition-dependent)."""
-    c = _with_quantized(corpus, id_col, vec_col)
-    q = _with_quantized(queries, id_col, vec_col) \
-        .withColumnRenamed("_id", "_qid") \
-        .withColumnRenamed("_q", "_qq") \
-        .withColumnRenamed("_norm", "_qnorm")
-    w = queries.select(
-        F.col(id_col).alias("_qid"), F.col(weight_col).alias("_w")
-    )
-    scored = (
-        c.join(F.broadcast(q.join(w, "_qid")))
-        .withColumn(
-            "_s",
-            F.col("_w") * cosine_from_quantized(
-                idot(F.col("_q"), F.col("_qq")),
-                F.col("_norm"), F.col("_qnorm"),
-            ),
-        )
-        .groupBy("_id")
-        .agg(F.sum("_s").alias("score"))
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col("_id").asc())
-        .limit(k)
-        .select(F.col("_id").alias("vec_id"), "score")
-    )
-
-
-def paged_topk(
-    corpus: DataFrame,
-    query_vec: list[float],
-    page_size: int = 10,
-    max_pages: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Iterative top-k cursor (reference Q4 VBASE GetIterator /
-    SearchIndexIterativeNext, ResultIterator.cpp:28-57): yield pages of
-    ascending-distance results. Spark restatement = keyset pagination —
-    each page re-queries with `cosine < last_seen` (strictly colder than
-    everything already returned) instead of OFFSET, so page N+1 is one
-    pruned scan, not a rescan of N pages. Tie-safety comes from the
-    (cosine, id) composite keyset."""
-    c = _with_quantized(corpus, id_col, vec_col).withColumn(
-        "cosine", _literal_cosine(query_vec),
-    ).select(F.col("_id").alias(id_col), "cosine")
-    yield from _keyset_pages(c, id_col, page_size, max_pages)
-
-
-def _keyset_pages(scan: DataFrame, id_col: str, page_size: int,
-                  max_pages: int):
-    """Shared keyset-pagination loop (paged_topk and paged_topk_indexed):
-    each page re-queries strictly colder than the last (cosine, id)
-    keyset — page N+1 is one pruned scan, never a rescan of N pages;
-    ties are safe via the composite keyset."""
-    last = None  # (cosine, id) keyset
-    for _ in range(max_pages):
-        page_df = scan
-        if last is not None:
-            page_df = scan.filter(
-                (F.col("cosine") < F.lit(last[0]))
-                | ((F.col("cosine") == F.lit(last[0]))
-                   & (F.col(id_col) > F.lit(last[1])))
-            )
-        rows = page_df.orderBy(F.col("cosine").desc(),
-                               F.col(id_col).asc()).limit(page_size).collect()
-        if not rows:
-            return
-        yield rows
-        last = (rows[-1]["cosine"], rows[-1][id_col])
-
-
-def _budgeted_scan(
-    spark,
-    path: str,
-    query_vec: list[float],
-    max_check: int | None,
-    id_col: str,
-    vec_col: str,
-    predicate=None,
-):
-    """Shared tail for the Relaxed-Monotonicity iterative scan
-    (reference Q4: ResultIterator.cpp:28-57 rents a WorkSpace with
-    p_maxCheck; BKTIndex.cpp:431-434 flips m_relaxedMono once results
-    stop being provably monotone).
-
-    The head walk is the batch cursor's probe kernel (_budget_kernel)
-    run on the one-row query matrix, so the single-query cursor probes
-    exactly the buckets relaxed_mono_topk_batch would, with the same
-    threshold. The scan then reads ONLY the probed bucket partitions
-    (static partition pruning).
-
-    Monotonicity: within the probed subset pages are exactly sorted, so
-    the reference's `gnode.distance > m_Results.worst()` clause never
-    fires; the only way order can be violated vs the FULL index is a
-    better vector hiding in an unprobed posting. The analog of the
-    reference's SPTQueue head-distance frontier is therefore the best
-    head cosine among unprobed NON-EMPTY heads: results at or above it
-    are still provably monotone, results below it carry
-    relaxed_mono = 1. No budget (max_check=None) probes everything and
-    never flags — iterative == batch exactly.
-
-    Returns (scan_df with [id_col, 'cosine', 'relaxed_mono'], threshold,
-    probed_bucket_ids)."""
-    import numpy as np
-
-    _, buckets, thresholds = _budget_kernel(spark, path, max_check).fn(
-        np.asarray([query_vec], dtype=np.float64))
-    probed = [int(c) for c in buckets]
-    threshold = thresholds[0]
-
-    scan = read_postings(spark, path, id_col) \
-        .filter(F.col("bucket").isin(probed))
-    if predicate is not None:
-        # the reference's p_filterFunc (ResultIterator.cpp:8): results
-        # filter AFTER the budget walk — checked-leaf accounting counts
-        # every visited row exactly like m_iNumberOfCheckedLeaves, and
-        # the predicate lands in the same pruned scan as a pushed filter
-        scan = scan.filter(predicate)
-    if "replica_rank" in scan.columns:
-        # replica copies score identically: one candidate per vector
-        # (the reference's visited set, P5)
-        scan = scan.dropDuplicates([id_col])
-    scan = _with_quantized(scan, id_col, vec_col).select(
-        F.col("_id").alias(id_col),
-        _literal_cosine(query_vec).alias("cosine"),
-    )
-    if threshold is None:
-        flag = F.lit(0)
-    else:
-        flag = F.when(F.col("cosine") < F.lit(threshold), 1).otherwise(0)
-    scan = scan.withColumn("relaxed_mono", flag.cast("int"))
-    return scan, threshold, probed
-
-
 def relaxed_mono_topk(
     spark,
     path: str,
@@ -1971,16 +1786,56 @@ def relaxed_mono_topk(
     vec_col: str = "embedding",
     predicate=None,
 ) -> DataFrame:
-    """Batch form of the budgeted iterative scan: top-k of the
-    budget-pruned index scan with the per-row relaxed_mono flag — the
-    frame a VBASE-style consumer sees after draining the cursor. One
-    declarative plan (pruned scan → top-k), used by the contract query;
-    paged_topk_indexed serves the same rows as a cursor. On a bkt index
-    the head walk follows the tree's SPTQueue descent."""
-    scan, _, _ = _budgeted_scan(spark, path, query_vec, max_check,
-                                id_col, vec_col, predicate)
+    """Relaxed-Monotonicity budgeted top-k for one query (reference Q4:
+    ResultIterator.cpp:28-57 rents a WorkSpace with p_maxCheck;
+    BKTIndex.cpp:431-434 flips m_relaxedMono once results stop being
+    provably monotone): top-k of the budget-pruned index scan with a
+    per-row relaxed_mono flag. One declarative plan (pruned scan →
+    top-k), used by the contract query.
+
+    The head walk is _budget_kernel run on the one-row query matrix, so
+    it probes exactly the buckets relaxed_mono_topk_batch would, with
+    the same threshold; on a bkt index it follows the tree's SPTQueue
+    descent. The scan then reads ONLY the probed bucket partitions
+    (static partition pruning).
+
+    Monotonicity: within the probed subset rows are exactly sorted, so
+    the reference's `gnode.distance > m_Results.worst()` clause never
+    fires; the only way order can be violated vs the FULL index is a
+    better vector hiding in an unprobed posting. The analog of the
+    reference's SPTQueue head-distance frontier is therefore the best
+    head cosine among unprobed NON-EMPTY heads: results at or above it
+    are still provably monotone, results below it carry
+    relaxed_mono = 1. No budget (max_check=None) probes everything and
+    never flags — the result equals the exact flat ranking."""
+    import numpy as np
+
+    _, buckets, thresholds = _budget_kernel(spark, path, max_check).fn(
+        np.asarray([query_vec], dtype=np.float64))
+    threshold = thresholds[0]
+    scan = read_postings(spark, path, id_col) \
+        .filter(F.col("bucket").isin([int(c) for c in buckets]))
+    if predicate is not None:
+        # the reference's p_filterFunc (ResultIterator.cpp:8): results
+        # filter AFTER the budget walk — checked-leaf accounting counts
+        # every visited row exactly like m_iNumberOfCheckedLeaves, and
+        # the predicate lands in the same pruned scan as a pushed filter
+        scan = scan.filter(predicate)
+    if "replica_rank" in scan.columns:
+        # replica copies score identically: one candidate per vector
+        # (the reference's visited set, P5)
+        scan = scan.dropDuplicates([id_col])
+    if threshold is None:
+        flag = F.lit(0)
+    else:
+        flag = F.when(F.col("cosine") < F.lit(threshold), 1).otherwise(0)
     return (
-        scan.orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        _with_quantized(scan, id_col, vec_col).select(
+            F.col("_id").alias(id_col),
+            _literal_cosine(query_vec).alias("cosine"),
+        )
+        .withColumn("relaxed_mono", flag.cast("int"))
+        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
         .limit(k)
         .withColumn(
             "rank",
@@ -1994,7 +1849,7 @@ def relaxed_mono_topk(
 
 def _budget_kernel(spark, path: str, max_check: int | None):
     """The Relaxed-Monotonicity budget walk as a probe kernel
-    (operators/probe.py): _budgeted_scan runs it on a one-row query
+    (operators/probe.py): relaxed_mono_topk runs it on a one-row query
     matrix, relaxed_mono_topk_batch on every query of a batch. Emits
     (rows, buckets, thresholds): the query's threshold rides every
     probe row (None means nothing was truncated).
@@ -2109,7 +1964,7 @@ def relaxed_mono_topk_batch(
     (ResultIterator.cpp:28-57), but Spark's win is batch. Row-for-row
     parity with relaxed_mono_topk on every query: same probe sets,
     thresholds, cosines, ranks and relaxed_mono flags (self NOT
-    excluded — the cursor returns whatever lives in the probed
+    excluded — the scan returns whatever lives in the probed
     postings, reference semantics).
 
     The budget walk is this family's probe kernel in the shared
@@ -2134,39 +1989,6 @@ def relaxed_mono_topk_batch(
         .withColumn("relaxed_mono", flag.cast("int"))
         .select("query_id", id_col, "cosine", "rank", "relaxed_mono")
     )
-
-
-def paged_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    page_size: int = 10,
-    max_pages: int = 100,
-    max_check: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    predicate=None,
-):
-    """Iterative top-k cursor over a PERSISTED IVF index with the
-    reference's Relaxed-Monotonicity budget (Q4: GetIterator /
-    SearchIndexIterativeNext, ResultIterator.cpp:28-57; flag at
-    BKTIndex.cpp:431-434). The budget is rented once per cursor —
-    exactly RentWorkSpace(p_maxCheck) — and every page is served from
-    the budget-pruned scan by keyset pagination (strictly colder than
-    the last returned (cosine, id), so page N+1 is one pruned scan).
-
-    Each yielded page is a list of Rows carrying `relaxed_mono`: 0 while
-    results are provably in true global distance order, 1 once they sink
-    below the best unprobed head's cosine (the consumer's early-exit
-    signal — a VBASE top-k-with-filter loop must keep draining flagged
-    pages instead of stopping at the first threshold miss). With
-    max_check=None nothing truncates, no row flags, and the
-    concatenation of pages equals the exact flat scan. On a bkt index
-    the budget walk follows the tree's SPTQueue descent order, matching
-    the index's own probe design."""
-    scan, _, _ = _budgeted_scan(spark, path, query_vec, max_check,
-                                id_col, vec_col, predicate)
-    yield from _keyset_pages(scan, id_col, page_size, max_pages)
 
 
 def mrr_at_k(approx: DataFrame, truth: DataFrame) -> float:

@@ -1,4 +1,5 @@
-"""Product quantization (PQ) — compressed vectors + ADC search.
+"""Product quantization (PQ): one encoder, integer ADC search and the
+OPQ trainer.
 
 The reference trains per-subspace k-means(256) codebooks and scores with
 asymmetric distance (ADC) lookup tables (PQQuantizer.h:23-208, training
@@ -6,64 +7,44 @@ src/Quantizer/main.cpp:116-175, ADC tables PQQuantizer.h:111-130). Spark
 restatement:
 
 - train  = opq_train: numpy k-means per subspace on a deterministic
-  hash-ordered sample collected to the driver (opq_iters=0 is plain PQ);
-- encode = per-slice argmin against codebook literals, emitting
-  array<int> codes — one codegen scan, 4 bytes/subspace here
-  (uint8 at rest via parquet dictionary encoding);
-- ADC    = per query, precompute the m x k table of
-  ||q_slice - codeword||^2 on the driver (tiny numpy), inline it as
-  array literals, and score every encoded row with m element_at gathers
-  + adds — no Python, no join, whole-stage codegen (the exact LUT-probe
-  structure of the reference's m_DistanceTables);
-- reconstruct = codeword gather, for residual/debug use.
+  hash-ordered sample collected to the driver (opq_iters=0 is plain PQ),
+  or pq_codebooks_md5: the k md5-smallest rows, quantized, as integer
+  codebooks;
+- encode = _encode_codes, the one numpy encoder: per-subspace argmin of
+  the squared L2 against each codebook, first-min tiebreak. The OPQ
+  trainer, the ADC scan below and the IVF-PQ build (operators/ivfpq.py)
+  all call it;
+- ADC    = pq_adc_topk_int: per query, the m x k table of
+  ||q_slice - codeword||^2 is built once on the driver, and each Arrow
+  batch encodes its rows and sums table gathers (the LUT-probe
+  structure of the reference's m_DistanceTables). All int64, so the
+  DuckDB oracle reproduces it bit-exactly;
+- reconstruct = pq_reconstruct, the codeword gather (OPQ's Procrustes
+  step and the quantization-error tests).
 
-Approximate by construction: tests gate recall vs brute_force_topk
+Approximate by construction: tests gate recall vs an exact ranking
 (reference TruthSet.h:242-285 harness shape).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sptag_spark.functions.vecarrow import list_to_matrix
 
 
-def _slice_col(vec_col: str, start: int, length: int) -> Column:
-    return F.slice(F.col(vec_col), start + 1, length)
-
-
-def _argmin_code(vec_slice: Column, codebook: np.ndarray) -> Column:
-    """Index of the nearest codeword (squared L2), lowest-index tiebreak."""
-    dists = F.array(*[
-        F.aggregate(
-            F.zip_with(
-                vec_slice,
-                F.array(*[F.lit(float(x)) for x in cw]),
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for cw in codebook
-    ])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int> of length m) — one codegen scan."""
-    m, _, dsub = codebooks.shape
-    codes = F.array(*[
-        _argmin_code(_slice_col(vec_col, s * dsub, dsub), codebooks[s])
-        for s in range(m)
-    ])
-    return df.select(F.col(id_col), codes.alias("codes"))
+def _encode_codes(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(n, dim) -> (n, m) int32 per-subspace argmin codes (squared L2,
+    numpy first-min == lowest-code tiebreak; exact on int64 input)."""
+    m, kk, dsub = codebooks.shape
+    codes = np.empty((len(X), m), dtype=np.int32)
+    for s in range(m):
+        sl = X[:, s * dsub:(s + 1) * dsub]
+        d = ((sl[:, None, :] - codebooks[s][None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = d.argmin(axis=1)
+    return codes
 
 
 def pq_reconstruct(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
@@ -114,11 +95,11 @@ def pq_adc_topk_int(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact-integer PQ encode + ADC top-k: quantization stays a JVM
-    expression (HALF_UP), then one numpy pass per Arrow batch computes
-    per-subspace argmin codes (first-index tiebreak) and ADC =
-    Σ_s T_s[code_s], T from the same quantized ints on the driver. Every
-    intermediate is int64 (order-independent), so the DuckDB oracle
-    reproduces values hash-exactly. An m×k expression-tree form of the
+    expression (HALF_UP), then one numpy pass per Arrow batch encodes
+    (_encode_codes) and sums ADC = Σ_s T_s[code_s], T from the same
+    quantized ints on the driver. Every intermediate is int64
+    (order-independent), so the DuckDB oracle reproduces values
+    hash-exactly. An m×k expression-tree form of the
     same math compiles into one giant generated method and drops out of
     codegen — the Arrow kernel is both the faster and the scale shape
     (cf. knn.assign_buckets)."""
@@ -146,12 +127,8 @@ def pq_adc_topk_int(
             if len(X) == 0:
                 adc = np.array([], dtype=np.int64)
             else:
-                adc = np.zeros(len(X), dtype=np.int64)
-                for s in range(m):
-                    sl = X[:, s * dsub:(s + 1) * dsub]
-                    d = ((sl[:, None, :] - codebooks[s][None, :, :]) ** 2
-                         ).sum(axis=2)                    # (n, k) exact
-                    adc += tables[s][d.argmin(axis=1)]    # first-min tie
+                codes = _encode_codes(X, codebooks)       # (n, m)
+                adc = tables[np.arange(m), codes].sum(axis=1)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(id_col), pa.array(adc, pa.int64())],
                 names=[id_col, "adc_dist"],
@@ -182,16 +159,6 @@ def _np_kmeans(X: np.ndarray, k: int, iters: int = 20) -> np.ndarray:
     return C
 
 
-def _np_encode_reconstruct(Xr: np.ndarray, books: list[np.ndarray],
-                           dsub: int) -> np.ndarray:
-    parts = []
-    for s, B in enumerate(books):
-        sl = Xr[:, s * dsub:(s + 1) * dsub]
-        codes = ((sl[:, None, :] - B[None, :, :]) ** 2).sum(-1).argmin(1)
-        parts.append(B[codes])
-    return np.concatenate(parts, axis=1)
-
-
 def opq_train(
     df: DataFrame,
     m: int = 4,
@@ -211,7 +178,7 @@ def opq_train(
     with the same trainer, which is the controlled baseline tests use.
 
     Returns (R, codebooks) with R (dim, dim) and codebooks (m, k, dim/m);
-    encode/score with opq_encode / opq_adc_topk.
+    ivf_pq_build(rotation='opq') encodes and scores with them.
     """
     rows = (
         df.select(id_col, vec_col)
@@ -230,7 +197,8 @@ def opq_train(
             _np_kmeans(Xr[:, s * dsub:(s + 1) * dsub], k, kmeans_iters)
             for s in range(m)
         ]
-        Y = _np_encode_reconstruct(Xr, books, dsub)
+        B = np.stack(books)
+        Y = pq_reconstruct(_encode_codes(Xr, B), B)
         U, _, Vt = np.linalg.svd(X.T @ Y)
         R = U @ Vt
     Xr = X @ R
@@ -239,38 +207,6 @@ def opq_train(
         for s in range(m)
     ]
     return R, np.stack(books)
-
-
-def opq_rotate(
-    df: DataFrame,
-    R: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vec) -> (id, vec @ R): one float64 matmul per Arrow batch
-    (dim×dim rotation rides in the closure — no join, no shuffle)."""
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, StructField, StructType,
-    )
-
-    out_schema = StructType([
-        StructField(id_col, df.schema[id_col].dataType),
-        StructField(vec_col, ArrayType(DoubleType())),
-    ])
-    sel = df.select(id_col, vec_col)
-
-    def run(batches):
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            rot = X @ R if len(X) else X.reshape(0, R.shape[1])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_col),
-                 pa.array(list(rot), pa.list_(pa.float64()))],
-                names=[id_col, vec_col],
-            )
-
-    return sel.mapInArrow(run, schema=out_schema)
 
 
 def opq_rotate_col(
@@ -311,55 +247,3 @@ def opq_rotate_col(
             )
 
     return df.mapInArrow(run, schema=out_schema)
-
-
-def opq_encode(
-    df: DataFrame,
-    R: np.ndarray,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Rotate (Arrow matmul) then PQ-encode (codegen argmin scan)."""
-    return pq_encode(opq_rotate(df, R, id_col, vec_col), codebooks,
-                     id_col, vec_col)
-
-
-def opq_adc_topk(
-    encoded: DataFrame,
-    codebooks: np.ndarray,
-    R: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC top-k in the rotated space: rotations are orthogonal, so
-    ||q - x|| == ||qR - xR|| and the query rotates on the driver."""
-    q = np.asarray(query_vec, dtype=np.float64) @ R
-    return pq_adc_topk(encoded, codebooks, list(q), k, id_col)
-
-
-def pq_adc_topk(
-    encoded: DataFrame,
-    codebooks: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Asymmetric-distance top-k: approx ||q - x||^2 = sum_s T_s[code_s]
-    with T_s[j] = ||q_s - codeword_sj||^2 (PQQuantizer.h:111-130)."""
-    m, kk, dsub = codebooks.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    assert q.shape[0] == m * dsub
-    dist = F.lit(0.0)
-    for s in range(m):
-        qs = q[s * dsub:(s + 1) * dsub]
-        table = ((codebooks[s] - qs) ** 2).sum(axis=1)  # (k,)
-        tlit = F.array(*[F.lit(float(t)) for t in table])
-        dist = dist + F.element_at(tlit, F.element_at("codes", s + 1) + 1)
-    return (
-        encoded.withColumn("adc_dist", dist)
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "adc_dist")
-    )

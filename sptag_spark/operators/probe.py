@@ -4,7 +4,7 @@ The reference's query layer is a single shape — select the posting
 lists to read, scan only those, score, merge the top-k
 (SPANNIndex.cpp:293-395; ExtraStaticSearcher.h:260-411). Every entry
 point that probes a persisted `partitionBy('bucket')` index (flat IVF,
-IVF-PQ, BKT, the two-level hierarchy and the batch budget cursor) runs
+IVF-PQ, BKT, the two-level hierarchy and the batch budgeted scan) runs
 it through this module in two steps:
 
 - **Selection** (`select_probes`). One limit-bounded Arrow collect of
@@ -22,10 +22,8 @@ it through this module in two steps:
   broadcast; one rank window. Waves score per bucket inside cogrouped
   Arrow kernels, so the candidate blowup never becomes Spark rows.
 
-In-memory `knn.ivf_topk` skips selection (its broadcast `probe_frame`
-joins the in-memory buckets directly) and shares the scoring tail; the
-single-query budget cursor runs the batch budget kernel on its one-row
-query matrix.
+The single-query budgeted scan (`knn.relaxed_mono_topk`) runs the batch
+budget kernel on its one-row query matrix.
 """
 
 from __future__ import annotations

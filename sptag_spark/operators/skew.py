@@ -2,18 +2,13 @@
 
 The reference equalizes partition sizes with a lambda-penalized k-means
 (BKTree.h:219-333) and auto-tunes the penalty from observed counts
-(DynamicFactorSelect, BKTree.h:437-486); replicaCount=8 replicates border
-rows across partitions (ExtraStaticSearcher.h:735-753). The relational
-equivalents:
+(DynamicFactorSelect, BKTree.h:437-486). The relational equivalents:
 
 - plan_salts: measure per-key counts (one cheap agg — the 'observed
   partition sizes' input), assign each hot key ceil(count/target) salts;
 - salted_agg: two-phase aggregation — partial agg on (key, salt), final
   agg on key. Any algebraic aggregate (sum/count/min/max) composes; avg
-  is derived sum/count at the end;
-- salted_join: the big side salts each hot-key row uniformly by hash; the
-  other side REPLICATES hot-key rows once per salt (the reference's
-  replica idea) and the join runs on (key, salt).
+  is derived sum/count at the end.
 
 AQE's skew-join splitting handles runtime stragglers; explicit salting is
 for the *planned* hot keys (doc_id/source) where the skew is data-law,
@@ -142,27 +137,3 @@ def salted_agg(
         F.col(f"sum_{value_col}").cast("double") / F.col(f"count_{value_col}"),
     )
 
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_map: dict,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where `big` has hot keys: big rows salt uniformly, small
-    rows replicate per salt (reference replicaCount pattern). Columns of
-    both frames survive; the salt column does not."""
-    big_s = _with_salt(big, key, salt_map)
-    if len(salt_map) <= _WHEN_CHAIN_MAX:
-        n = F.lit(1)
-        for kv, s in salt_map.items():
-            n = F.when(F.col(key) == F.lit(kv), F.lit(int(s))).otherwise(n)
-        small_r = small.withColumn(
-            SALT_COL, F.explode(F.sequence(F.lit(0), n - 1))
-        )
-    else:
-        small_r = _with_nsalts(small, key, salt_map).withColumn(
-            SALT_COL, F.explode(F.sequence(F.lit(0), F.col(_NSALTS_COL) - 1))
-        ).drop(_NSALTS_COL)
-    return big_s.join(small_r, [key, SALT_COL], how).drop(SALT_COL)

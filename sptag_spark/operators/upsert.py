@@ -1,5 +1,5 @@
-"""Versioned upsert, tombstones, and late-data rejection — the batch
-restatement of the reference's fresh-update layer.
+"""Versioned upsert and tombstones — the batch restatement of the
+reference's fresh-update layer.
 
 SPTAG tracks a per-row uint8 version; a posting entry is visible only if
 its stored version equals the current version (ExtraDynamicSearcher.h:680)
@@ -9,9 +9,7 @@ relational equivalents, each one shuffle or less:
 - upsert_latest: union base+updates, keep the highest (version, ts) row
   per key — Iceberg MERGE INTO semantics as a window;
 - apply_deletes: left_anti against the tombstone set (Iceberg delete
-  files; reference Labelset P2);
-- reject_stale: drop updates older than the key's current version (the
-  late-data guard T6 applies during reassign).
+  files; reference Labelset P2).
 """
 
 from __future__ import annotations
@@ -51,21 +49,3 @@ def apply_deletes(df: DataFrame, deletes: DataFrame,
     """Tombstone filter: drop rows whose key appears in `deletes`."""
     return df.join(deletes.select(*keys).distinct(), keys, "left_anti")
 
-
-def reject_stale(
-    updates: DataFrame,
-    current: DataFrame,
-    keys: list[str],
-    version_col: str = "version",
-) -> DataFrame:
-    """Keep only updates strictly newer than the current version per key
-    (unknown keys pass — they are inserts). The reference drops stale
-    reassigns the same way (version mismatch => skip)."""
-    cur = current.groupBy(*keys).agg(
-        F.max(version_col).alias("__cur_version")
-    )
-    joined = updates.join(cur, keys, "left")
-    return joined.filter(
-        F.col("__cur_version").isNull()
-        | (F.col(version_col) > F.col("__cur_version"))
-    ).drop("__cur_version")

@@ -265,30 +265,26 @@ def test_multilevel_lifecycle_split_merge_delete(emb_small, spark,
                   for r in want_del)
 
 
-def test_budgeted_cursor_over_bkt_index(emb_small, spark, tmp_path):
-    """The Relaxed-Monotonicity cursor only needs the flat
+def test_relaxed_mono_over_bkt_index(emb_small, spark, tmp_path):
+    """The Relaxed-Monotonicity scan only needs the flat
     centroids+postings contract, which the BKT index shares: with no
-    budget the drained pages over a BKT index equal the exact flat-scan
-    cursor (Q4 composes with Q5)."""
+    budget its result over a BKT index equals the exact flat ranking
+    and no row flags (Q4 composes with Q5)."""
     from sptag_spark.operators.bkt import bkt_build
-    from sptag_spark.operators.knn import paged_topk, paged_topk_indexed
+    from sptag_spark.operators.knn import brute_force_topk, relaxed_mono_topk
 
     path = str(tmp_path / "bkt")
     bkt_build(emb_small, path, branch=4, leaf_max=64, cell_iters=5)
     qvec = [float(x)
             for x in emb_small.filter("vec_id = 0").first()["embedding"]]
 
-    def drain(gen, n):
-        rows = []
-        for page in gen:
-            rows.extend(page)
-            if len(rows) >= n:
-                break
-        return [(r["vec_id"], r["cosine"]) for r in rows[:n]]
-
-    got = drain(paged_topk_indexed(spark, path, qvec, page_size=9), 27)
-    want = drain(paged_topk(emb_small, qvec, page_size=9), 27)
-    assert got == want
+    got = relaxed_mono_topk(spark, path, qvec, k=27).collect()
+    want = sorted(brute_force_topk(emb_small, emb_small.filter("vec_id = 0"),
+                                   k=27, exclude_self=False).collect(),
+                  key=lambda r: r["rank"])
+    assert [(r["vec_id"], r["cosine"]) for r in got] \
+        == [(r["vec_id"], r["cosine"]) for r in want]
+    assert all(r["relaxed_mono"] == 0 for r in got)
 
 
 def test_stream_ingest_into_bkt_index(emb_small, spark, tmp_path):
@@ -460,7 +456,7 @@ def test_cli_reassign_rejects_bkt_index(spark, emb_small, tmp_path,
 
 
 def test_budget_walk_tree_descent_order(emb_small, spark, tmp_path):
-    """VERDICT r5 #7: on a bkt index the budgeted cursor's head walk is
+    """VERDICT r5 #7: on a bkt index the budgeted scan's head walk is
     the tree's own SPTQueue best-first descent, not a flat global sort.
     Frontier-order assert: the probed sequence equals an independent
     heapq walk over the persisted tree, and on a depth>=2 tree it
@@ -468,7 +464,7 @@ def test_budget_walk_tree_descent_order(emb_small, spark, tmp_path):
     import heapq
 
     from sptag_spark.operators.bkt import _read_tree, bkt_build
-    from sptag_spark.operators.knn import _budgeted_scan
+    from sptag_spark.operators.knn import _budget_kernel
     from sptag_spark.functions.vecarrow import (exact_int_matmul,
                                                 np_quantize)
 
@@ -501,8 +497,9 @@ def test_budget_walk_tree_descent_order(emb_small, spark, tmp_path):
             for c in kids[nd]:
                 heapq.heappush(heap, (-float(allcos[c]), c))
 
-    _, _, probed = _budgeted_scan(spark, path, qvec, None,
-                                  "vec_id", "embedding")
+    _, buckets, _ = _budget_kernel(spark, path, None).fn(
+        np.asarray([qvec], dtype=np.float64))
+    probed = [int(c) for c in buckets]
     assert probed == want
     flat_sorted = sorted(want, key=lambda n: (-float(allcos[n]), n))
     assert probed != flat_sorted  # descent emission is NOT a global sort

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from sptag_spark.operators.knn import (
     brute_force_topk,
     cosine_near_dup_pairs,
-    ivf_topk,
     recall_at_k,
 )
 
@@ -73,10 +72,14 @@ def test_near_dup_pairs_symmetric_threshold(emb):
         assert r["cosine"] >= 0.4
 
 
-def test_ivf_recall_gate(emb):
+def test_ivf_recall_gate(emb, spark, tmp_path):
+    from sptag_spark.operators.knn import ivf_build, ivf_probe
+
     queries = emb.filter("vec_id < 16")
     exact = brute_force_topk(emb, queries, k=10)
-    approx = ivf_topk(emb, queries, k=10, n_centroids=16, nprobe=4)
+    path = str(tmp_path / "idx")
+    ivf_build(emb, n_centroids=16, path=path)
+    approx = ivf_probe(spark, path, queries, k=10, nprobe=4)
     r = recall_at_k(approx, exact)
     # nprobe=4 of 16 buckets; random-ish embeddings make IVF weak by design
     # — gate on "clearly better than the 4/16 random-bucket floor".
@@ -88,110 +91,81 @@ def test_recall_of_exact_vs_itself_is_one(emb):
     assert recall_at_k(exact, exact) == 1.0
 
 
-def test_paged_topk_equals_batch(emb):
-    """Iterative cursor == one-shot batch ranking (reference
-    IterativeScanTest.cpp:227-237: iterative results equal batch)."""
-    from sptag_spark.operators.knn import brute_force_topk, paged_topk
-
-    qrow = emb.filter("vec_id = 0").first()
-    qvec = [float(x) for x in qrow["embedding"]]
-    pages = []
-    for page in paged_topk(emb.filter("vec_id != 0"), qvec, page_size=7):
-        pages.append([(r["vec_id"], r["cosine"]) for r in page])
-        if sum(len(p) for p in pages) >= 21:
-            break
-    streamed = [v for p in pages for v in p]
-    batch = brute_force_topk(emb, emb.filter("vec_id = 0"), k=21).collect()
-    assert streamed == [(r["vec_id"], r["cosine"]) for r in sorted(
-        batch, key=lambda r: r["rank"])]
-    # pages are non-overlapping and monotonically colder
-    cosines = [c for _, c in streamed]
-    assert cosines == sorted(cosines, reverse=True)
-    ids = [i for i, _ in streamed]
-    assert len(ids) == len(set(ids))
+def _exact_ranking(corpus, emb, qid, k):
+    """(vec_id, cosine) of the exact flat ranking for query `qid`, self
+    included (the budgeted scan returns whatever lives in the postings)."""
+    rows = brute_force_topk(corpus, emb.filter(f"vec_id = {qid}"), k=k,
+                            exclude_self=False).collect()
+    return [(r["vec_id"], r["cosine"])
+            for r in sorted(rows, key=lambda r: r["rank"])]
 
 
-def test_paged_indexed_no_budget_equals_flat_cursor(emb, spark, tmp_path):
-    """Relaxed-Monotonicity cursor, no budget: every posting probes, no
-    row flags, and the page stream equals the exact flat-scan cursor
-    (reference ResultIterator with maxCheck unbounded)."""
-    from sptag_spark.operators.knn import (
-        ivf_build, paged_topk, paged_topk_indexed)
+def _budget_walk(spark, path, qvec, max_check):
+    """(probed bucket ids, threshold) of the budget walk for one query."""
+    from sptag_spark.operators.knn import _budget_kernel
+
+    _, buckets, thresholds = _budget_kernel(spark, path, max_check).fn(
+        np.asarray([qvec], dtype=np.float64))
+    return [int(c) for c in buckets], thresholds[0]
+
+
+def test_relaxed_mono_no_budget_equals_flat_ranking(emb, spark, tmp_path):
+    """Relaxed-Monotonicity scan, no budget: every posting probes, no
+    row flags, and the result equals the exact flat ranking (reference
+    ResultIterator with maxCheck unbounded)."""
+    from sptag_spark.operators.knn import ivf_build, relaxed_mono_topk
 
     path = str(tmp_path / "idx")
     ivf_build(emb, n_centroids=8, path=path)
     qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
 
-    def drain(gen, n):
-        rows = []
-        for page in gen:
-            rows.extend(page)
-            if len(rows) >= n:
-                break
-        return rows[:n]
-
-    got = drain(paged_topk_indexed(spark, path, qvec, page_size=7), 30)
-    want = drain(paged_topk(emb, qvec, page_size=7), 30)
+    got = relaxed_mono_topk(spark, path, qvec, k=30).collect()
     assert [(r["vec_id"], r["cosine"]) for r in got] \
-        == [(r["vec_id"], r["cosine"]) for r in want]
+        == _exact_ranking(emb, emb, 0, 30)
+    assert [r["rank"] for r in got] == list(range(1, 31))
     assert all(r["relaxed_mono"] == 0 for r in got)
 
 
-def test_paged_indexed_predicate_filters_results_not_budget(emb, spark,
-                                                            tmp_path):
-    """The cursor's predicate is the reference's p_filterFunc
+def test_relaxed_mono_predicate_filters_results_not_budget(emb, spark,
+                                                           tmp_path):
+    """The scan's predicate is the reference's p_filterFunc
     (ResultIterator.cpp:8): it gates RESULTS inside the same pruned
-    scan. With no budget, the filtered cursor equals the exact flat
-    cursor over the filtered corpus."""
-    from sptag_spark.operators.knn import (
-        ivf_build, paged_topk, paged_topk_indexed)
+    scan. With no budget, the filtered scan equals the exact flat
+    ranking over the filtered corpus."""
+    from sptag_spark.operators.knn import ivf_build, relaxed_mono_topk
 
     path = str(tmp_path / "idx")
     ivf_build(emb, n_centroids=8, path=path)
     qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
 
-    def drain(gen, n):
-        rows = []
-        for page in gen:
-            rows.extend(page)
-            if len(rows) >= n:
-                break
-        return [(r["vec_id"], r["cosine"]) for r in rows[:n]]
-
-    got = drain(paged_topk_indexed(spark, path, qvec, page_size=7,
-                                   predicate="vec_id % 2 = 0"), 21)
-    want = drain(paged_topk(emb.filter("vec_id % 2 = 0"), qvec,
-                            page_size=7), 21)
-    assert got == want
+    got = [(r["vec_id"], r["cosine"]) for r in relaxed_mono_topk(
+        spark, path, qvec, k=21, predicate="vec_id % 2 = 0").collect()]
+    assert got == _exact_ranking(emb.filter("vec_id % 2 = 0"), emb, 0, 21)
     assert all(v % 2 == 0 for v, _ in got)
 
 
-def test_paged_indexed_budget_truncates_and_flags(emb, spark, tmp_path):
-    """Budgeted cursor (reference BKTIndex.cpp:431-434): the scan stops
+def test_relaxed_mono_budget_truncates_and_flags(emb, spark, tmp_path):
+    """Budgeted scan (reference BKTIndex.cpp:431-434): the scan stops
     growing at max_check posting rows, results below the best unprobed
     head's cosine carry relaxed_mono=1, the flag is sticky (a suffix of
-    the stream), and the run is deterministic."""
-    from sptag_spark.operators.knn import (
-        ivf_build, paged_topk_indexed, relaxed_mono_topk)
+    the ranking), and the run is deterministic."""
+    from sptag_spark.operators.knn import ivf_build, relaxed_mono_topk
 
     path = str(tmp_path / "idx")
     ivf_build(emb, n_centroids=16, path=path)
     n_total = emb.count()
     qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
 
-    def drain_all(budget):
-        rows = []
-        for page in paged_topk_indexed(spark, path, qvec, page_size=25,
-                                       max_check=budget):
-            rows.extend(page)
-        return rows
+    def scan_all(budget):
+        return relaxed_mono_topk(spark, path, qvec, k=n_total,
+                                 max_check=budget).collect()
 
-    rows = drain_all(60)
+    rows = scan_all(60)
     # truncation really happened: the probed subset is smaller than the
     # corpus but at least covers the budget-crossing bucket
     assert len(rows) < n_total
     assert len(rows) >= min(60, n_total)
-    # stream is monotone within the scan, ids unique
+    # ranking is monotone within the scan, ids unique
     cosines = [r["cosine"] for r in rows]
     assert cosines == sorted(cosines, reverse=True)
     assert len({r["vec_id"] for r in rows}) == len(rows)
@@ -200,30 +174,25 @@ def test_paged_indexed_budget_truncates_and_flags(emb, spark, tmp_path):
     assert flags == sorted(flags), "relaxed_mono must be sticky"
     assert flags[0] == 0, "nearest-head results are monotone-safe"
     assert flags[-1] == 1, "budget truncation must flag the tail"
-    # deterministic: same budget, same stream
-    again = drain_all(60)
+    # deterministic: same budget, same rows
+    again = scan_all(60)
     assert [(r["vec_id"], r["cosine"], r["relaxed_mono"]) for r in rows] \
         == [(r["vec_id"], r["cosine"], r["relaxed_mono"]) for r in again]
-    # batch form serves the same rows as the drained cursor prefix
-    batch = relaxed_mono_topk(spark, path, qvec, k=40, max_check=60).collect()
-    assert [(r["vec_id"], r["cosine"], r["relaxed_mono"]) for r in batch] \
+    # a smaller k is the prefix of the same ranking
+    top = relaxed_mono_topk(spark, path, qvec, k=40, max_check=60).collect()
+    assert [(r["vec_id"], r["cosine"], r["relaxed_mono"]) for r in top] \
         == [(r["vec_id"], r["cosine"], r["relaxed_mono"])
             for r in rows[:40]]
     # the frontier is exactly the reference's rule: threshold = best
     # unprobed non-empty head's cosine, probed = best-first prefix of
     # heads until the budget, flags = (cosine < threshold). Recompute
     # all three independently in numpy and cross-check the scan.
-    import numpy as np
+    from sptag_spark.functions.vecarrow import exact_int_matmul, np_quantize
+    from sptag_spark.operators.knn import _collect_centroids
 
-    from sptag_spark.functions.vecarrow import exact_int_matmul
-    from sptag_spark.operators.knn import _budgeted_scan, _collect_centroids
-
-    scan, thr, probed = _budgeted_scan(spark, path, qvec, 60,
-                                       "vec_id", "embedding")
+    probed, thr = _budget_walk(spark, path, qvec, 60)
     cent_ids, cent_mat, cent_norms = _collect_centroids(
         spark.read.parquet(f"{path}/centroids"))
-    from sptag_spark.functions.vecarrow import np_quantize
-
     q = np_quantize(np.asarray([qvec], dtype=np.float64))[0]
     qn = float(np.sqrt(float((q * q).sum())))
     hcos = exact_int_matmul(q[None, :], cent_mat.T)[0] / (qn * cent_norms)
@@ -246,6 +215,10 @@ def test_paged_indexed_budget_truncates_and_flags(emb, spark, tmp_path):
     assert thr == want_thr and thr is not None
     for r in rows:
         assert r["relaxed_mono"] == (1 if r["cosine"] < thr else 0)
+    # within the probed buckets the ranking is the exact flat one
+    members = post.filter(F.col("bucket").isin(probed)).select("vec_id")
+    assert [(r["vec_id"], r["cosine"]) for r in rows] == _exact_ranking(
+        emb.join(members, "vec_id", "left_semi"), emb, 0, n_total)
 
 
 def _actual_raw_sizes(spark, path):
@@ -301,13 +274,12 @@ def test_budget_cursor_reads_persisted_sizes_not_postings(emb, spark,
     every head (cumulative fake size ~ head count < budget)."""
     import pandas as pd
 
-    from sptag_spark.operators.knn import _budgeted_scan, ivf_build
+    from sptag_spark.operators.knn import ivf_build
 
     path = str(tmp_path / "idx")
     ivf_build(emb, n_centroids=16, path=path)
     qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    _, _, probed_true = _budgeted_scan(spark, path, qvec, 60,
-                                       "vec_id", "embedding")
+    probed_true, _ = _budget_walk(spark, path, qvec, 60)
     n_heads = spark.read.parquet(f"{path}/centroids").count()
     assert len(probed_true) < n_heads  # the budget really truncates
     fake = pd.DataFrame({
@@ -320,8 +292,7 @@ def test_budget_cursor_reads_persisted_sizes_not_postings(emb, spark,
     spark.createDataFrame(fake, schema="bucket long, n long") \
         .coalesce(1).write.mode("overwrite") \
         .parquet(f"{path}/postings/_sizes")
-    _, _, probed_fake = _budgeted_scan(spark, path, qvec, 60,
-                                       "vec_id", "embedding")
+    probed_fake, _ = _budget_walk(spark, path, qvec, 60)
     assert len(probed_fake) == n_heads, \
         "cursor rent must consume the persisted table"
 
@@ -462,35 +433,26 @@ def test_mrr(emb, spark):
     assert mrr_at_k(exact, fake_truth) == 0.0
 
 
-def test_multi_index_join_path_agrees_with_literal_path(emb, spark):
+def test_multi_index_weight_count_mismatch(emb):
+    """One weight per query, checked even under `python -O`; the driver
+    collects at most len(weights) + 1 query rows, so a query frame far
+    larger than the weights fails without being pulled whole."""
     from pyspark.sql import functions as F
 
-    from sptag_spark.operators.knn import (
-        multi_index_topk, multi_index_topk_join,
-    )
+    from sptag_spark.operators.knn import multi_index_topk
 
     qids = [0, 1, 3]
     weights = [0.5, 0.3, 0.2]
-    lit = multi_index_topk(
-        emb, emb.filter(F.col("vec_id").isin(qids)).orderBy("vec_id"),
-        weights=weights, k=10).collect()
-    wmap = dict(zip(qids, weights))
-    qdf = emb.filter(F.col("vec_id").isin(qids)).withColumn(
-        "weight",
-        F.element_at(
-            F.create_map(*[F.lit(x) for kv in wmap.items() for x in kv]),
-            F.col("vec_id"),
-        ),
-    )
-    jn = multi_index_topk_join(emb, qdf, k=10).collect()
-    assert [r["vec_id"] for r in lit] == [r["vec_id"] for r in jn]
-    for a, b in zip(lit, jn):
-        assert abs(a["score"] - b["score"]) < 1e-12
-    # one weight per query, checked even under `python -O`
-    with pytest.raises(ValueError, match="3 queries but 2 weights"):
+    with pytest.raises(ValueError, match="more than 2 queries but 2 weights"):
         multi_index_topk(
             emb, emb.filter(F.col("vec_id").isin(qids)),
             weights=weights[:2], k=10)
+    with pytest.raises(ValueError, match="more than 3 queries but 3 weights"):
+        multi_index_topk(emb, emb, weights=weights, k=10)
+    with pytest.raises(ValueError, match="2 queries but 3 weights"):
+        multi_index_topk(
+            emb, emb.filter(F.col("vec_id").isin(qids[:2])),
+            weights=weights, k=10)
 
 
 def test_probe_wave_auto_selects_join_mode(spark, tmp_path):

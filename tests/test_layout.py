@@ -1,87 +1,6 @@
-"""Layout-job tests: within-partition sortedness, zone-map-style file
-skipping on the sorted output, and content-invariant compaction."""
+"""Storage-layout test: parquet's encodings compress sorted postings."""
 
 from __future__ import annotations
-
-import contextlib
-import io
-from pathlib import Path
-
-import pytest
-from pyspark.sql import functions as F
-
-from sptag_spark.operators.layout import (
-    compact_small_files,
-    write_range_sorted,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def laid_out(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("layout"))
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    stats = write_range_sorted(
-        ev, out, range_cols=["user_id", "ts"], n_partitions=8, ts_col="ts"
-    )
-    return out, stats, ev
-
-
-def test_lineage_recorded(laid_out, spark):
-    out, stats, ev = laid_out
-    assert stats["n_rows"] == ev.count()
-    assert stats["min_ts"] is not None and stats["max_ts"] is not None
-    from sptag_spark.sources.manifest import Manifest
-    recs = Manifest(out).read()
-    assert recs[0]["layout"] == "range_sorted"
-    assert recs[0]["digest"] == stats["digest"]
-
-
-def test_within_partition_sorted(laid_out, spark):
-    out, _, _ = laid_out
-    df = spark.read.parquet(f"{out}/data")
-    # per input file, rows must be sorted by (user_id, ts)
-    by_file = df.withColumn("_f", F.input_file_name()).withColumn(
-        "_seq", F.monotonically_increasing_id()
-    )
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("_f").orderBy("_seq")
-    disorder = by_file.withColumn(
-        "_prev_u", F.lag("user_id").over(w)
-    ).withColumn("_prev_t", F.lag("ts").over(w)).filter(
-        F.col("_prev_u").isNotNull() & (
-            (F.col("user_id") < F.col("_prev_u"))
-            | ((F.col("user_id") == F.col("_prev_u"))
-               & (F.col("ts") < F.col("_prev_t")))
-        )
-    )
-    assert disorder.count() == 0
-
-
-def test_sorted_layout_skips_files(laid_out, spark):
-    """Range partitioning on user_id means a point predicate touches few
-    files: parquet row-group stats prune the rest (the KDT bound-based
-    pruning, KDTree.h:260-296, done by storage)."""
-    out, _, ev = laid_out
-    df = spark.read.parquet(f"{out}/data")
-    one_user = ev.select("user_id").first()["user_id"]
-    plan_df = df.filter(F.col("user_id") == one_user)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        plan_df.explain("formatted")
-    assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id," in buf.getvalue()
-    assert plan_df.count() == ev.filter(F.col("user_id") == one_user).count()
-
-
-def test_compaction_preserves_content(spark, tmp_path):
-    out = str(tmp_path / "many_files")
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    ev.repartition(16).write.parquet(out)
-    assert len(list(Path(out).rglob("*.parquet"))) >= 16
-    res = compact_small_files(spark, out, target_file_bytes=1 << 30)
-    assert res["files_after"] < res["files_before"]
-    assert spark.read.parquet(out).count() == ev.count()
 
 
 def test_sorted_postings_get_delta_compression(spark, tmp_path):

@@ -6,7 +6,9 @@ its own definition anywhere in the package, the spark-submit jobs, the
 tools, the benchmark or the driver contract. A mention in a comment,
 docstring or string does not count, and neither do tests. Code that only its
 own tests reach fails this test until it is deleted or listed below with
-a reason. No Spark session is started.
+a reason. Every TEST_ONLY name must in turn be used by a test file: a
+name that neither engine code nor any test reaches is dead code. No
+Spark session is started.
 """
 
 from __future__ import annotations
@@ -46,33 +48,6 @@ TEST_ONLY = {
     "sptag_spark.operators.knn.cosine_near_dup_pairs":
         "exact quadratic all-pairs cosine, the baseline the LSH near-dup "
         "modes are tested against",
-    "sptag_spark.operators.knn.ivf_topk":
-        "one-shot in-memory IVF build + probe; the persisted ivf_build + "
-        "ivf_probe pair is the engine path",
-    "sptag_spark.operators.knn.multi_index_topk_join":
-        "broadcast-join form of multi_index_topk for large query sets",
-    "sptag_spark.operators.knn.paged_topk":
-        "keyset-paginated top-k cursor over a frame (reference "
-        "GetIterator)",
-    "sptag_spark.operators.knn.paged_topk_indexed":
-        "paged cursor over a persisted IVF index with the relaxed-"
-        "monotonicity budget (reference SearchIndexIterativeNext)",
-    "sptag_spark.operators.layout.compact_small_files":
-        "parquet small-file compaction; test_layout checks the digest "
-        "stays the same",
-    "sptag_spark.operators.layout.write_range_sorted":
-        "range-partitioned sorted parquet write with lineage stats",
-    "sptag_spark.operators.pq.opq_encode":
-        "OPQ encode (rotate + PQ encode); test_pq checks the rotation "
-        "against plain PQ",
-    "sptag_spark.operators.pq.opq_adc_topk":
-        "ADC top-k in the OPQ-rotated space, the scoring half of the OPQ "
-        "tests",
-    "sptag_spark.operators.skew.salted_join":
-        "hot-key salted equi-join (reference replicaCount pattern)",
-    "sptag_spark.operators.upsert.reject_stale":
-        "stale-update filter of the upsert family (reference version "
-        "check)",
     "sptag_spark.functions.text.near_dup_key":
         "1-perm MinHash dedup key with per-doc sentinels for contentless "
         "text; test_streaming checks the sentinels",
@@ -88,11 +63,6 @@ TEST_ONLY = {
     "sptag_spark.operators.graph.tpt_leaf_assign":
         "TPT partition step exposed alone so tests can check leaf balance "
         "and replay",
-    "sptag_spark.operators.graph.graph_append":
-        "graph-index insert (reference AddIndex), part of the index "
-        "lifecycle",
-    "sptag_spark.operators.graph.graph_delete":
-        "graph-index delete with localized repair (reference DeleteIndex)",
     "sptag_spark.operators.kmeans.partition_sizes":
         "cluster-size readout tests use to check balanced k-means",
     "sptag_spark.operators.knn.replica_histogram":
@@ -102,23 +72,6 @@ TEST_ONLY = {
     "sptag_spark.operators.knn.recall_at_k":
         "ANN quality metric (reference CalculateRecall) that index tests "
         "gate on",
-    "sptag_spark.operators.pq.pq_reconstruct":
-        "driver-side PQ decode that tests bound the quantization error with",
-    "sptag_spark.sources.readers.read_default_binary":
-        "reader for the reference's DEFAULT vector format",
-    "sptag_spark.sources.readers.read_xvec":
-        "reader for the reference's XVEC (fvecs/ivecs) format",
-    "sptag_spark.sources.readers.read_txt_vectors":
-        "reader for the reference's TXT vector format",
-    "sptag_spark.sources.readers.write_default_binary":
-        "writer for DEFAULT files, the round-trip partner of its reader",
-    "sptag_spark.sources.readers.write_xvec":
-        "writer for XVEC files, the round-trip partner of its reader",
-    "sptag_spark.sources.readers.read_b64_vectors":
-        "reader for the reference's base64-payload TXT format",
-    "sptag_spark.sources.readers.write_b64_vectors":
-        "writer for base64-payload TXT, the round-trip partner of its "
-        "reader",
 }
 
 
@@ -161,3 +114,12 @@ def test_unreached_code_is_listed():
     assert found == set(TEST_ONLY), (
         f"unreached but not in TEST_ONLY: {sorted(found - set(TEST_ONLY))}; "
         f"in TEST_ONLY but reached or gone: {sorted(set(TEST_ONLY) - found)}")
+
+
+def test_test_only_names_are_used_by_tests():
+    used = set()
+    for path in sorted((ROOT / "tests").glob("*.py")):
+        if path.name != Path(__file__).name:
+            used.update(name for name, _ in _names(path.read_text()))
+    unused = sorted(q for q in TEST_ONLY if q.rsplit(".", 1)[1] not in used)
+    assert not unused, f"in TEST_ONLY but used by no test: {unused}"

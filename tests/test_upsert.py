@@ -1,4 +1,4 @@
-"""Upsert / tombstone / late-data tests on hand-built frames (reference
+"""Upsert / tombstone tests on hand-built frames (reference
 AlgoTest add/delete golden pattern, AlgoTest.cpp:217-231)."""
 
 from __future__ import annotations
@@ -7,7 +7,6 @@ import pytest
 
 from sptag_spark.operators.upsert import (
     apply_deletes,
-    reject_stale,
     upsert_latest,
 )
 
@@ -41,19 +40,6 @@ def test_apply_deletes(frames, spark):
     dels = spark.createDataFrame([("b",)], ["doc_id"])
     got = {r["doc_id"] for r in apply_deletes(base, dels, ["doc_id"]).collect()}
     assert got == {"a", "c"}
-
-
-def test_reject_stale(frames, spark):
-    base, _ = frames
-    upd = spark.createDataFrame(
-        [("a", 0, 99, "a-stale"),   # version 0 < current 1: rejected
-         ("a", 2, 99, "a-new"),     # newer: kept
-         ("z", 1, 99, "z-insert")], # unknown key: kept
-        COLS,
-    )
-    got = {r["payload"] for r in
-           reject_stale(upd, base, ["doc_id"], "version").collect()}
-    assert got == {"a-new", "z-insert"}
 
 
 def test_merge_then_delete_roundtrip(frames, spark):
