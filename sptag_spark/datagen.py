@@ -96,6 +96,18 @@ def gen_asof_probes(
     known doc_ids plus ~5% unknown ids; asof_ts spans before-first to
     after-last so null and latest-row edges are exercised."""
     n_docs = sequences.agg(F.countDistinct("doc_id")).collect()[0][0]
+    return _probes(spark, n_docs, n_probes, seed, miss_fraction, partitions)
+
+
+def _probes(
+    spark: SparkSession,
+    n_docs: int,
+    n_probes: int,
+    seed: int,
+    miss_fraction: float,
+    partitions: int | None,
+) -> DataFrame:
+    """``gen_asof_probes`` over a corpus of ``n_docs`` distinct doc_ids."""
     rng = spark.range(0, n_probes, 1, partitions or spark.sparkContext.defaultParallelism)
     h = _h(F.col("id"), F.lit(seed), F.lit("probe"))
     is_miss = (h % 100) < int(miss_fraction * 100)
@@ -121,10 +133,13 @@ def write_corpus(
     seed: int = 42,
     partitions: int | None = None,
 ) -> None:
+    """Write sequences.parquet and, when ``n_probes``, asof_probes.parquet.
+    Every one of the ``n_docs`` docs has a version, so the probes are
+    drawn from ``n_docs`` directly: no read-back and count of the
+    written corpus."""
     seqs = gen_sequences(spark, n_docs, seed=seed, partitions=partitions)
     seqs.write.mode("overwrite").parquet(f"{out_dir}/sequences.parquet")
     if n_probes:
-        written = spark.read.parquet(f"{out_dir}/sequences.parquet")
-        probes = gen_asof_probes(spark, written, n_probes, seed=seed,
-                                 partitions=partitions)
+        probes = _probes(spark, n_docs, n_probes, seed,
+                         miss_fraction=0.05, partitions=partitions)
         probes.write.mode("overwrite").parquet(f"{out_dir}/asof_probes.parquet")

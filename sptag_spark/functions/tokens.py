@@ -128,8 +128,12 @@ def _batch_features(tokens_arr: pa.Array, small_threshold: int = 1000) -> dict:
     if isinstance(tokens_arr, pa.ChunkedArray):
         tokens_arr = tokens_arr.combine_chunks()
     la = tokens_arr
+    # A sliced ListArray keeps its parent's offsets while ``values`` is
+    # the whole parent child array: rebase both onto the slice.
     offsets = la.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat32 = la.values.to_numpy(zero_copy_only=False)
+    flat32 = la.values.slice(offsets[0], offsets[-1] - offsets[0]) \
+        .to_numpy(zero_copy_only=False)
+    offsets -= offsets[0]
     starts, ends = offsets[:-1], offsets[1:]
     lens = ends - starts
     n = len(lens)

@@ -20,8 +20,14 @@ broadcast (AggregatorService.cpp:175-226):
   one shuffle on the keys, per-key sort, a single running
   ``last(struct(payload), ignorenulls)`` over
   rowsBetween(unboundedPreceding, currentRow). Entirely JVM-side window
-  aggregation in ONE streaming pass — no Python, exactly one shuffle of
-  probe+data combined. Packing payload into a struct guarantees all
+  aggregation in ONE streaming pass — no Python, each row shuffled at
+  most once. When the data side is already hash-partitioned on the keys
+  (it ends in a window or aggregate over them, like run_pipeline's
+  features), each side is clustered on the keys instead: Spark drops the
+  data side's repartition and the union keeps the common partitioning
+  (spark.sql.unionOutputPartitioning), so only the probe rows move.
+  Otherwise one shuffle above the union moves probe+data together.
+  Packing payload into a struct guarantees all
   payload columns come from the SAME matched row (per-column last() could
   mix rows when a payload value is genuinely null).
 
@@ -138,7 +144,43 @@ def _pay_struct(data: DataFrame, data_ts: str, payload: list[str]):
     ps = F.struct(
         F.col(data_ts).alias("matched_ts"), *[F.col(c).alias(c) for c in payload]
     )
-    return ps, data.select(ps.alias(_PAY)).schema[_PAY].dataType
+    ts = data.schema[data_ts]
+    return ps, StructType([
+        StructField("matched_ts", ts.dataType, ts.nullable, ts.metadata),
+        *[data.schema[c] for c in payload],
+    ])
+
+
+def _tagged_sides(
+    probe: DataFrame,
+    data: DataFrame,
+    keys: list[str],
+    probe_ts: str,
+    data_ts: str,
+    payload: list[str],
+) -> tuple[DataFrame, DataFrame]:
+    """The probe and data sides of the tagged union, one ``select`` each,
+    in the same column order: the probe columns (nulls on data rows but
+    the keys), the data payload packed into one struct (null on probe
+    rows), a common ts column and a probe tag."""
+    pay_struct, pay_type = _pay_struct(data, data_ts, payload)
+    p = probe.select(
+        "*",
+        F.lit(None).cast(pay_type).alias(_PAY),
+        F.col(probe_ts).alias(_TS),
+        F.lit(1).alias(_PROBE_TAG),
+    )
+    d = data.select(
+        *[
+            F.col(c) if c in keys
+            else F.lit(None).cast(probe.schema[c].dataType).alias(c)
+            for c in probe.columns
+        ],
+        pay_struct.alias(_PAY),
+        F.col(data_ts).alias(_TS),
+        F.lit(0).alias(_PROBE_TAG),
+    )
+    return p, d
 
 
 def _tagged_union(
@@ -149,27 +191,7 @@ def _tagged_union(
     data_ts: str,
     payload: list[str],
 ) -> DataFrame:
-    """probe ∪ data with a probe tag, a common ts column, and the data
-    payload packed into one struct (null on probe rows)."""
-    probe_cols = list(probe.columns)
-    pay_struct, pay_type = _pay_struct(data, data_ts, payload)
-    p = probe.select(
-        *probe_cols,
-        F.lit(None).cast(pay_type).alias(_PAY),
-        F.col(probe_ts).alias(_TS),
-        F.lit(1).alias(_PROBE_TAG),
-    )
-    d = data.select(
-        *[F.col(k) for k in keys],
-        *[
-            F.lit(None).cast(probe.schema[c].dataType).alias(c)
-            for c in probe_cols
-            if c not in keys
-        ],
-        pay_struct.alias(_PAY),
-        F.col(data_ts).alias(_TS),
-        F.lit(0).alias(_PROBE_TAG),
-    ).select(*p.columns)
+    p, d = _tagged_sides(probe, data, keys, probe_ts, data_ts, payload)
     return p.unionByName(d)
 
 
@@ -179,13 +201,29 @@ def _tag_order(strict: bool) -> Column:
     return F.col(_PROBE_TAG).desc() if strict else F.col(_PROBE_TAG).asc()
 
 
-def _unpack_pay(filled: DataFrame, probe_cols: list[str],
-                payload: list[str]) -> DataFrame:
+def _unpack_pay(filled: DataFrame, probe_cols: list[str]) -> DataFrame:
     return filled.filter(F.col(_PROBE_TAG) == 1).select(
-        *probe_cols,
-        F.col(f"{_PAY}.matched_ts").alias("matched_ts"),
-        *[F.col(f"{_PAY}.{c}").alias(c) for c in payload],
-    )
+        *probe_cols, f"{_PAY}.*")
+
+
+def _hash_partitioned_on(df: DataFrame, keys: list[str]) -> bool:
+    """Whether ``df``'s physical plan ends hash-partitioned on exactly
+    ``keys`` into the session's shuffle partition count (as after a window
+    or aggregate over them): the case in which Spark drops a
+    ``repartition(*keys)`` of ``df``. Plans ``df``; runs no job."""
+    jdf = df._jdf
+    plan = jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    part = plan.outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning" \
+            or part.numPartitions() \
+            != jdf.sparkSession().sessionState().conf().numShufflePartitions():
+        return False
+    exprs = part.expressions()
+    exprs = [exprs.apply(i) for i in range(exprs.length())]
+    return [e.name() if e.getClass().getSimpleName() == "AttributeReference"
+            else None for e in exprs] == keys
 
 
 def _asof_union(
@@ -198,18 +236,29 @@ def _asof_union(
     strict: bool,
 ) -> DataFrame:
     probe_cols = list(probe.columns)
-    unioned = _tagged_union(probe, data, keys, probe_ts, data_ts, payload)
+    p, d = _tagged_sides(probe, data, keys, probe_ts, data_ts, payload)
+    # A data side already hash-partitioned on the keys (run_pipeline's
+    # windowed features) keeps that partitioning: with both sides
+    # repartitioned on the keys, Spark drops the data side's repartition
+    # (EnsureRequirements) and the union keeps the common partitioning
+    # (spark.sql.unionOutputPartitioning), so only the probe rows move.
+    # Otherwise one Exchange above the union moves every row once. Keys
+    # typed differently per side are widened by the union after any
+    # per-side hash, which would then not match the window's.
+    if all(probe.schema[k].dataType == data.schema[k].dataType
+           for k in keys) and _hash_partitioned_on(data, keys):
+        p, d = p.repartition(*keys), d.repartition(*keys)
     w = (
         Window.partitionBy(*keys)
         .orderBy(F.col(_TS).asc(), _tag_order(strict))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    filled = unioned.select(
+    filled = p.union(d).select(
         *probe_cols,
         F.col(_PROBE_TAG),
         F.last(_PAY, ignorenulls=True).over(w).alias(_PAY),
     )
-    return _unpack_pay(filled, probe_cols, payload)
+    return _unpack_pay(filled, probe_cols)
 
 
 def _ts_ordinal(col: Column, dtype) -> Column:
@@ -416,7 +465,7 @@ def _asof_union_salted(
         filled.join(F.broadcast(carry), [*keys, _CHUNK], "left")
         .withColumn(_PAY, F.coalesce(F.col(_PAY), F.col("_carry")))
     )
-    return _unpack_pay(out, probe_cols, payload)
+    return _unpack_pay(out, probe_cols)
 
 
 def _ts_cond(probe_ts_col: Column, data_ts_col: Column, strict: bool) -> Column:

@@ -14,6 +14,12 @@ Each stage is a pure DataFrame -> DataFrame function so bench/tests can
 time or verify them separately; run_pipeline composes them and reports
 throughput (sequences/sec, tokens/sec) the way the reference's harness
 reports QPS (SSDIndex.h:61-97).
+
+A call's fixed cost is kept small: both inputs are read with the schema
+in their footers (``sources.tables.read_parquet``, no inference job), the
+counts are observed on the sink job, and the as-of join reuses the
+window's doc_id partitioning, so the feature rows are shuffled once. A
+noop-sink call runs three Spark jobs.
 """
 
 from __future__ import annotations
@@ -26,6 +32,7 @@ from pyspark.sql import functions as F
 from sptag_spark.functions.tokens import with_arrow_token_features
 from sptag_spark.operators.asof import asof_join
 from sptag_spark.operators.windows import rolling_rows, with_lag_lead
+from sptag_spark.sources.tables import read_parquet
 
 
 FEATURE_COLS = [
@@ -58,7 +65,7 @@ def serve_asof(features: DataFrame, probes: DataFrame,
     payload = [c for c in FEATURE_COLS if c in features.columns]
     return asof_join(
         probes,
-        features.select("doc_id", "ts", *payload),
+        features,
         on="doc_id",
         probe_ts="asof_ts",
         data_ts="ts",
@@ -95,10 +102,10 @@ def run_pipeline(
     seq_aggs = [F.count(F.lit(1)).alias("n_seq"),
                 F.coalesce(F.sum("n_tok"), F.lit(0)).alias("n_tok")]
     out_aggs = [F.count(F.lit(1)).alias("n_out")]
-    raw = spark.read.parquet(sequences_path)
+    raw = read_parquet(spark, sequences_path)
     feats = featurize(raw.observe(seen, *seq_aggs))
     if probes_path:
-        probes = spark.read.parquet(probes_path)
+        probes = read_parquet(spark, probes_path)
         result = serve_asof(feats, probes, strategy=asof_strategy)
     else:
         result = feats

@@ -39,6 +39,13 @@ _DEFAULTS = {
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.sql.shuffle.partitions": "32",
+    # PySpark 4 captures the Python call site (a stack walk plus py4j
+    # round trips: 11 against 1 for `col * 2`) on every Column operation
+    # by default; building featurize + serve_asof took ~1,530 round trips
+    # and 200-350 ms of each run_pipeline call, ~440 without the capture.
+    # Errors still raise with the same message, only without the Python
+    # call site. A static setting: it holds for the session's lifetime.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # glibc heap reuse for Python workers: numpy temporaries over the
     # 128 KB mmap threshold are otherwise mmap'd and unmapped on EVERY
     # kernel call, so each Arrow-cogroup group pays fresh page faults

@@ -35,6 +35,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sptag_spark.sources.tables import read_parquet
+
 BUCKET_COL = "__bucket"
 
 
@@ -144,7 +146,7 @@ def run_resumable(
         result = process(part)
         path = os.path.join(out_dir, "data", f"bucket={b}")
         result.write.mode("overwrite").parquet(path)
-        stats = digest_frame(spark.read.parquet(path), ts_col=ts_col)
+        stats = digest_frame(read_parquet(spark, path), ts_col=ts_col)
         manifest.record(b, {**stats, "key": key, "n_buckets": n_buckets})
         completed_now += 1
     recs = manifest.read()

@@ -112,6 +112,62 @@ def test_asof_union_plan_has_single_shuffle(spark):
     assert count_exchanges(got) <= 1
 
 
+def _windowed(data, key="user_id"):
+    """``data`` with a per-key window column: hash-partitioned on ``key``."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(key).orderBy("ts", "click_event_id")
+    return data.withColumn("prev_value", F.lag("click_value").over(w))
+
+
+def _agrees(got, probe, data, payload, strategy="merge"):
+    want = asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts",
+                     payload=payload, strategy=strategy)
+    cols = ["event_id", "matched_ts", *payload]
+    assert sorted(got.select(cols).collect()) \
+        == sorted(want.select(cols).collect())
+
+
+def test_asof_union_reuses_data_side_partitioning(spark):
+    """A data side already hash-partitioned on the keys crosses no second
+    Exchange: only the probe rows are shuffled for the as-of."""
+    from tests.util import union_exchanges
+
+    probe, data = _probe_data(spark)
+    data = _windowed(data)
+    payload = ["click_value", "prev_value"]
+    got = asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts",
+                    payload=payload)
+    assert union_exchanges(got) == (0, 1, 1)  # the data's own window's
+    _agrees(got, probe, data, payload)
+
+
+def test_asof_union_unpartitioned_data_side_shuffles_once(spark):
+    from tests.util import union_exchanges
+
+    probe, data = _probe_data(spark)
+    got = asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts")
+    assert union_exchanges(got) == (1, 0, 0)
+
+
+@pytest.mark.parametrize("windowed", [False, True])
+def test_asof_union_mixed_key_types_never_shuffle_twice(spark, windowed):
+    """int probe keys against long data keys: the union widens the probe
+    side's keys, so a per-side hash would not match the window's and
+    every row would cross a second Exchange. No per-side repartition."""
+    from tests.util import union_exchanges
+
+    probe, data = _probe_data(spark)
+    probe = probe.withColumn("user_id", F.col("user_id").cast("int"))
+    payload = ["click_value"]
+    if windowed:
+        data, payload = _windowed(data), payload + ["prev_value"]
+    got = asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts",
+                    payload=payload)
+    assert union_exchanges(got) == (1, 0, int(windowed))
+    _agrees(got, probe, data, payload, "broadcast")  # merge needs one type
+
+
 def test_broadcast_keeps_duplicate_probe_rows(spark):
     """Two identical probe rows must each produce an output row (the
     broadcast top-1 window partitions on a per-row uid, not the probe's

@@ -73,3 +73,18 @@ def count_exchanges(spark_df) -> int:
     with contextlib.redirect_stdout(buf):
         spark_df.explain("formatted")
     return len(re.findall(r"^\(\d+\) Exchange", buf.getvalue(), re.MULTILINE))
+
+
+def union_exchanges(spark_df) -> tuple[int, int, int]:
+    """Exchanges in the initial physical plan of an as-of union: above the
+    Union, under its first (probe) child and under its second (data)
+    child."""
+    plan = spark_df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    node, above = plan, 0
+    while node.getClass().getSimpleName() != "UnionExec":
+        above += node.getClass().getSimpleName() == "ShuffleExchangeExec"
+        node = node.children().apply(0)
+    sides = [node.children().apply(i).toString() for i in range(2)]
+    return (above, *(s.count("Exchange hashpartitioning") for s in sides))
