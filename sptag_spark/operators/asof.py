@@ -553,9 +553,30 @@ def _asof_merge(
         tol = pd.Timedelta(seconds=tolerance_seconds)
     else:  # numeric (epoch) timestamps: tolerance in the same units
         tol = tolerance_seconds
+    # Keys typed differently per side (int probe keys, long data keys)
+    # are widened to the type the union strategy would choose, on both
+    # sides: xxhash64 hashes an int and a long of equal value differently,
+    # and merge_asof rejects `by` columns of different dtypes. A long key
+    # is never narrowed (ANSI mode raises; otherwise it wraps and makes
+    # false matches), and the probe's own key columns keep their types.
+    wide = {}
+    if any(probe.schema[k].dataType != data.schema[k].dataType
+           for k in keys):
+        union = probe.select(*keys).unionByName(data.select(*keys)).schema
+        wide = {k: union[k].dataType for k in keys}
+
+    def key_col(df: DataFrame, k: str) -> Column:
+        dt = wide.get(k, df.schema[k].dataType)
+        return F.col(k) if df.schema[k].dataType == dt else F.col(k).cast(dt)
+
+    ppfx = "__asof_p_"
+    p_by = [ppfx + k if k in wide and probe.schema[k].dataType != wide[k]
+            else k for k in keys]
+    widened = [key_col(probe, k).alias(b)
+               for k, b in zip(keys, p_by) if b != k]
     bcol = "__asof_bucket"
-    p_b = probe.withColumn(
-        bcol, F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+    p_b = (probe.select("*", *widened) if widened else probe).withColumn(
+        bcol, F.pmod(F.xxhash64(*p_by), F.lit(n_buckets)).cast("int")
     )
     # Prefix every data-side column: with same-named columns on both
     # cogroup sides, Spark's column pruning resolves downstream column
@@ -563,7 +584,7 @@ def _asof_merge(
     # (observed on Spark 4: dk arrived without its key/ts columns when the
     # consumer only referenced the output's probe-named columns).
     dpfx = "__asof_d_"
-    d_sel = [F.col(k).alias(dpfx + k) for k in keys] + [
+    d_sel = [key_col(data, k).alias(dpfx + k) for k in keys] + [
         F.col(data_ts).alias(dpfx + data_ts)
     ] + [F.col(c).alias(dpfx + c) for c in payload]
     d_b = data.select(*d_sel).withColumn(
@@ -587,7 +608,6 @@ def _asof_merge(
             return out[probe_cols + ["matched_ts"] + payload]
         right = dk[[dpfx + c for c in keys + [data_ts] + payload]].rename(
             columns={dpfx + data_ts: "matched_ts",
-                     **{dpfx + k: k for k in keys},
                      **{dpfx + c: c for c in payload}}
         )
         right = right.sort_values("matched_ts", kind="mergesort")
@@ -596,7 +616,8 @@ def _asof_merge(
             right,
             left_on=probe_ts,
             right_on="matched_ts",
-            by=keys,
+            left_by=p_by,
+            right_by=[dpfx + k for k in keys],
             allow_exact_matches=allow_exact,
             tolerance=tol,
         )

@@ -1,25 +1,29 @@
-"""Two-level centroid hierarchy — the BKT shape for large head counts.
+"""Multi-level balanced k-means tree (BKT) — the one tree index.
 
 The reference builds a *tree* of balanced k-means so head selection costs
-O(log C) per probe instead of O(C) (BKTree.h:524-865); at 100 TB you want
-~10^5 heads and a flat argmin over that many centroids neither compiles
-as expressions nor matmuls cheaply. The Spark restatement is two levels
-(the regime where C = k1*k2 up to ~10^5, k1,k2 <= ~316 each):
+O(depth·branch) per probe instead of O(C) (BKTree.h:524-865); at 100 TB
+you want ~10^5 heads, and a flat argmax over that many centroids neither
+compiles as expressions nor matmuls cheaply. The Spark restatement keeps
+the reference's uneven, data-adaptive recursion:
 
-- fit: coarse balanced k-means (operators/kmeans.py — broadcast-argmin
-  scans + one agg per iteration), then ONE applyInPandas pass fits k2
-  fine centroids inside every coarse cell in parallel (numpy Lloyd per
-  cell, deterministic id-ordered init). Total heads = k1 * k2.
-- assign: per Arrow batch, greedy descent — cosine argmax over k1 coarse
-  heads, then argmax over that cell's k2 fine heads: k1 + k2 dots per
-  row instead of k1*k2 (the BKT tree walk, BKTree.h:799-827). Greedy
-  descent is approximate exactly the way the reference's tree search is.
-- probe: top-p coarse cells per query, score those cells' fine heads,
-  global top-nprobe buckets — then the standard partition-pruned
-  candidate scan + exact quantized-cosine top-k.
+- fit (`bkt_fit`): distributed balanced k-means for the root tier
+  (operators/kmeans.py), then per level one applyInPandas pass fits
+  `branch` children inside every cell that still holds > leaf_max rows,
+  on a DETERMINISTIC hash sample capped at fit_sample rows per cell, so
+  a task never materializes a giant cell (the reference samples too:
+  BKTree.h:545 m_iSamples). Cells at or under leaf_max stop splitting.
+- assign (`bkt_assign`): vectorized greedy descent per Arrow batch,
+  cosine argmax level by level — O(depth·branch) dots per row, the BKT
+  tree walk (BKTree.h:799-827). The fit descends with the same rule, so
+  fit-time cells equal assign-time buckets.
+- probe (`bkt_probe`): per-query BEST-FIRST descent with a priority
+  queue over the (tiny, broadcast) tree — pop the closest node, expand
+  its children, emit leaves until nprobe buckets (BKTree.h:799-865
+  SearchTrees' m_SPTQueue) — then the shared partition-pruned scoring
+  tail (operators/probe.py).
 
-bucket id = coarse_cell * k2 + fine_idx, so the persisted layout is the
-same partitionBy('bucket') contract ivf_build writes.
+bucket id = leaf node id, so the persisted postings follow the same
+partitionBy('bucket') contract as knn.ivf_build.
 """
 
 from __future__ import annotations
@@ -44,129 +48,6 @@ from pyspark.sql.types import (
 from sptag_spark.operators.kmeans import kmeans_fit
 
 
-def _sampled_cell_fit_src(
-    assigned: DataFrame,
-    cell_col: str,
-    id_col: str,
-    vec_col: str,
-    fit_sample: int,
-    seed: int = 0,
-) -> DataFrame:
-    """Deterministic per-cell hash sample of a (id, vec, cell) frame:
-    keep a row iff xxhash64(id, seed) mod 2^30 < frac_keep(cell)·2^30,
-    with frac_keep sized so every cell yields ~fit_sample rows. The
-    reference samples its per-node k-means fits the same way
-    (BKTree.h:545 m_iSamples); here it also bounds the rows any single
-    applyInPandas fit task materializes — the full-cell variant put an
-    ENTIRE coarse cell (N/k1 rows) in one pandas task, an OOM at 10^9
-    rows. Cells at or under fit_sample pass through whole; if no cell
-    is oversized the input returns unchanged (no extra join in tests /
-    small corpora)."""
-    import pandas as pd
-
-    spark = assigned.sparkSession
-    sizes = {int(r[cell_col]): int(r["n"]) for r in
-             assigned.groupBy(cell_col)
-             .agg(F.count(F.lit(1)).alias("n")).collect()}
-    if not any(n > fit_sample for n in sizes.values()):
-        return assigned
-    m = 1 << 30
-    cells = sorted(sizes)
-    keep = pd.DataFrame({
-        cell_col: pd.array(cells, dtype="int64"),
-        "__keep": pd.array(
-            [m if sizes[c] <= fit_sample
-             else min(m, int(np.ceil(fit_sample / sizes[c] * m)))
-             for c in cells], dtype="int64"),
-    })
-    keep_df = F.broadcast(
-        spark.createDataFrame(keep).withColumn(
-            cell_col, F.col(cell_col).cast(
-                assigned.schema[cell_col].dataType)))
-    return (assigned.join(keep_df, cell_col)
-            .filter(F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)),
-                           F.lit(m)) < F.col("__keep"))
-            .drop("__keep"))
-
-
-def hierarchical_heads_fit(
-    df: DataFrame,
-    k1: int = 32,
-    k2: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    coarse_iters: int = 8,
-    cell_iters: int = 10,
-    fit_sample: int = 4096,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Fit (coarse (k1, dim), fine (k1, k2, dim)) centroid tiers.
-
-    Cells with fewer than k2 rows pad by repeating their first centroid:
-    padded copies tie exactly with the original and argmax's first-index
-    rule means they are never selected, so no bucket ids are wasted on
-    phantom heads beyond the cell's real count.
-
-    The per-cell Lloyd fit runs on a deterministic hash sample capped at
-    `fit_sample` rows per cell (_sampled_cell_fit_src) — a fit task
-    never materializes a whole coarse cell. Assignment still descends
-    the full corpus."""
-    coarse, assigned = kmeans_fit(
-        df, k1, id_col=id_col, vec_col=vec_col, iters=coarse_iters
-    )
-    dim = coarse.shape[1]
-
-    out_schema = StructType([
-        StructField("cell", IntegerType()),
-        StructField("fine_idx", IntegerType()),
-        StructField("n_fine", IntegerType()),
-        StructField("centroid", ArrayType(DoubleType())),
-    ])
-    cap = fit_sample
-
-    def fit_cell(pdf):
-        import pandas as pd
-
-        from sptag_spark.operators.pq import _np_kmeans
-
-        pdf = pdf.sort_values(id_col, kind="mergesort").head(cap)
-        X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-        kk = min(k2, len(X))
-        C = _np_kmeans(X, kk, iters=cell_iters)
-        cell = int(pdf["cluster"].iloc[0])
-        return pd.DataFrame({
-            "cell": [cell] * kk,
-            "fine_idx": list(range(kk)),
-            "n_fine": [kk] * kk,
-            "centroid": [list(map(float, c)) for c in C],
-        })
-
-    fit_src = _sampled_cell_fit_src(
-        assigned.select(id_col, vec_col, "cluster"),
-        "cluster", id_col, vec_col, fit_sample,
-    )
-    rows = (
-        fit_src
-        .groupBy("cluster")
-        .applyInPandas(fit_cell, schema=out_schema)
-        .collect()
-    )
-    fine = np.zeros((k1, k2, dim))
-    n_fine = np.zeros(k1, dtype=np.int64)
-    for r in rows:
-        fine[r["cell"], r["fine_idx"]] = r["centroid"]
-        n_fine[r["cell"]] = r["n_fine"]
-    # pad: short cells repeat their fine_idx 0 centroid for the unused
-    # slots >= n_fine (explicit count from fit_cell — a legitimately
-    # all-zero fine centroid is NOT mistaken for padding); empty cells
-    # repeat the coarse centroid (nothing assigns there anyway). Padded
-    # copies tie exactly with the original and argmax's first-index rule
-    # means they are never selected.
-    for c in range(k1):
-        base = fine[c, 0] if n_fine[c] > 0 else coarse[c]
-        fine[c, n_fine[c]:] = base
-    return coarse, fine
-
-
 def _cos_scores(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     """Cosine of float64 rows X against centroid rows C (assignment
     metric — internal to head selection, no cross-engine contract)."""
@@ -177,154 +58,31 @@ def _cos_scores(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     return (X @ C.T) / (xn[:, None] * cn[None, :])
 
 
-def hierarchical_assign(
-    corpus: DataFrame,
-    coarse: np.ndarray,
-    fine: np.ndarray,
+def _cell_fit_sample(
+    frontier: DataFrame,
+    sizes: dict,
+    to_split: list,
+    fit_sample: int,
+    level: int,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """corpus + bucket (= cell * k2 + fine_idx) via greedy two-level
-    descent: one (n, k1) + one (n_cell, k2) matmul per Arrow batch."""
-    import pyarrow as pa
-    from pyspark.sql.types import LongType
+    """Deterministic per-cell sample of the `to_split` cells of
+    `frontier` (keyed by `__node`; `sizes` maps node -> row count): keep
+    a row iff xxhash64(id, level) mod 2^30 < frac·2^30 — expected
+    fit_sample rows per cell without materializing the cell. Cells at or
+    under fit_sample pass through whole."""
+    import pandas as pd
 
-    k1, k2, _ = fine.shape
-    out_schema = StructType(
-        list(corpus.schema.fields) + [StructField("bucket", LongType())]
-    )
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            if len(X) == 0:
-                buckets = np.array([], dtype=np.int64)
-            else:
-                cells = _cos_scores(X, coarse).argmax(axis=1)
-                buckets = np.empty(len(X), dtype=np.int64)
-                for c in np.unique(cells):
-                    idx = np.where(cells == c)[0]
-                    fi = _cos_scores(X[idx], fine[c]).argmax(axis=1)
-                    buckets[idx] = int(c) * k2 + fi
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(n) for n in out_names[:-1]]
-                + [pa.array(buckets)],
-                names=out_names,
-            )
-
-    return corpus.mapInArrow(run, schema=out_schema)
-
-
-def _hierarchical_kernel(coarse: np.ndarray, fine: np.ndarray, nprobe: int,
-                         coarse_probe: int = 4):
-    """Probe kernel (operators/probe.py): top-coarse_probe cells, then
-    global top-nprobe among those cells' fine heads."""
-    from sptag_spark.operators.probe import ProbeKernel
-
-    k1, k2, _ = fine.shape
-    cp = min(coarse_probe, k1)
-
-    def fn(X):
-        top_cells = np.argsort(
-            -_cos_scores(X, coarse), axis=1, kind="stable"
-        )[:, :cp]
-        rows, out_b = [], []
-        for r in range(len(X)):
-            cells = top_cells[r]
-            heads = np.concatenate([fine[c] for c in cells])
-            ids = np.concatenate(
-                [np.arange(k2, dtype=np.int64) + int(c) * k2
-                 for c in cells]
-            )
-            s = _cos_scores(X[r:r + 1], heads)[0]
-            order = np.argsort(-s, kind="stable")[:nprobe]
-            chosen = np.unique(ids[order])
-            rows.extend([r] * len(chosen))
-            out_b.extend(chosen.tolist())
-        return rows, out_b
-
-    return ProbeKernel(fn)
-
-
-def ivf_build_hierarchical(
-    corpus: DataFrame,
-    path: str,
-    k1: int = 32,
-    k2: int = 32,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the two-level index: bucketed postings (same layout
-    contract as knn.ivf_build) + both centroid tiers as parquet."""
-    from sptag_spark.operators.knn import _write_postings
-
-    spark = corpus.sparkSession
-    coarse, fine = hierarchical_heads_fit(
-        corpus, k1, k2, id_col=id_col, vec_col=vec_col
-    )
-    bucketed = hierarchical_assign(corpus, coarse, fine, id_col, vec_col)
-    _write_postings(bucketed, f"{path}/postings", "overwrite")
-    k1_, k2_, dim = fine.shape
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in coarse[c]]) for c in range(k1_)],
-        ["cell", "centroid"],
-    ).write.mode("overwrite").parquet(f"{path}/coarse")
-    spark.createDataFrame(
-        [(int(c), int(j), [float(x) for x in fine[c, j]])
-         for c in range(k1_) for j in range(k2_)],
-        ["cell", "fine_idx", "centroid"],
-    ).write.mode("overwrite").parquet(f"{path}/fine")
-
-
-# ---------------------------------------------------------------------------
-# Multi-level BKT (reference BKTree.h:524-865: trees of ARBITRARY depth;
-# VERDICT r4 #6). The two-level functions above stay as the fixed-shape
-# fast path; below is the general recursion:
-#
-# - fit: distributed balanced k-means for the root tier, then per level
-#   one applyInPandas pass fits `branch` children inside every cell that
-#   still holds > leaf_max rows — on a DETERMINISTIC hash sample capped
-#   at fit_sample rows per cell, so a task never materializes a giant
-#   cell (the reference samples too: BKTree.h:545 m_iSamples). Cells at
-#   or under leaf_max stop splitting — depth is data-adaptive, exactly
-#   the reference's uneven recursion.
-# - assign: vectorized greedy descent per Arrow batch (cosine argmax
-#   level by level) — O(depth·branch) dots per row, the BKT tree walk.
-# - probe: per-query BEST-FIRST descent with a priority queue over the
-#   (tiny, broadcast) tree — pop the closest node, expand its children,
-#   emit leaves until nprobe buckets (BKTree.h:799-865 SearchTrees'
-#   m_SPTQueue) — then the shared partition-pruned scoring tail.
-# ---------------------------------------------------------------------------
-
-
-def _assign_node_level(
-    df: DataFrame,
-    node_ids: np.ndarray,
-    node_mat: np.ndarray,
-    vec_col: str,
-) -> DataFrame:
-    """df + __node via one cosine-argmax pass over the given nodes —
-    the single-level descent step, shared by bkt_fit's root frontier."""
-    import pyarrow as pa
-    from pyspark.sql.types import LongType
-
-    schema = StructType(
-        list(df.schema.fields) + [StructField("__node", LongType())])
-    names = [f.name for f in schema.fields]
-
-    def run(batches):
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            if len(X) == 0:
-                nodes = np.array([], dtype=np.int64)
-            else:
-                nodes = node_ids[_cos_scores(X, node_mat).argmax(axis=1)]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(nm) for nm in names[:-1]]
-                + [pa.array(nodes)], names=names)
-
-    return df.mapInArrow(run, schema=schema)
+    m = 1 << 30
+    keep = pd.DataFrame({
+        "__node": to_split,
+        "__keep": [min(m, int(np.ceil(fit_sample / sizes[n] * m)))
+                   for n in to_split],
+    })
+    keep_df = F.broadcast(frontier.sparkSession.createDataFrame(keep))
+    return frontier.join(keep_df, "__node").filter(
+        F.pmod(F.xxhash64(F.col(id_col), F.lit(level)), F.lit(m))
+        < F.col("__keep"))
 
 
 def bkt_fit(
@@ -375,17 +133,16 @@ def bkt_fit(
                                for i in range(len(coarse))]
     parent: list[int] = [-1] * len(coarse)
 
-    # Root frontier via the SAME cosine-argmax rule bkt_assign descends
-    # with (not the k-means L2 labels): fit-time cell contents then equal
-    # assign-time cell contents at every level, so the <= leaf_max stop
-    # condition is a real bound on the final postings, not an estimate.
-    # len(cents), not `branch`: a corpus smaller than the branch factor
-    # seeds fewer roots.
-    root_ids = np.arange(len(cents), dtype=np.int64)
-    root_mat = np.stack(cents)
-    frontier = _assign_node_level(
-        corpus.select(id_col, vec_col), root_ids, root_mat, vec_col
-    ).persist()
+    # Root frontier = bkt_assign over the roots-only tree (not the
+    # k-means L2 labels): fit-time cell contents then equal assign-time
+    # cell contents at every level, so the <= leaf_max stop condition is
+    # a real bound on the final postings, not an estimate. len(cents),
+    # not `branch`: a corpus smaller than the branch factor seeds fewer
+    # roots.
+    frontier = bkt_assign(
+        corpus.select(id_col, vec_col), np.asarray(parent, dtype=np.int64),
+        np.stack(cents), np.ones(len(cents), dtype=bool), id_col, vec_col,
+    ).withColumnRenamed("bucket", "__node").persist()
     try:
         for level in range(1, max_levels):
             sizes = {r["__node"]: r["n"] for r in
@@ -394,20 +151,8 @@ def bkt_fit(
             to_split = sorted(n for n, c in sizes.items() if c > leaf_max)
             if not to_split:
                 break
-            # deterministic per-cell sample: keep iff
-            # xxhash64(id, level) mod 2^30 < frac·2^30 — expected
-            # fit_sample rows per cell without materializing the cell
-            m = 1 << 30
-            keep = pd.DataFrame({
-                "__node": to_split,
-                "__keep": [min(m, int(np.ceil(fit_sample / sizes[n] * m)))
-                           for n in to_split],
-            })
-            keep_df = F.broadcast(spark.createDataFrame(keep))
-            splitting = frontier.join(keep_df, "__node")
-            sample = splitting.filter(
-                F.pmod(F.xxhash64(F.col(id_col), F.lit(level)), F.lit(m))
-                < F.col("__keep"))
+            sample = _cell_fit_sample(
+                frontier, sizes, to_split, fit_sample, level, id_col)
 
             out_schema = StructType([
                 StructField("__node", LongType()),
@@ -838,42 +583,3 @@ def bkt_probe(
     return probe.score_probes(read_postings(spark, path, id_col), probes,
                               queries, k, id_col, vec_col, predicate)
 
-
-def ivf_probe_hierarchical(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 32,
-    coarse_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    predicate=None,
-    driver_probe_limit: int = 10_000,
-    probe_scratch_dir: str | None = None,
-) -> DataFrame:
-    """Probe the persisted two-level index: descend the tiers for bucket
-    ids, then the SHARED partition-pruned scoring tail
-    (operators/probe.py — driver or wave selection by batch size,
-    optional pushed metadata predicate)."""
-    from sptag_spark.operators import probe
-    from sptag_spark.operators.knn import read_postings
-
-    c_rows = spark.read.parquet(f"{path}/coarse").collect()
-    f_rows = spark.read.parquet(f"{path}/fine").collect()
-    k1 = len(c_rows)
-    k2 = max(r["fine_idx"] for r in f_rows) + 1
-    dim = len(c_rows[0]["centroid"])
-    coarse = np.zeros((k1, dim))
-    fine = np.zeros((k1, k2, dim))
-    for r in c_rows:
-        coarse[r["cell"]] = r["centroid"]
-    for r in f_rows:
-        fine[r["cell"], r["fine_idx"]] = r["centroid"]
-
-    kernel = _hierarchical_kernel(coarse, fine, nprobe, coarse_probe)
-    probes = probe.select_probes(spark, path, queries, kernel, id_col,
-                                 vec_col, driver_probe_limit,
-                                 probe_scratch_dir)
-    return probe.score_probes(read_postings(spark, path, id_col), probes,
-                              queries, k, id_col, vec_col, predicate)

@@ -4,8 +4,8 @@ The reference's query layer is a single shape — select the posting
 lists to read, scan only those, score, merge the top-k
 (SPANNIndex.cpp:293-395; ExtraStaticSearcher.h:260-411). Every entry
 point that probes a persisted `partitionBy('bucket')` index (flat IVF,
-IVF-PQ, BKT, the two-level hierarchy and the batch budgeted scan) runs
-it through this module in two steps:
+IVF-PQ, BKT and the batch budgeted scan) runs it through this module in
+two steps:
 
 - **Selection** (`select_probes`). One limit-bounded Arrow collect of
   `(query_id, vec)` decides the mode. A batch of at most

@@ -165,7 +165,39 @@ def test_asof_union_mixed_key_types_never_shuffle_twice(spark, windowed):
     got = asof_join(probe, data, on="user_id", probe_ts="ts", data_ts="ts",
                     payload=payload)
     assert union_exchanges(got) == (1, 0, int(windowed))
-    _agrees(got, probe, data, payload, "broadcast")  # merge needs one type
+    _agrees(got, probe, data, payload)
+
+
+def test_merge_widens_int_probe_keys_against_long_data_keys(spark):
+    """int probe keys against long data keys: merge widens both sides to
+    long, the type the union picks, for its bucket hash and its per-key
+    match, keeps the probe's int key column (the union widens it), and
+    agrees with union and broadcast. The data key 2^32 + 1 wraps to 1 as
+    an int: it must match nothing, where a narrowed key would hand probe
+    key 1 its later row."""
+    import datetime as dt
+
+    t0 = dt.datetime(2025, 1, 1)
+    sec = dt.timedelta(seconds=1)
+    probe = spark.createDataFrame(
+        [(0, 1, t0 + 10 * sec), (1, 2, t0 + 10 * sec),
+         (2, 3, t0 + 10 * sec), (3, 1, t0)],
+        "event_id long, k int, ts timestamp")
+    data = spark.createDataFrame(
+        [(1, t0 + sec, 1.0), (2, t0 + 2 * sec, 2.0),
+         ((1 << 32) + 1, t0 + 5 * sec, 99.0)],
+        "k long, ts timestamp, v double")
+    got = {}
+    for strat in ("merge", "union", "broadcast"):
+        out = asof_join(probe, data, on="k", probe_ts="ts", data_ts="ts",
+                        payload=["v"], strategy=strat)
+        got[strat] = sorted((r["event_id"], r["k"], r["v"])
+                            for r in out.collect())
+        if strat == "merge":
+            assert out.schema["k"].dataType.typeName() == "integer"
+    assert got["merge"] == [(0, 1, 1.0), (1, 2, 2.0), (2, 3, None),
+                            (3, 1, None)]
+    assert got["merge"] == got["union"] == got["broadcast"]
 
 
 def test_broadcast_keeps_duplicate_probe_rows(spark):

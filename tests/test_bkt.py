@@ -1,20 +1,18 @@
-"""Two-level (BKT-shaped) centroid hierarchy: assignment validity,
-determinism, and the VERDICT r1 #6 gate — >= 1024 heads at sf0.1 with
-bounded build time and a real recall floor (reference BKTree.h:524-865;
-recall harness shape TruthSet.h:242-285)."""
+"""Multi-level balanced k-means tree (BKT): fit recursion and leaf
+bounds, determinism, the fixture-pinned fit, lifecycle composition, and
+the VERDICT r1 #6 gate — >= 1024 heads at sf0.1 with bounded build time
+and a real recall floor (reference BKTree.h:524-865; recall harness
+shape TruthSet.h:242-285)."""
 
 from __future__ import annotations
+
+from pathlib import Path
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sptag_spark.operators.bkt import (
-    hierarchical_assign,
-    hierarchical_heads_fit,
-    ivf_build_hierarchical,
-    ivf_probe_hierarchical,
-)
+FIXTURE = Path(__file__).parent / "fixtures" / "bkt_fit_sf0001_branch4_leaf16.npz"
 
 
 @pytest.fixture(scope="module")
@@ -25,97 +23,25 @@ def emb_small(spark):
     df.unpersist()
 
 
-def test_fit_shapes_and_assignment_range(emb_small):
-    coarse, fine = hierarchical_heads_fit(
-        emb_small, k1=4, k2=4, coarse_iters=3, cell_iters=5)
-    dim = len(emb_small.first()["embedding"])
-    assert coarse.shape == (4, dim) and fine.shape == (4, 4, dim)
-    rows = hierarchical_assign(emb_small, coarse, fine).collect()
-    assert len(rows) == emb_small.count()
-    for r in rows:
-        assert 0 <= r["bucket"] < 16
-    # descent must respect the coarse tier: bucket//k2 is the argmax cell
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    from sptag_spark.operators.bkt import _cos_scores
-    cells = _cos_scores(X, coarse).argmax(axis=1)
-    assert all(r["bucket"] // 4 == c for r, c in zip(rows, cells))
-
-
-def test_cell_fit_sample_bounds_per_task_rows(emb_small):
-    """The two-level cell fit must never materialize a whole coarse
-    cell in one pandas task (VERDICT r5 wrong #1): the sampled fit
-    source caps every cell at ~fit_sample rows (hash expectation;
-    fit_cell then hard-caps with head(fit_sample)), deterministically."""
-    from sptag_spark.operators.bkt import _sampled_cell_fit_src
-    from sptag_spark.operators.kmeans import kmeans_fit
-
-    _, assigned = kmeans_fit(emb_small, 4, iters=3)
-    src = assigned.select("vec_id", "embedding", "cluster")
-    cap = 50
-    sampled = _sampled_cell_fit_src(
-        src, "cluster", "vec_id", "embedding", cap)
-    counts = {r["cluster"]: r["n"] for r in
-              sampled.groupBy("cluster")
-              .agg(F.count(F.lit(1)).alias("n")).collect()}
-    full = {r["cluster"]: r["n"] for r in
-            src.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert any(n > cap for n in full.values())  # the test is real
-    for c, n in counts.items():
-        # hash sample: expected `cap` rows; 3x is >6 sigma headroom,
-        # and fit_cell's head(cap) makes the task bound exact anyway
-        assert n <= 3 * cap, (c, n)
-        assert n >= 1
-    # deterministic: same sample both times
-    a = sorted(r["vec_id"] for r in sampled.collect())
-    b = sorted(r["vec_id"] for r in _sampled_cell_fit_src(
-        src, "cluster", "vec_id", "embedding", cap).collect())
-    assert a == b
-    # cells at or under the cap pass through whole (no-op path)
-    big = max(full.values())
-    whole = _sampled_cell_fit_src(
-        src, "cluster", "vec_id", "embedding", big)
-    assert whole.count() == sum(full.values())
-
-
-def test_fit_with_sampling_still_valid(emb_small):
-    """hierarchical_heads_fit with an aggressive fit_sample still
-    returns well-formed tiers and a full-range assignment."""
-    coarse, fine = hierarchical_heads_fit(
-        emb_small, k1=4, k2=4, coarse_iters=3, cell_iters=5,
-        fit_sample=64)
-    assert np.isfinite(coarse).all() and np.isfinite(fine).all()
-    rows = hierarchical_assign(emb_small, coarse, fine).collect()
-    assert len(rows) == emb_small.count()
-    assert all(0 <= r["bucket"] < 16 for r in rows)
-
-
-def test_assignment_is_deterministic(emb_small):
-    coarse, fine = hierarchical_heads_fit(
-        emb_small, k1=4, k2=4, coarse_iters=3, cell_iters=5)
-    a = sorted((r["vec_id"], r["bucket"])
-               for r in hierarchical_assign(emb_small, coarse, fine).collect())
-    b = sorted((r["vec_id"], r["bucket"])
-               for r in hierarchical_assign(emb_small, coarse, fine).collect())
-    assert a == b
-
-
 def test_1024_heads_recall_gate_sf01(spark, tmp_path):
     """>= 1024 heads over the sf0.1 corpus, built in bounded time; the
-    pruned probe must clearly beat its candidate-fraction random floor."""
+    pruned probe must clearly beat its candidate-fraction random floor.
+    A depth-2 tree: 32 roots, each split into 32 leaves."""
     import time
 
+    from sptag_spark.operators.bkt import bkt_build, bkt_probe
     from sptag_spark.operators.knn import brute_force_topk, recall_at_k
 
     emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     path = str(tmp_path / "bkt")
     t0 = time.time()
-    ivf_build_hierarchical(emb, path, k1=32, k2=32)
+    bkt_build(emb, path, branch=32, max_levels=2, leaf_max=1)
     build_sec = time.time() - t0
     assert build_sec < 300, f"build took {build_sec:.0f}s"
+    n_leaves = spark.read.parquet(f"{path}/centroids").count()
+    assert n_leaves >= 1024, n_leaves
     q = emb.filter("vec_id < 8")
-    approx = ivf_probe_hierarchical(spark, path, q, k=10, nprobe=32,
-                                    coarse_probe=8)
+    approx = bkt_probe(spark, path, q, k=10, nprobe=32)
     exact = brute_force_topk(emb, q, k=10)
     r = recall_at_k(approx, exact)
     # 32 of 1024 buckets probed (~3% of the corpus scanned): random
@@ -161,6 +87,80 @@ def test_multilevel_fit_is_deterministic(emb_small):
     assert np.array_equal(a[0], b[0])
     assert np.array_equal(a[1], b[1])
     assert np.array_equal(a[2], b[2])
+
+
+def test_multilevel_fit_matches_pinned_fixture(emb_small):
+    """bkt_fit's (parent, centroids, is_leaf) is bit-identical to the
+    pinned fit of the same corpus and shape (a 92-node tree): the root
+    tier's bkt_assign pass and each level's descent must place every row
+    exactly as the pinned fit did."""
+    from sptag_spark.operators.bkt import bkt_fit
+
+    want = np.load(FIXTURE)
+    parent, cents, is_leaf = bkt_fit(emb_small, branch=4, leaf_max=16)
+    assert len(parent) == 92
+    assert np.array_equal(parent, want["parent"])
+    assert np.array_equal(cents, want["centroids"])
+    assert np.array_equal(is_leaf, want["is_leaf"])
+
+
+def test_cell_fit_sample_bounds_per_task_rows(emb_small):
+    """The per-level cell fit must never materialize a whole cell in one
+    pandas task (VERDICT r5 wrong #1): the sampled fit source caps every
+    cell at ~fit_sample rows (hash expectation; fit_cell then hard-caps
+    with head(fit_sample)), deterministically."""
+    from sptag_spark.operators.bkt import _cell_fit_sample
+    from sptag_spark.operators.kmeans import kmeans_fit
+
+    _, assigned = kmeans_fit(emb_small, 4, iters=3)
+    src = assigned.select("vec_id", "embedding",
+                          F.col("cluster").cast("long").alias("__node"))
+    full = {r["__node"]: r["n"] for r in
+            src.groupBy("__node")
+            .agg(F.count(F.lit(1)).alias("n")).collect()}
+    cells = sorted(full)
+    cap = 50
+    assert any(n > cap for n in full.values())  # the test is real
+
+    def sample(c):
+        return _cell_fit_sample(src, full, cells, c, level=1)
+
+    counts = {r["__node"]: r["n"] for r in
+              sample(cap).groupBy("__node")
+              .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert set(counts) == set(cells)
+    for c, n in counts.items():
+        # hash sample: expected `cap` rows; 3x is >6 sigma headroom,
+        # and fit_cell's head(cap) makes the task bound exact anyway
+        assert n <= 3 * cap, (c, n)
+        assert n >= 1
+    # deterministic: same sample both times
+    a = sorted(r["vec_id"] for r in sample(cap).collect())
+    b = sorted(r["vec_id"] for r in sample(cap).collect())
+    assert a == b
+    # cells at or under the cap pass through whole (no-op path)
+    assert sample(max(full.values())).count() == sum(full.values())
+
+
+def test_fit_with_sampling_still_valid(emb_small):
+    """A fit_sample below the cell sizes fits every split on a hash
+    sample of its cell: still deterministic, still bounded (the stop
+    rule counts the full cells, not the sample), and really sampled —
+    the tree differs from the pinned whole-cell fit."""
+    from sptag_spark.operators.bkt import bkt_assign, bkt_fit
+
+    a = bkt_fit(emb_small, branch=4, leaf_max=16, fit_sample=16)
+    b = bkt_fit(emb_small, branch=4, leaf_max=16, fit_sample=16)
+    for x, y in zip(a, b):
+        assert np.array_equal(x, y)
+    parent, cents, is_leaf = a
+    buckets = np.array([r["bucket"] for r in
+                        bkt_assign(emb_small, *a).collect()])
+    assert is_leaf[buckets].all()
+    assert np.unique(buckets, return_counts=True)[1].max() <= 16
+    whole = np.load(FIXTURE)
+    assert not (len(parent) == len(whole["parent"])
+                and np.array_equal(cents, whole["centroids"]))
 
 
 def test_multilevel_probe_recall_parity_with_flat_ivf(emb_small, spark,
@@ -386,36 +386,6 @@ def test_reminted_leaf_id_is_not_routed_by_stale_tree_centroid(
     want = sorted((r["query_id"], r["rank"], r["vec_id"], r["cosine"])
                   for r in brute_force_topk(survivors, q, k=8).collect())
     assert got == want
-
-
-def test_all_zero_fine_centroid_survives_padding(spark):
-    """A cell whose members are zero vectors yields a legitimately
-    all-zero fine centroid; explicit per-cell counts (n_fine) must keep
-    it instead of inferring 'padding' from zero rows and overwriting it
-    (ADVICE r2). Init = first k2 id-sorted rows, so with zeros at the
-    low ids the zero centroid deterministically lands at fine_idx 1."""
-    rows = ([(i, [0.0, 0.0]) for i in range(4)]
-            + [(i, [1.0, 1.0]) for i in range(4, 8)])
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    coarse, fine = hierarchical_heads_fit(
-        df, k1=1, k2=2, coarse_iters=2, cell_iters=6)
-    zero_rows = (fine[0] == 0).all(axis=1)
-    assert zero_rows.sum() == 1, fine[0]
-    assert any((fine[0] == 1.0).all(axis=1)), fine[0]
-
-
-def test_short_cell_padding_never_selected(spark):
-    """A cell with fewer members than k2 pads slots >= n_fine by
-    repeating fine_idx 0: ties resolve to the original via argmax
-    first-index, so padded slots win no assignments."""
-    rows = [(i, [float(i % 2), 1.0]) for i in range(3)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    coarse, fine = hierarchical_heads_fit(
-        df, k1=1, k2=8, coarse_iters=2, cell_iters=4)
-    assert fine.shape == (1, 8, 2)
-    out = hierarchical_assign(df, coarse, fine).collect()
-    # only real slots (cell had 3 members -> <= 3 distinct buckets)
-    assert all(r["bucket"] < 3 for r in out)
 
 
 def test_cli_reassign_rejects_bkt_index(spark, emb_small, tmp_path,

@@ -10,12 +10,7 @@ import re
 
 import pytest
 
-from sptag_spark.operators.bkt import (
-    bkt_build,
-    bkt_probe,
-    ivf_build_hierarchical,
-    ivf_probe_hierarchical,
-)
+from sptag_spark.operators.bkt import bkt_build, bkt_probe
 from sptag_spark.operators.ivfpq import ivf_pq_build, ivf_pq_probe
 from sptag_spark.operators.knn import (
     ivf_build,
@@ -25,7 +20,7 @@ from sptag_spark.operators.knn import (
 )
 
 SF = "/root/testdata/sf0.001"
-ENTRIES = ("ivf", "ivf_pq", "bkt", "hierarchical", "budget")
+ENTRIES = ("ivf", "ivf_pq", "bkt", "budget")
 
 
 @pytest.fixture(scope="module")
@@ -41,7 +36,6 @@ def indexes(emb, tmp_path_factory):
     ivf_build(emb, 16, f"{root}/ivf")
     ivf_pq_build(emb, n_centroids=16, path=f"{root}/ivf_pq")
     bkt_build(emb, f"{root}/bkt", branch=4, leaf_max=32, cell_iters=5)
-    ivf_build_hierarchical(emb, f"{root}/hierarchical", k1=4, k2=4)
     return root
 
 
@@ -53,9 +47,6 @@ def _probe(spark, root, entry, q, **kw):
         return ivf_pq_probe(spark, path, q, k=5, nprobe=3, rerank=16, **kw)
     if entry == "bkt":
         return bkt_probe(spark, path, q, k=5, nprobe=4, **kw)
-    if entry == "hierarchical":
-        return ivf_probe_hierarchical(spark, path, q, k=5, nprobe=4,
-                                      coarse_probe=2, **kw)
     return relaxed_mono_topk_batch(spark, f"{root}/ivf", q, k=5,
                                    max_check=80, **kw)
 
@@ -73,8 +64,7 @@ def _plan(df) -> str:
 # `cursor` rents the single-query budget cursor on the flat IVF index;
 # its count was measured at the parent of the change that moved the
 # cursor onto the batch budget kernel.
-PARENT_JOBS = {"ivf": 2, "ivf_pq": 7, "bkt": 8, "hierarchical": 8,
-               "budget": 8, "cursor": 5}
+PARENT_JOBS = {"ivf": 2, "ivf_pq": 7, "bkt": 8, "budget": 8, "cursor": 5}
 
 
 @pytest.mark.parametrize("entry", ENTRIES + ("cursor",))

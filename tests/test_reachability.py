@@ -54,12 +54,6 @@ TEST_ONLY = {
     "sptag_spark.operators.audit.assert_no_leakage":
         "raising form of leakage_report, the as-of leakage proof used in "
         "tests",
-    "sptag_spark.operators.bkt.ivf_build_hierarchical":
-        "two-level IVF head build; probe-pipeline family covered by "
-        "test_bkt and test_probe",
-    "sptag_spark.operators.bkt.ivf_probe_hierarchical":
-        "probe for the two-level IVF index; shares the probe.py scoring "
-        "tail",
     "sptag_spark.operators.graph.tpt_leaf_assign":
         "TPT partition step exposed alone so tests can check leaf balance "
         "and replay",
