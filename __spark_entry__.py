@@ -1118,8 +1118,8 @@ def _q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantizer APPLY path (reference F4/F5, PQQuantizer.h:23-208):
     deterministic md5-sampled integer codebooks, per-subspace argmin
     encode, ADC table scoring — all int64, so the oracle replicates the
-    encode+score pipeline exactly. (Training quality is gated separately
-    in test_pq.py via kmeans/OPQ recall.)"""
+    encode+score pipeline exactly. (ADC recall is gated separately in
+    test_ivfpq.py.)"""
     from sptag_spark.operators.knn import quantize
     from sptag_spark.operators.pq import pq_adc_topk_int, pq_codebooks_md5
 

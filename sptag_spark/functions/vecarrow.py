@@ -1,5 +1,5 @@
 """Zero-copy Arrow list-column -> numpy matrix ingestion for the vector
-kernels (assign/probe/sketch/ADC/rotate).
+kernels (assign/probe/sketch/ADC).
 
 `np.array(col.to_pylist())` materializes a Python list-of-lists per batch
 — per-element PyObject allocation, exactly the allocator churn the Arrow

@@ -58,6 +58,20 @@ def _cos_scores(X: np.ndarray, C: np.ndarray) -> np.ndarray:
     return (X @ C.T) / (xn[:, None] * cn[None, :])
 
 
+def _np_kmeans(X: np.ndarray, k: int, iters: int = 20) -> np.ndarray:
+    """Deterministic numpy Lloyd over one cell's fit sample (init = the
+    first k rows, which fit_cell sorts by id)."""
+    C = X[:k].copy()
+    for _ in range(iters):
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+        a = d2.argmin(1)
+        for j in range(k):
+            pts = X[a == j]
+            if len(pts):
+                C[j] = pts.mean(0)
+    return C
+
+
 def _cell_fit_sample(
     frontier: DataFrame,
     sizes: dict,
@@ -163,8 +177,6 @@ def bkt_fit(
                 cell_iters, fit_sample
 
             def fit_cell(pdf):
-                from sptag_spark.operators.pq import _np_kmeans
-
                 pdf = pdf.sort_values(ic, kind="mergesort").head(cap)
                 X = np.array(pdf[vc].tolist(), dtype=np.float64)
                 kk = min(bb, len(X))

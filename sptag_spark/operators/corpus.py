@@ -485,12 +485,11 @@ def top_ngrams(
     n: int = 3,
     k: int = 50,
     text_col: str = "text",
-    per_group: str | None = None,
 ) -> DataFrame:
     """Corpus-wide top-k n-grams by document frequency (the vocabulary /
     Zipf analytics pass of a corpus audit; also what seeds a stop-phrase
-    list for the dedup df-cap). Returns (ngram, df_docs, rank) — or per
-    `per_group` when given — with rank ties broken lexicographically.
+    list for the dedup df-cap). Returns (ngram, df_docs, rank), with rank
+    ties broken lexicographically.
 
     Scale: explode + one map-side-combinable aggregate keyed by the
     shingle (partial counts absorb the corpus before the shuffle), then
@@ -503,26 +502,13 @@ def top_ngrams(
     while Python workers scale ~1.0.
     """
     sh = _exploded_shingles_arrow(
-        df, per_group, text_col, n, with_count=False,
-    ).select(
-        *([F.col("_id").alias(per_group)] if per_group else []),
-        F.col("_sh").alias("ngram"),
-    ).filter(F.col("ngram").isNotNull())
+        df, None, text_col, n, with_count=False,
+    ).select(F.col("_sh").alias("ngram")).filter(F.col("ngram").isNotNull())
     # null-text docs yield one NULL-shingle row (the explode_outer
     # twin's semantics) — drop them before the count so a NULL never
     # reaches the top-k tie boundary, where Spark's NULLS-FIRST ASC
     # would diverge from the oracle's NULLS-LAST default.
-    gcols = [per_group] if per_group else []
-    counts = sh.groupBy(*gcols, "ngram").agg(
-        F.count(F.lit(1)).alias("df_docs")
-    )
-    if per_group:
-        from sptag_spark.operators.topk import top_k_per_group
-
-        return top_k_per_group(
-            counts, [per_group],
-            order_by=[F.col("df_docs").desc(), F.col("ngram").asc()], k=k,
-        )
+    counts = sh.groupBy("ngram").agg(F.count(F.lit(1)).alias("df_docs"))
     from sptag_spark.operators.topk import global_top_k
 
     top = global_top_k(

@@ -14,7 +14,8 @@ Spark restatement — three cooperating plans, all deterministic:
   (bucket) AND encodes per-subspace argmin codes against md5-sampled
   integer codebooks (exact int64 math, first-min tiebreak). Postings are
   written partitionBy('bucket') carrying (row, bucket, codes); the
-  centroid + codebook tables land beside them.
+  centroid + codebook tables land beside them. Heads, codes and the
+  re-rank all live in the embedding's own space.
 - ADC scan: a partition-PRUNED postings read of ONLY (id, bucket, codes)
   — column pruning keeps the embedding out of the scan (plan-asserted)
   — broadcast-joined with the (query_id, bucket) probe frame and a
@@ -146,9 +147,6 @@ def ivf_pq_build(
     centroids: DataFrame | None = None,
     codebooks: np.ndarray | None = None,
     replica_count: int = 1,
-    rotation: str | None = None,
-    opq_sample_size: int = 2048,
-    opq_iters: int = 10,
 ) -> None:
     """Build + persist the composed index: bucketed postings carrying PQ
     codes (partitionBy bucket), the centroid table, and the integer
@@ -161,55 +159,20 @@ def ivf_pq_build(
     trained dictionaries, ExtraDynamicSearcher.h:637-894).
     replica_count > 1 RNG-multi-assigns rows to up to that many head
     postings (the reference's ReplicaCount closure; see knn.ivf_build).
-
-    rotation composes the learned-rotation tier (reference
-    OPQQuantizer.h:1-210) into the index:
-    - None (default): md5-sampled integer codebooks, fully
-      oracle-checkable (the contract-query tier);
-    - 'opq': opq_train's rotation R + kmeans codebooks — heads, codes,
-      and ADC all live in the ROTATED space (R stored beside the index;
-      probes rotate queries, appends rotate new vectors), while
-      postings keep the ORIGINAL embedding so the exact re-rank stays
-      in the original space (orthogonal R preserves cosine). Float
-      training ⇒ deterministic per host but not SQL-replicable — gated
-      by recall + determinism tests instead of an oracle (COVERAGE.md);
-    - 'pq': identity rotation with the same trainer/budget — the
-      controlled baseline the OPQ recall gate compares against."""
-    from sptag_spark.operators.pq import opq_rotate_col, opq_train
-
+    Codebooks default to pq_codebooks_md5: integer, fully
+    oracle-checkable."""
     spark = corpus.sparkSession
-    R = None
-    if rotation is not None:
-        if rotation not in ("opq", "pq"):
-            raise ValueError(f"unknown rotation {rotation!r}")
-        iters = opq_iters if rotation == "opq" else 0
-        R, books_f = opq_train(
-            corpus, m=m, k=k_codes, id_col=id_col, vec_col=vec_col,
-            sample_size=opq_sample_size, opq_iters=iters)
-        if codebooks is None:
-            # same ×1000 scale as quantize() so the int64 ADC machinery
-            # is shared with the md5-book tier
-            codebooks = np.round(books_f * 1000.0).astype(np.int64)
-        work = opq_rotate_col(corpus, R, vec_col, "__rot")
-        work_vec = "__rot"
-    else:
-        work, work_vec = corpus, vec_col
-        if codebooks is None:
-            codebooks = pq_codebooks_md5(corpus, m=m, k=k_codes,
-                                         id_col=id_col, vec_col=vec_col)
+    if codebooks is None:
+        codebooks = pq_codebooks_md5(corpus, m=m, k=k_codes,
+                                     id_col=id_col, vec_col=vec_col)
     if centroids is None:
-        centroids = select_centroids(work, n_centroids, id_col, work_vec)
+        centroids = select_centroids(corpus, n_centroids, id_col, vec_col)
     m, k_codes, _ = codebooks.shape
-    coded = _assign_encode(work, centroids, codebooks, work_vec,
+    coded = _assign_encode(corpus, centroids, codebooks, vec_col,
                            replica_count=replica_count)
-    if R is not None:
-        coded = coded.drop("__rot")
     _write_postings(coded, f"{path}/postings", "overwrite")
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    if R is not None:
-        _write_rotation(spark, path, R)
-    _write_index_meta(spark, path, replica_count=int(replica_count),
-                      rotated=R is not None)
+    _write_index_meta(spark, path, replica_count=int(replica_count))
     import pandas as pd
 
     from pyspark.sql.types import (
@@ -262,54 +225,14 @@ def ivf_pq_append(
             f"{path} is a flat ivf index (no `codes` column in its "
             "postings); ivf_pq_append would write a drifting schema — "
             "use knn.ivf_append")
-    meta = read_index_meta(spark, path)
-    rep = int(meta.get("replica_count", 1))
+    rep = int(read_index_meta(spark, path).get("replica_count", 1))
     centroids = spark.read.parquet(f"{path}/centroids")
     books = _read_codebooks(spark, path)
-    work, work_vec = vectors, vec_col
-    if meta.get("rotated"):
-        from sptag_spark.operators.pq import opq_rotate_col
-
-        work = opq_rotate_col(vectors, _read_rotation(spark, path),
-                              vec_col, "__rot")
-        work_vec = "__rot"
-    coded = _assign_encode(work, centroids, books, work_vec,
+    coded = _assign_encode(vectors, centroids, books, vec_col,
                            replica_count=rep)
-    if work_vec == "__rot":
-        coded = coded.drop("__rot")
     from sptag_spark.operators.knn import append_postings_rows
 
     append_postings_rows(spark, path, coded, id_col, idempotent)
-
-
-def _write_rotation(spark, path: str, R: np.ndarray) -> None:
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    # list cells + explicit schema (see codebooks write: ndarray cells
-    # fail non-Arrow row inference under a bare spark-submit session)
-    spark.createDataFrame(
-        pd.DataFrame({
-            "i": np.arange(len(R), dtype=np.int32),
-            "row": [R[i].tolist() for i in range(len(R))],
-        }),
-        schema=StructType([
-            StructField("i", IntegerType()),
-            StructField("row", ArrayType(DoubleType())),
-        ]),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/rotation")
-
-
-def _read_rotation(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/rotation").collect()
-    dim = len(rows)
-    R = np.empty((dim, dim), dtype=np.float64)
-    for r in rows:
-        R[r["i"]] = r["row"]
-    return R
 
 
 def _read_codebooks(spark, path: str) -> np.ndarray:
@@ -380,7 +303,6 @@ def _adc_partials_cogrouped(
     books: np.ndarray,
     rerank: int,
     id_col: str,
-    R: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Per-BUCKET ADC scoring with per-query partial top-`rerank` AND
     fused exact re-rank inputs — the reference's ProcessPosting shape
@@ -407,9 +329,7 @@ def _adc_partials_cogrouped(
     vector) — half the shuffle bytes of pre-quantized int64 columns and
     zero per-row JVM array allocation (no quantize HOF on the scan;
     CLAUDE.md rule 13). The kernel quantizes with vecarrow.np_quantize
-    (bit-identical HALF_UP twin of the JVM expression) and, for rotated
-    (OPQ) indexes, applies `R` itself — the same float64 matmul
-    opq_rotate_col runs, so head space stays bit-identical. `_nb` (the
+    (bit-identical HALF_UP twin of the JVM expression). `_nb` (the
     per-QUERY norm) is not emitted per candidate row; the caller joins
     it back from a tiny broadcast frame.
 
@@ -452,9 +372,7 @@ def _adc_partials_cogrouped(
         codes = list_to_matrix(left.column("codes"), np.int64)[order]
         PV = np_quantize(
             list_to_matrix(left.column("__pe"), np.float64))[order]
-        Xe = list_to_matrix(right.column("__qe"), np.float64)
-        Xqo = np_quantize(Xe)
-        Xq = np_quantize(Xe @ R) if R is not None else Xqo
+        Xq = np_quantize(list_to_matrix(right.column("__qe"), np.float64))
         qids = right.column("query_id").to_numpy(zero_copy_only=False)
         nq, n = len(Xq), len(vids)
         T = np.stack([
@@ -521,7 +439,7 @@ def _adc_partials_cogrouped(
             # min-of-3, process-scaling 0.36 -> 0.81 and 8-proc kernel
             # time 4.3 s -> 2.1 s from this move alone.
             G = PV[s_blk]                                # (qb, r, dim)
-            dots[q0:q1] = np.einsum("qrd,qd->qr", G, Xqo[q0:q1])
+            dots[q0:q1] = np.einsum("qrd,qd->qr", G, Xq[q0:q1])
             na[q0:q1] = na_full[s_blk]
         out_q = np.repeat(qids, r)
         out_v = vids[sel.reshape(-1)]
@@ -542,15 +460,12 @@ def _adc_partials_cogrouped(
 class AdcScorer(NamedTuple):
     """The IVF-PQ scorer plugged into probe.score_probes: an ADC scan
     over codes shortlists `rerank` candidates per query, then exact
-    quantized cosine re-ranks them in the ORIGINAL space. `q_probe` /
-    `q_probe_vec` are the (possibly OPQ-rotated) query frame and column
-    head selection and ADC tables use; `rot` is the rotation or None."""
+    quantized cosine re-ranks them. `queries` is the query frame the
+    driver path builds its ADC tables from."""
 
     books: np.ndarray
     rerank: int
-    rot: "np.ndarray | None"
-    q_probe: DataFrame
-    q_probe_vec: str
+    queries: DataFrame
 
     def scan_columns(self, id_col: str) -> list:
         # codes-only pruned read: the embedding never enters the ADC
@@ -567,17 +482,17 @@ class AdcScorer(NamedTuple):
         # per-bucket cogrouped numpy ADC with fused exact-rerank dot/
         # norms — the pair blowup never becomes Spark rows and the
         # embedding never leaves the kernel scan. Both sides ship RAW
-        # floats; the kernel quantizes (and rotates) bit-identically
+        # floats; the kernel quantizes bit-identically
         post_kern = prune(post.select(id_col, "bucket", "codes",
                                       F.col(vec_col).alias("__pe")))
         return _adc_partials_cogrouped(post_kern, pairs, q_raw, self.books,
-                                       self.rerank, id_col, R=self.rot)
+                                       self.rerank, id_col)
 
     def driver_candidates(self, pairs, prune, post, replicated, id_col,
                           vec_col):
         m = self.books.shape[0]
         tables = F.broadcast(_adc_tables_frame(
-            self.q_probe, self.books, id_col, self.q_probe_vec))
+            self.queries, self.books, id_col, vec_col))
         adc = None
         for s in range(m):
             term = F.element_at(
@@ -618,35 +533,22 @@ def ivf_pq_probe(
     output contract.
 
     Runs the shared probe pipeline (operators/probe.py) with the IVF
-    centroid kernel over the (OPQ-rotated, if the index is rotated)
-    queries and the ADC scorer: batches of at most `driver_probe_limit`
-    queries prune statically and score ADC with broadcast tables;
-    larger waves prune dynamically and score per bucket in a cogrouped
-    Arrow kernel. On a replica-built index candidates dedupe on
-    (query, id) before ADC ranking; `max_dist_ratio` drops far probe
-    heads; `probe_scratch_dir` relocates wave side tables off a
-    read-only index."""
+    centroid kernel and the ADC scorer: batches of at most
+    `driver_probe_limit` queries prune statically and score ADC with
+    broadcast tables; larger waves prune dynamically and score per
+    bucket in a cogrouped Arrow kernel. On a replica-built index
+    candidates dedupe on (query, id) before ADC ranking;
+    `max_dist_ratio` drops far probe heads; `probe_scratch_dir`
+    relocates wave side tables off a read-only index."""
     from sptag_spark.operators import probe
-    from sptag_spark.operators.knn import read_index_meta, read_postings
+    from sptag_spark.operators.knn import read_postings
 
-    books = _read_codebooks(spark, path)
-    # rotated (OPQ) index: heads/codes/ADC live in the rotated space, so
-    # the query side rotates once (Arrow matmul) for head selection and
-    # tables; the exact re-rank stays in the ORIGINAL space
-    rot = (_read_rotation(spark, path)
-           if read_index_meta(spark, path).get("rotated") else None)
-    q_probe, q_probe_vec = queries, vec_col
-    if rot is not None:
-        from sptag_spark.operators.pq import opq_rotate_col
-
-        q_probe = opq_rotate_col(queries, rot, vec_col, "__rot")
-        q_probe_vec = "__rot"
     probes = probe.select_probes(
-        spark, path, q_probe,
+        spark, path, queries,
         probe.ivf_kernel(probe.load_centroids(spark, path), nprobe,
                          max_dist_ratio),
-        id_col, q_probe_vec, driver_probe_limit, probe_scratch_dir)
+        id_col, vec_col, driver_probe_limit, probe_scratch_dir)
     return probe.score_probes(
         read_postings(spark, path, id_col), probes, queries, k, id_col,
         vec_col,
-        scorer=AdcScorer(books, rerank, rot, q_probe, q_probe_vec))
+        scorer=AdcScorer(_read_codebooks(spark, path), rerank, queries))

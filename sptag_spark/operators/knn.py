@@ -779,6 +779,20 @@ def _write_tiny_parquet(spark, out_dir: str, table) -> None:
         .coalesce(1).write.mode("overwrite").parquet(out_dir)
 
 
+def _read_tiny_parquet(spark, in_dir: str) -> list:
+    """Rows (as dicts) of a TINY table written by _write_tiny_parquet —
+    the reader twin: a driver-side pyarrow read on local paths (zero
+    Spark jobs, where spark.read.parquet().collect() costs a
+    schema-inference job plus a collect job), the Spark reader
+    otherwise. A missing table raises FileNotFoundError (local) or
+    AnalysisException."""
+    if _is_local_fs_path(in_dir):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(in_dir).to_pylist()
+    return [r.asDict() for r in spark.read.parquet(in_dir).collect()]
+
+
 def _write_index_meta(spark, path: str, **kv) -> None:
     """One-row parquet of index-level build parameters (replica_count,
     ...) — the moral of the reference's persisted ini config
@@ -803,8 +817,8 @@ def read_index_meta(spark, path: str) -> dict:
     from pyspark.errors.exceptions.captured import AnalysisException
 
     try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
-    except AnalysisException:
+        rows = _read_tiny_parquet(spark, f"{path}/meta")
+    except (AnalysisException, FileNotFoundError):
         return {}
     return json.loads(rows[0]["meta"]) if rows else {}
 
@@ -969,17 +983,9 @@ def _footer_bucket_counts(postings_path: str, buckets=None):
 
 
 def _read_sizes_table(spark, sizes_path: str) -> dict:
-    """The persisted sizes table as a dict — pyarrow driver read on
-    local paths (no Spark job), Spark read otherwise."""
-    if _is_local_fs_path(sizes_path):
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(sizes_path)
-        return {int(b): int(n) for b, n in
-                zip(tbl.column("bucket").to_pylist(),
-                    tbl.column("n").to_pylist())}
+    """The persisted sizes table as a dict (_read_tiny_parquet)."""
     return {int(r["bucket"]): int(r["n"])
-            for r in spark.read.parquet(sizes_path).collect()}
+            for r in _read_tiny_parquet(spark, sizes_path)}
 
 
 def read_posting_sizes(spark, path: str) -> dict:
@@ -1121,7 +1127,7 @@ def _require_local_index_path(path: str, op: str) -> None:
     atomic on a local filesystem, NOT on HDFS/S3 (where the right tool is
     a manifest-pointer flip, sources/manifest.py). Fail loudly instead of
     writing postings_compacting and then raising mid-swap."""
-    if "://" in path or path.startswith("file:"):
+    if not _is_local_fs_path(path):
         raise ValueError(
             f"{op} swaps postings with local-filesystem renames; "
             f"index path {path!r} looks like a remote/URI path. Run "
@@ -1247,11 +1253,7 @@ def ivf_compact(
                 F.col("centroid_id").alias("bucket"),
                 quantize(F.col("centroid_vec")).alias("__cq"),
             )
-            # rotated (OPQ) indexes store heads in head space — the cap
-            # distance must be measured there too (same invariant as
-            # split/merge), or the ordering silently mixes spaces
-            post, wv = _index_work_vec(spark, path, post, vec_col)
-            cq = quantize(F.col(wv))
+            cq = quantize(F.col(vec_col))
             d2 = (idot(cq, cq) + idot(F.col("__cq"), F.col("__cq"))
                   - 2 * idot(cq, F.col("__cq")))
             w = Window.partitionBy("bucket").orderBy(
@@ -1262,8 +1264,6 @@ def ivf_compact(
                 .filter(F.col("__pn") <= max_posting_size)
                 .drop("__pn", "__cq")
             )
-            if wv != vec_col:
-                post = post.drop(wv)
         elif cap_order == "hash":
             w = Window.partitionBy("bucket").orderBy(
                 F.xxhash64(F.col(id_col)), F.col(id_col)
@@ -1314,22 +1314,6 @@ def _sweep_orphan_partitions(spark, path: str) -> None:
         _refresh_posting_sizes(spark, post_dir, buckets=removed)
 
 
-def _index_work_vec(spark, path: str, df: DataFrame, vec_col: str):
-    """(df', work_col) for head-set maintenance: rotated (OPQ) indexes
-    keep their HEADS in the rotated space while postings carry the
-    original embedding, so split/merge must cluster and assign in head
-    space — append a rotated column through the stored R
-    (ivfpq._read_rotation) and work on that. Identity for flat/plain-PQ
-    indexes."""
-    if read_index_meta(spark, path).get("rotated"):
-        from sptag_spark.operators.ivfpq import _read_rotation
-        from sptag_spark.operators.pq import opq_rotate_col
-
-        return (opq_rotate_col(df, _read_rotation(spark, path),
-                               vec_col, "__hs"), "__hs")
-    return df, vec_col
-
-
 def ivf_split(
     spark,
     path: str,
@@ -1363,12 +1347,7 @@ def ivf_split(
     the centroid table until the swap, hence invisible to probes), the
     centroid swap is rename-rename-delete with entry recovery, and a
     crash before the old partition's deletion leaves an orphan that the
-    entry-time sweep removes.
-
-    On a rotated (OPQ) index the 2-means, head selection, and the stored
-    head vectors all live in the HEAD space (vec @ R) — the centroid
-    table must stay single-space or probes would rank rotated queries
-    against unrotated heads."""
+    entry-time sweep removes."""
     import shutil
 
     import numpy as np
@@ -1400,11 +1379,8 @@ def ivf_split(
         cents = spark.read.parquet(f"{path}/centroids")
         max_label = cents.agg(F.max("centroid_id")).collect()[0][0]
 
-        # rotated (OPQ) indexes: cluster + pick heads in HEAD space (the
-        # centroid table lives there); rows keep the original embedding
-        sub0, wv = _index_work_vec(
-            spark, path, post.filter(F.col("bucket").isin(over)), vec_col)
-        sub = sub0.withColumn("__q", quantize(F.col(wv)))
+        sub0 = post.filter(F.col("bucket").isin(over))
+        sub = sub0.withColumn("__q", quantize(F.col(vec_col)))
         out_schema = StructType(
             [f for f in sub0.schema.fields]
             + [StructField("__side", IntegerType()),
@@ -1454,13 +1430,11 @@ def ivf_split(
 
         assigned = sub.groupBy("bucket").applyInPandas(
             split_bucket, schema=out_schema).cache()
-        # fresh labels, deterministic: (old bucket ASC, side ASC); head
-        # vectors are collected from the HEAD-space column so the
-        # centroid table stays in one space
+        # fresh labels, deterministic: (old bucket ASC, side ASC)
         label_rows = sorted(
-            (r["bucket"], r["__side"], r[id_col], r[wv])
+            (r["bucket"], r["__side"], r[id_col], r[vec_col])
             for r in assigned.filter(F.col("__is_head") == 1)
-            .select("bucket", "__side", id_col, wv).collect()
+            .select("bucket", "__side", id_col, vec_col).collect()
         )
         labels = {(b, s): max_label + 1 + i
                   for i, (b, s, _, _) in enumerate(label_rows)}
@@ -1526,10 +1500,9 @@ def ivf_merge(
     head with fewer than `min_posting_size` LIVE rows (tombstones
     excluded — a delete-heavy bucket is exactly the merge trigger) is
     retired: its rows re-assign top-1 against the surviving heads (the
-    build's Arrow argmin kernel; rotated (OPQ) indexes assign in head
-    space), PQ codes ride along unchanged (rotation and codebooks are
-    pinned), and the head leaves the centroid table so probes never
-    select it again. At least one head always survives: if every
+    build's Arrow argmin kernel), PQ codes ride along unchanged (the
+    codebooks are pinned), and the head leaves the centroid table so
+    probes never select it again. At least one head always survives: if every
     posting is under the limit, the largest (live count DESC, bucket
     ASC tiebreak) is kept.
 
@@ -1573,10 +1546,7 @@ def ivf_merge(
     keep = live.filter(~F.col("bucket").isin(under)).withColumn(
         "bucket", F.col("bucket").cast(bucket_type))
     moved = live.filter(F.col("bucket").isin(under)).drop("bucket")
-    work, wv = _index_work_vec(spark, path, moved, vec_col)
-    reassigned = assign_buckets(work, surv_cents, id_col, wv)
-    if wv != vec_col:
-        reassigned = reassigned.drop(wv)
+    reassigned = assign_buckets(moved, surv_cents, id_col, vec_col)
     if "replica_rank" in live.columns:
         # copies of one vector from several retiring heads can target
         # the same survivor, and the vector may already live there:
@@ -1616,9 +1586,8 @@ def ivf_reassign(
     split bucket's rows between its two sub-heads — its documented
     scope note); a reassign afterwards erases that note: the index
     becomes EXACTLY a pinned-heads rebuild of its live rows (replica
-    fan-out re-derived from the meta, assignment in head space on
-    rotated indexes, PQ codes riding along untouched — codes depend on
-    the pinned codebooks, not the bucket).
+    fan-out re-derived from the meta, PQ codes riding along untouched —
+    codes depend on the pinned codebooks, not the bucket).
 
     Where the reference reassigns incrementally (its postings are
     in-place NVMe pages, so locality is the whole game), the parquet
@@ -1642,12 +1611,8 @@ def ivf_reassign(
     # re-derive the full (possibly replicated) fan-out from scratch
     base = live.drop("bucket", "replica_rank") \
         .dropDuplicates([id_col])
-    work, wv = _index_work_vec(spark, path, base, vec_col)
-    reassigned = assign_buckets(work, cents, id_col, wv,
-                                replica_count=rep)
-    if wv != vec_col:
-        reassigned = reassigned.drop(wv)
-    reassigned = reassigned.withColumn(
+    reassigned = assign_buckets(base, cents, id_col, vec_col,
+                                replica_count=rep).withColumn(
         "bucket", F.col("bucket").cast(bucket_type)).persist()
     try:
         new_pairs = reassigned.select(id_col, "bucket")

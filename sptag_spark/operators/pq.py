@@ -1,26 +1,21 @@
-"""Product quantization (PQ): one encoder, integer ADC search and the
-OPQ trainer.
+"""Product quantization (PQ): one encoder and integer ADC search.
 
 The reference trains per-subspace k-means(256) codebooks and scores with
-asymmetric distance (ADC) lookup tables (PQQuantizer.h:23-208, training
-src/Quantizer/main.cpp:116-175, ADC tables PQQuantizer.h:111-130). Spark
-restatement:
+asymmetric distance (ADC) lookup tables (PQQuantizer.h:23-208, ADC
+tables PQQuantizer.h:111-130). Spark restatement:
 
-- train  = opq_train: numpy k-means per subspace on a deterministic
-  hash-ordered sample collected to the driver (opq_iters=0 is plain PQ),
-  or pq_codebooks_md5: the k md5-smallest rows, quantized, as integer
-  codebooks;
+- codebooks = pq_codebooks_md5: the k md5-smallest rows, quantized, as
+  integer codebooks. The reference's trained tiers (k-means PQ and the
+  OPQ rotation, OPQQuantizer.h:1-210) are not carried: no job or
+  contract query built them;
 - encode = _encode_codes, the one numpy encoder: per-subspace argmin of
-  the squared L2 against each codebook, first-min tiebreak. The OPQ
-  trainer, the ADC scan below and the IVF-PQ build (operators/ivfpq.py)
-  all call it;
+  the squared L2 against each codebook, first-min tiebreak. The ADC scan
+  below and the IVF-PQ build (operators/ivfpq.py) both call it;
 - ADC    = pq_adc_topk_int: per query, the m x k table of
   ||q_slice - codeword||^2 is built once on the driver, and each Arrow
   batch encodes its rows and sums table gathers (the LUT-probe
   structure of the reference's m_DistanceTables). All int64, so the
-  DuckDB oracle reproduces it bit-exactly;
-- reconstruct = pq_reconstruct, the codeword gather (OPQ's Procrustes
-  step and the quantization-error tests).
+  DuckDB oracle reproduces it bit-exactly.
 
 Approximate by construction: tests gate recall vs an exact ranking
 (reference TruthSet.h:242-285 harness shape).
@@ -46,20 +41,6 @@ def _encode_codes(X: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
         codes[:, s] = d.argmin(axis=1)
     return codes
 
-
-def pq_reconstruct(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
-    """Driver-side decode of a (n, m) code matrix -> (n, dim) vectors."""
-    n, m = codes.shape
-    return np.concatenate(
-        [codebooks[s][codes[:, s]] for s in range(m)], axis=1
-    )
-
-
-# ---------------------------------------------------------------------------
-# Integer PQ/ADC on deterministic sample codebooks — the oracle-checkable
-# quantizer-APPLY path (training quality lives in opq_train; this
-# isolates encode + ADC scoring so DuckDB can replicate them bit-exactly)
-# ---------------------------------------------------------------------------
 
 def pq_codebooks_md5(
     df: DataFrame,
@@ -139,111 +120,3 @@ def pq_adc_topk_int(
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
         .limit(k)
     )
-
-
-# ---------------------------------------------------------------------------
-# OPQ: learned rotation before PQ (the reference's quality tier)
-# ---------------------------------------------------------------------------
-
-def _np_kmeans(X: np.ndarray, k: int, iters: int = 20) -> np.ndarray:
-    """Deterministic driver-side Lloyd (init = first k sample rows, which
-    arrive hash-ordered from the deterministic sample)."""
-    C = X[:k].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        a = d2.argmin(1)
-        for j in range(k):
-            pts = X[a == j]
-            if len(pts):
-                C[j] = pts.mean(0)
-    return C
-
-
-def opq_train(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 2048,
-    opq_iters: int = 10,
-    kmeans_iters: int = 10,
-) -> tuple[np.ndarray, np.ndarray]:
-    """OPQ-NP training (reference OPQQuantizer.h:1-210, trainer
-    Tools/OPQ/OPQ_gpu_train_infer.py, Training.h:62-150): alternate
-    (fit PQ codebooks on rotated sample) with (orthogonal Procrustes
-    update R = UVᵀ from SVD(XᵀY)) on a deterministic hash-ordered sample
-    collected to the driver — the rotation is dim×dim (tiny); the corpus
-    never leaves executors. opq_iters=0 degrades to plain PQ (R = I)
-    with the same trainer, which is the controlled baseline tests use.
-
-    Returns (R, codebooks) with R (dim, dim) and codebooks (m, k, dim/m);
-    ivf_pq_build(rotation='opq') encodes and scores with them.
-    """
-    rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
-        .limit(sample_size)
-        .collect()
-    )
-    X = np.array([[float(x) for x in r[vec_col]] for r in rows])
-    dim = X.shape[1]
-    assert dim % m == 0, "dim must divide into m subspaces"
-    dsub = dim // m
-    R = np.eye(dim)
-    for _ in range(opq_iters):
-        Xr = X @ R
-        books = [
-            _np_kmeans(Xr[:, s * dsub:(s + 1) * dsub], k, kmeans_iters)
-            for s in range(m)
-        ]
-        B = np.stack(books)
-        Y = pq_reconstruct(_encode_codes(Xr, B), B)
-        U, _, Vt = np.linalg.svd(X.T @ Y)
-        R = U @ Vt
-    Xr = X @ R
-    books = [
-        _np_kmeans(Xr[:, s * dsub:(s + 1) * dsub], k, kmeans_iters)
-        for s in range(m)
-    ]
-    return R, np.stack(books)
-
-
-def opq_rotate_col(
-    df: DataFrame,
-    R: np.ndarray,
-    vec_col: str = "embedding",
-    out_col: str = "__rot",
-) -> DataFrame:
-    """Append `out_col` = vec @ R (float64) PRESERVING every other
-    column — the composition shape ivfpq uses: assignment/encode read
-    the rotated column while the postings keep the original embedding
-    (orthogonal R preserves distances, so the exact re-rank stays in the
-    original space). One dim×dim matmul per Arrow batch, zero shuffle."""
-    import pyarrow as pa
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, StructField, StructType,
-    )
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(out_col, ArrayType(DoubleType()))]
-    )
-    names = [f.name for f in out_schema.fields]
-
-    def run(batches):
-        for batch in batches:
-            X = list_to_matrix(batch.column(vec_col), np.float64)
-            n = len(X)
-            rot = X @ R if n else np.zeros((0, R.shape[1]))
-            dim = rot.shape[1]
-            arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * dim, dim, dtype=np.int32)),
-                pa.array(rot.reshape(-1), pa.float64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(nm) for nm in names[:-1]] + [arr],
-                names=names,
-            )
-
-    return df.mapInArrow(run, schema=out_schema)

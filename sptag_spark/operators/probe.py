@@ -178,11 +178,7 @@ def select_probes(spark, path: str, queries: DataFrame,
       partition pruning of the postings scan. Default waves therefore
       need write access to the index path; pass `probe_scratch_dir` to
       wave-probe a read-only shared index. ivf_compact and
-      knn.cleanup_probe_tables remove the side tables.
-
-    `vec_col` may be a derived column (the OPQ-rotated query): the
-    collect executes its kernel, so the driver sees exactly the values
-    the executors would."""
+      knn.cleanup_probe_tables remove the side tables."""
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("__e"))
     schema = _probe_schema(queries.schema[id_col].dataType, kernel)

@@ -276,18 +276,6 @@ def test_top_ngrams_oracle(spark, docs, ddb):
     assert_df_equal(got, oracle)
 
 
-def test_top_ngrams_per_group(spark, docs):
-    from sptag_spark.operators.corpus import top_ngrams
-
-    out = top_ngrams(docs, n=2, k=5, per_group="source").toPandas()
-    assert (out.groupby("source")["rank"].max() <= 5).all()
-    assert (out.groupby("source")["rank"].min() == 1).all()
-    # within a group, rank order follows df_docs desc
-    for _, g in out.groupby("source"):
-        g = g.sort_values("rank")
-        assert (g["df_docs"].diff().dropna() <= 0).all()
-
-
 # ---------------------------------------------------------------------------
 # empty-input robustness
 # ---------------------------------------------------------------------------
@@ -380,5 +368,5 @@ def test_top_ngrams_drops_null_text_docs(spark):
     out = top_ngrams(df, n=3, k=10).collect()
     assert all(r["ngram"] is not None for r in out)
     assert [r["ngram"] for r in out] == ["a b c"]
-    per = top_ngrams(df, n=3, k=10, per_group=None)
+    per = top_ngrams(df, n=3, k=10)
     assert per.filter("ngram IS NULL").count() == 0

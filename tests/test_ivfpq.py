@@ -122,65 +122,6 @@ def test_ivf_pq_join_mode_equals_driver_mode(spark, emb, index):
     assert a == b and len(a) == 80
 
 
-def test_opq_rotation_composes_into_ivfpq(spark, tmp_path):
-    """Q10 composed (VERDICT r3 #5): ivf_pq_build(rotation='opq')
-    stores the learned rotation beside the index; heads/codes/ADC live
-    in rotated space while the exact re-rank stays in the original
-    space. On the anisotropic fixture the OPQ tier must not lose to the
-    identity-rotation tier with the same trainer budget, and the float
-    training must be deterministic per host (no oracle — documented in
-    COVERAGE.md)."""
-    from test_pq import _anisotropic_fixture
-
-    df, _ = _anisotropic_fixture(spark)
-    df = df.cache()
-    q = df.filter("vec_id < 8")
-    exact = brute_force_topk(df, q, k=10)
-    rec = {}
-    for rot in ("pq", "opq"):
-        p = str(tmp_path / rot)
-        ivf_pq_build(df, n_centroids=8, path=p, m=4, k_codes=16,
-                     rotation=rot, opq_sample_size=384)
-        rec[rot] = recall_at_k(
-            ivf_pq_probe(spark, p, q, k=10, nprobe=4, rerank=48), exact)
-    assert rec["opq"] >= rec["pq"], rec
-    assert rec["opq"] >= 0.5, rec
-    # per-host determinism: a second build probes bit-identically
-    p2 = str(tmp_path / "opq2")
-    ivf_pq_build(df, n_centroids=8, path=p2, m=4, k_codes=16,
-                 rotation="opq", opq_sample_size=384)
-    a = sorted(map(tuple, ivf_pq_probe(
-        spark, str(tmp_path / "opq"), q, k=5, nprobe=4).collect()))
-    b = sorted(map(tuple, ivf_pq_probe(spark, p2, q, k=5,
-                                       nprobe=4).collect()))
-    assert a == b
-    df.unpersist()
-
-
-def test_opq_ivfpq_append_rotates_new_vectors(spark, emb, tmp_path):
-    """The incremental path must rotate appended vectors with the
-    STORED R before assign+encode: an appended vector probed by its own
-    (re-identified) embedding at nprobe=1 lands in the same head and
-    surfaces as the top hit with cosine ~1 — impossible if the append
-    skipped the rotation."""
-    from pyspark.sql import functions as F
-
-    from sptag_spark.operators.ivfpq import ivf_pq_append
-
-    path = str(tmp_path / "idx")
-    ivf_pq_build(emb.filter("vec_id < 400"), 16, path, m=4, k_codes=16,
-                 rotation="opq", opq_sample_size=400)
-    ivf_pq_append(spark, path, emb.filter("vec_id >= 400"))
-    twins = emb.filter("vec_id >= 400 AND vec_id < 408").select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
-    got = ivf_pq_probe(spark, path, twins, k=1, nprobe=1, rerank=16)
-    rows = {r["query_id"]: (r["vec_id"], r["cosine"])
-            for r in got.collect()}
-    assert len(rows) == 8
-    for qid, (vid, cos) in rows.items():
-        assert vid == qid - 10_000 and cos > 0.999, rows
-
-
 def test_ivf_pq_incremental_lifecycle_matches_rebuild(spark, emb,
                                                       tmp_path):
     """Append/delete/compact on the COMPOSED index: new vectors are

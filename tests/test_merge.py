@@ -5,27 +5,17 @@ SURVIVING postings. Vectors are never dropped, the head set shrinks, and
 for a single-assignment index the merged index probes IDENTICALLY to a
 from-scratch build pinned on the surviving heads (a kept row's argmax
 head survived, so dropping losers can't change its argmax; a moved row's
-rebuild argmax among survivors IS the merge reassignment).
-
-Also gates the rotated-(OPQ)-index head-space invariant for BOTH
-split and merge: the centroid table must stay in head space (vec @ R) —
-registering original-space rows as heads would silently degrade probe
-head selection."""
+rebuild argmax among survivors IS the merge reassignment)."""
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
-from sptag_spark.operators.ivfpq import (
-    _read_rotation,
-    ivf_pq_build,
-    ivf_pq_probe,
-)
+from sptag_spark.operators.ivfpq import ivf_pq_build, ivf_pq_probe
 from sptag_spark.operators.knn import (
     brute_force_topk,
     ivf_build,
@@ -156,76 +146,14 @@ def test_merge_is_deterministic(spark, emb, tmp_path):
     assert rows(pa) == rows(pb)
 
 
-def _head_space_ok(spark, path, emb):
-    """Every centroid vector must be (some posting row's embedding) @ R
-    — i.e. the head set lives in the rotated head space."""
-    R = _read_rotation(spark, path)
-    X = np.array([r["embedding"] for r in emb.collect()],
-                 dtype=np.float64) @ R
-    rotated = {tuple(np.round(v, 6)) for v in X}
-    cents = [np.array(r["centroid_vec"], dtype=np.float64) for r in
-             spark.read.parquet(f"{path}/centroids").collect()]
-    return all(tuple(np.round(c, 6)) in rotated for c in cents)
-
-
-def test_split_rotated_index_heads_stay_in_head_space(spark, emb,
-                                                      tmp_path):
+def test_merge_ivfpq_keeps_rows_and_adc_recall(spark, emb, tmp_path):
+    """Merging a composed index: codebooks are pinned (rows move with
+    their codes), no row is dropped, and the ADC probe keeps working
+    with sane recall."""
     path = str(tmp_path / "idx")
-    ivf_pq_build(emb, 4, path, m=4, k_codes=16, rotation="opq")
-    assert _head_space_ok(spark, path, emb)      # build invariant
-    assert ivf_split(spark, path, max_posting_size=60) > 0
-    assert _head_space_ok(spark, path, emb)      # split preserves it
-    q = emb.filter("vec_id < 8")
-    res = ivf_pq_probe(spark, path, q, k=5, nprobe=8, rerank=64)
-    assert res.count() == 40
-
-
-def test_compact_cap_rotated_orders_in_head_space(spark, emb, tmp_path):
-    """The distance-ordered posting cap on a rotated (OPQ) index must
-    measure distance-to-head in HEAD space (vec @ R) — the centroid
-    lives there; mixing spaces silently mis-orders the eviction."""
-    from sptag_spark.operators.knn import ivf_compact, quantize
-
-    path = str(tmp_path / "idx")
-    ivf_pq_build(emb, 4, path, m=4, k_codes=16, rotation="opq")
-    R = _read_rotation(spark, path)
-    post = spark.read.parquet(f"{path}/postings") \
-        .select("vec_id", "bucket", "embedding").collect()
-    cents = {r["centroid_id"]: np.array(r["centroid_vec"])
-             for r in spark.read.parquet(f"{path}/centroids").collect()}
-    cap = 40
-
-    def q(v):  # the JVM quantize: round(x * 1000) as int64
-        return np.round(np.asarray(v, dtype=np.float64) * 1000.0
-                        ).astype(np.int64)
-
-    expect = {}
-    by_bucket = {}
-    for r in post:
-        by_bucket.setdefault(r["bucket"], []).append(r)
-    for b, rows in by_bucket.items():
-        cq = q(cents[b])
-        scored = sorted(
-            (int(((q(np.array(r["embedding"]) @ R) - cq) ** 2).sum()),
-             r["vec_id"]) for r in rows)
-        expect[b] = {v for _, v in scored[:cap]}
-    ivf_compact(spark, path, max_posting_size=cap)
-    got = {}
-    for r in spark.read.parquet(f"{path}/postings") \
-            .select("vec_id", "bucket").collect():
-        got.setdefault(r["bucket"], set()).add(r["vec_id"])
-    assert got == {b: v for b, v in expect.items()}
-
-
-def test_merge_rotated_ivfpq_assigns_in_head_space(spark, emb, tmp_path):
-    """Merging a rotated composed index: codes and rotation are pinned
-    (rows move untouched), reassignment happens in head space, and the
-    ADC probe keeps working with sane recall."""
-    path = str(tmp_path / "idx")
-    ivf_pq_build(emb, 16, path, m=4, k_codes=16, rotation="opq")
+    ivf_pq_build(emb, 16, path, m=4, k_codes=16)
     n = emb.count()
     assert ivf_merge(spark, path, min_posting_size=25) > 0
-    assert _head_space_ok(spark, path, emb)
     post = spark.read.parquet(f"{path}/postings")
     assert post.count() == n
     q = emb.filter("vec_id < 8")
@@ -292,13 +220,13 @@ def test_reassign_replicated_rederives_fanout(spark, emb, tmp_path):
 
 
 def test_reassign_folds_tombstones_and_pins_codes(spark, emb, tmp_path):
-    """Rotated composed index: codes depend on the pinned codebooks, not
+    """Composed index: codes depend on the pinned codebooks, not
     the bucket — a moved row keeps its codes bit-identically; deleted
     rows fold out and the log clears."""
     from sptag_spark.operators.knn import ivf_reassign
 
     path = str(tmp_path / "idx")
-    ivf_pq_build(emb, 4, path, m=4, k_codes=16, rotation="opq")
+    ivf_pq_build(emb, 4, path, m=4, k_codes=16)
     assert ivf_split(spark, path, max_posting_size=60) > 0
     before = {r["vec_id"]: list(r["codes"]) for r in
               spark.read.parquet(f"{path}/postings")
